@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import MAX_ROWS_PER_TASK, materialize, unpersist_materialized
+from .materialize import MAX_ROWS_PER_TASK, materialize, session_memo, unpersist_materialized
 
 WORD_SPLIT = " +"
 
@@ -872,25 +872,13 @@ def connected_components(
     )
 
 
-# Session-scoped memo for the registered near-dup CLUSTER pipeline
-# (r17, the graph-tier _EDGE_PLAN_CACHE pattern applied to the dedup
-# tier): FOUR registered queries (q56/q105/q153/q158) derive from the
-# IDENTICAL (candidate-pair set, cluster-label) frames — same docs
-# scan, same 12-seed v2 MinHash, same 6x2 banding, same star-contraction
-# fixpoint — and each paid the full ~25-30 s sf10 build per query in a
-# sweep. Key = (applicationId, analyzed-plan semanticHash of the docs
-# input, id_col, hash-family geometry); a hit is served only while BOTH
-# backing checkpoint RDDs are still in the context's persistent map
-# (registry.release() spares live memo rids, and a checkpointed frame
-# is UNRECOMPUTABLE once its blocks drop, so a stale hit must rebuild).
-_CLUSTER_PLAN_CACHE: dict[tuple, tuple[DataFrame, DataFrame, int, int]] = {}
-
-
 def cluster_labels_plan(
     docs: DataFrame, id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs, labels) for the registered near-dup cluster pipeline,
-    materialized ONCE PER SESSION.
+    materialized ONCE PER SESSION (a spared session memo, see
+    ARCHITECTURE.md "Session memos") because four registered queries
+    (q56/q105/q153/q158) derive from the identical frames.
 
     pairs  — distinct LSH candidate (doc_a, doc_b) under the registered
              operating point (minhash_bands over non-distinct shingles),
@@ -904,35 +892,19 @@ def cluster_labels_plan(
     Every frame is recomputed from the parquet inputs on the first call
     of each Spark application — the memo only amortizes WITHIN one
     session (the sweep/gate shape), never across runs."""
-    spark = docs.sparkSession
-    try:
-        key = (
-            spark.sparkContext.applicationId,
-            docs._jdf.queryExecution().analyzed().semanticHash(),
-            id_col,
-            LSH_NUM_HASHES,
-            LSH_ROWS_PER_BAND,
-        )
-    except Exception:  # noqa: BLE001 — unhashable input: skip the memo
-        key = None
-    if key is not None:
-        # evict entries from stopped applications wholesale (the r16
-        # ADVICE leak class: the liveness probe below only clears the
-        # entry it hits)
-        app_id = key[0]
-        for k in [k for k in _CLUSTER_PLAN_CACHE if k[0] != app_id]:
-            del _CLUSTER_PLAN_CACHE[k]
-    if key is not None and key in _CLUSTER_PLAN_CACHE:
-        pairs, labels, rid_p, rid_l = _CLUSTER_PLAN_CACHE[key]
-        alive = False
-        try:
-            pm = spark.sparkContext._jsc.getPersistentRDDs()
-            alive = pm.containsKey(rid_p) and pm.containsKey(rid_l)
-        except Exception:  # noqa: BLE001
-            alive = False
-        if alive:
-            return pairs, labels
-        del _CLUSTER_PLAN_CACHE[key]
+    key = (
+        "cluster_labels",
+        docs._jdf.queryExecution().analyzed().semanticHash(),
+        id_col,
+        LSH_NUM_HASHES,
+        LSH_ROWS_PER_BAND,
+    )
+    return session_memo(
+        docs.sparkSession, key, lambda: _cluster_labels(docs, id_col)
+    )
+
+
+def _cluster_labels(docs: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]:
     sh = exploded_shingles(docs, id_col=id_col, distinct=False)
     pairs = materialize(
         lsh_candidate_pairs(minhash_bands(sh, id_col=id_col), id_col=id_col),
@@ -948,12 +920,4 @@ def cluster_labels_plan(
     )
     # one ~|corpus|-row DISK_ONLY write; memo hits then read label
     # blocks directly instead of re-joining the final star edge set
-    labels = materialize(labels, id_col, widen=False)
-    if key is not None:
-        try:
-            rid_p = pairs._jdf.queryExecution().analyzed().rdd().id()
-            rid_l = labels._jdf.queryExecution().analyzed().rdd().id()
-            _CLUSTER_PLAN_CACHE[key] = (pairs, labels, rid_p, rid_l)
-        except Exception:  # noqa: BLE001 — non-LogicalRDD plan: no memo
-            pass
-    return pairs, labels
+    return pairs, materialize(labels, id_col, widen=False)

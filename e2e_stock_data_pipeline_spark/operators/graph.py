@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import materialize, unpersist_materialized
+from .materialize import materialize, session_memo, unpersist_materialized
 
 # Integer PageRank constants shared with plans/queries_ext8.pagerank_plan
 # (ranks in 1e-6 units; 0.85 damping as integer *85 // 100).
@@ -79,12 +79,14 @@ def pagerank(
     # silently wraps) the moment an id leaves int range — at that scale
     # drop the two casts, the recursion is width-agnostic. Ranks stay
     # bigint throughout; ids round-trip int<->bigint exactly, so results
-    # are bit-identical (pinned by TestGraphPagerank).
+    # are bit-identical (pinned by TestGraphPagerank). Each column is
+    # judged by its own type: an int src says nothing about dst.
     out_type = edges.schema[src].dataType.simpleString()
 
-    def _as_int(c: str) -> Column:
+    def _as_int(c: str, source: str) -> Column:
         col = F.col(c)
-        if out_type in ("int", "smallint", "tinyint"):
+        narrow = ("int", "smallint", "tinyint")
+        if edges.schema[source].dataType.simpleString() in narrow:
             return col.alias(c)  # already narrow: no guard needed
         return (
             F.when(
@@ -104,7 +106,7 @@ def pagerank(
 
     adj = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .select(_as_int("u"), _as_int("v"))
+        .select(_as_int("u", src), _as_int("v", dst))
         .groupBy("u")
         .agg(F.collect_set("v").alias("_nb")),
         "u",
@@ -263,25 +265,13 @@ _TRI_KB = 10**12  # orientation key = degree * _TRI_KB + node_id (int64-safe)
 _TRI_P6 = 1_000_000  # parts-per-million fixed point
 
 
-# Session-scoped memo for copurchase_edges_plan's materialized frame
-# (VERDICT r15 item 4's "build the edge set once per session"): FIVE
-# registered graph queries (q170/q177/q187/q193/q194) derive from the
-# IDENTICAL min-support edge set, each paying the ~25 s sf10 build.
-# Key = (applicationId, analyzed-plan semanticHash of the input,
-# min_support); a hit is only served while its backing checkpoint RDD
-# is still in the context's persistent map — registry.release() (the
-# sweep/gate between-queries sweep) unpersists all checkpoint blocks,
-# and a checkpointed frame is UNRECOMPUTABLE once its blocks drop, so
-# a stale hit must rebuild rather than hand out a dead frame.
-_EDGE_PLAN_CACHE: dict[tuple, tuple[DataFrame, int]] = {}
-
-
 def copurchase_edges_plan(li: DataFrame, min_support: int = 2) -> DataFrame:
     """(l_orderkey, l_partkey) basket rows -> undirected co-purchase
     edge list (pa < pb, pairs sharing >= min_support baskets),
-    materialized ONCE PER SESSION (localCheckpoint + validated memo)
-    because every consumer reads it from several branches and five
-    registered queries share the identical frame.
+    materialized ONCE PER SESSION (a spared session memo, see
+    ARCHITECTURE.md "Session memos") because every consumer reads it
+    from several branches and five registered queries
+    (q170/q177/q187/q193/q194) share the identical frame.
 
     Pair generation via per-order part arrays: ONE shuffle of the fact
     table builds each order's sorted distinct part list (order-line
@@ -290,33 +280,17 @@ def copurchase_edges_plan(li: DataFrame, min_support: int = 2) -> DataFrame:
     shuffles the fact table three times (distinct, both join sides).
     sort_array makes pa < pb by construction; array_distinct subsumes
     the (orderkey, partkey) distinct."""
-    spark = li.sparkSession
-    try:
-        key = (
-            spark.sparkContext.applicationId,
-            li._jdf.queryExecution().analyzed().semanticHash(),
-            min_support,
-        )
-    except Exception:  # noqa: BLE001 — unhashable input: skip the memo
-        key = None
-    if key is not None:
-        # Evict entries from stopped applications wholesale: the liveness
-        # probe below only clears the entry it hits, so a long process
-        # cycling sessions would otherwise accumulate dead DataFrame
-        # wrappers forever (r16 ADVICE).
-        app_id = key[0]
-        for k in [k for k in _EDGE_PLAN_CACHE if k[0] != app_id]:
-            del _EDGE_PLAN_CACHE[k]
-    if key is not None and key in _EDGE_PLAN_CACHE:
-        df, rid = _EDGE_PLAN_CACHE[key]
-        alive = False
-        try:
-            alive = spark.sparkContext._jsc.getPersistentRDDs().containsKey(rid)
-        except Exception:  # noqa: BLE001
-            alive = False
-        if alive:
-            return df
-        del _EDGE_PLAN_CACHE[key]
+    key = (
+        "copurchase_edges",
+        li._jdf.queryExecution().analyzed().semanticHash(),
+        min_support,
+    )
+    return session_memo(
+        li.sparkSession, key, lambda: _copurchase_edges(li, min_support)
+    )
+
+
+def _copurchase_edges(li: DataFrame, min_support: int) -> DataFrame:
     baskets = li.groupBy("l_orderkey").agg(
         F.array_distinct(F.sort_array(F.collect_list("l_partkey"))).alias("ps")
     )
@@ -340,19 +314,12 @@ def copurchase_edges_plan(li: DataFrame, min_support: int = 2) -> DataFrame:
             )
         ).alias("pr")
     ).select("pr.pa", "pr.pb")
-    out = materialize(
+    return materialize(
         pairs.groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= min_support)
         .select("pa", "pb")
     )
-    if key is not None:
-        try:
-            rid = out._jdf.queryExecution().analyzed().rdd().id()
-            _EDGE_PLAN_CACHE[key] = (out, rid)
-        except Exception:  # noqa: BLE001 — non-LogicalRDD plan: no memo
-            pass
-    return out
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:

@@ -34,9 +34,17 @@ array growth steps, then Java heap space in the localCheckpoint job).
 Pass ``cols`` when downstream rounds join the frame on specific keys:
 the widening repartition then hash-partitions on those columns so the
 co-location the caller set up survives.
+
+:func:`session_memo` is the engine's one store for values reused within
+a Spark application: prepared query plans, table frames and the
+materialized graph/dedup frames several queries share. Its policy is in
+ARCHITECTURE.md, "Session memos".
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from typing import Any
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -90,3 +98,93 @@ def unpersist_materialized(df: DataFrame) -> bool:
         return True
     except Exception:  # noqa: BLE001 — non-checkpoint plan or dead session
         return False
+
+
+# (applicationId, *key) -> (value, backing RDD ids, spared by release)
+_MEMO: dict[tuple, tuple[Any, tuple[int, ...], bool]] = {}
+
+
+def session_memo(
+    spark,
+    key: tuple,
+    build: Callable[[], Any],
+    *,
+    spare: bool = True,
+    pure: bool = False,
+) -> Any:
+    """``build()``'s value, memoized under ``(applicationId, *key)``.
+
+    Every call first evicts other applications' entries. The frames of
+    the value (a DataFrame or a tuple of them) that are persisted
+    checkpoints back the entry: a hit is served only while all of them
+    are still persisted, otherwise it is rebuilt, because a checkpointed
+    frame cannot recompute once its blocks drop. :func:`release_memos`
+    drops entries made with ``spare=False``. ``pure=True`` stores only a
+    build that launched no Spark job, so an eager build is never
+    replaced by a read of its own result."""
+    try:
+        sc = spark.sparkContext
+        app = sc.applicationId
+    except Exception:  # noqa: BLE001 — no live context: just build
+        return build()
+    _evict_other_apps(app)
+    full = (app, *key)
+    hit = _MEMO.get(full)
+    if hit is not None:
+        if not hit[1] or _all_persisted(sc, hit[1]):
+            return hit[0]
+        del _MEMO[full]
+    before = _last_job_id(sc) if pure else None
+    value = build()
+    if not pure or _last_job_id(sc) == before:
+        _MEMO[full] = (value, _backing_rdd_ids(sc, value), spare)
+    return value
+
+
+def drop_memos(match: Callable[[tuple], bool]) -> None:
+    """Drop every entry whose key (without the application id) matches."""
+    for k in [k for k in _MEMO if match(k[1:])]:
+        del _MEMO[k]
+
+
+def release_memos(spark) -> tuple[int, set[int]]:
+    """Drop other applications' entries, dead ones and every non-spared
+    one. Returns (non-spared entries dropped, RDD ids the spared entries
+    left still need)."""
+    sc = spark.sparkContext
+    _evict_other_apps(sc.applicationId)
+    n_dropped = 0
+    for k, (_value, ids, spare) in list(_MEMO.items()):
+        if not spare:
+            n_dropped += 1
+            del _MEMO[k]
+        elif ids and not _all_persisted(sc, ids):
+            del _MEMO[k]
+    return n_dropped, {rid for _value, ids, _spare in _MEMO.values() for rid in ids}
+
+
+def _evict_other_apps(app: str) -> None:
+    for k in [k for k in _MEMO if k[0] != app]:
+        del _MEMO[k]
+
+
+def _all_persisted(sc, ids) -> bool:
+    live = sc._jsc.getPersistentRDDs()
+    return all(live.containsKey(rid) for rid in ids)
+
+
+def _last_job_id(sc) -> int:
+    # ids grow monotonically, so the max still moves once the tracker
+    # starts forgetting old jobs (a count of retained ids would not)
+    return max(sc.statusTracker().getJobIdsForGroup(None) or [], default=-1)
+
+
+def _backing_rdd_ids(sc, value) -> tuple[int, ...]:
+    ids = []
+    for df in value if isinstance(value, tuple) else (value,):
+        try:
+            ids.append(df._jdf.queryExecution().analyzed().rdd().id())
+        except Exception:  # noqa: BLE001 — not a LogicalRDD: nothing backs it
+            pass
+    live = sc._jsc.getPersistentRDDs() if ids else None
+    return tuple(rid for rid in ids if live.containsKey(rid))

@@ -460,7 +460,13 @@ def _arrow_assign_cells(
                 continue
             idx = b.schema.get_field_index("_q")
             qcol = b.column(idx)
-            flat = qcol.flatten().to_numpy(zero_copy_only=False)
+            values = qcol.flatten()
+            if values.null_count:
+                # to_numpy would turn a NULL into NaN, then a garbage int64
+                raise ValueError(
+                    f"ivf arrow assign: {values.null_count} NULL _q elements"
+                )
+            flat = values.to_numpy(zero_copy_only=False)
             if flat.shape[0] != n * dim:
                 raise ValueError(
                     f"ivf arrow assign: ragged _q batch ({flat.shape[0]}"
@@ -747,6 +753,14 @@ def _ivf_rerank_arrow(
     # seeds: the ncells smallest-id candidates, c = 0..m-1 in id order
     # (the lazy path's row_number() - 1 over the same TakeOrdered scan)
     seed_rows = cn.orderBy("cand_id").limit(ncells_eff).collect()
+    if not seed_rows:
+        # no candidates: nothing to index, so no query has a neighbour
+        q_type = qn.schema["query_id"].dataType.simpleString()
+        return spark.createDataFrame(
+            [],
+            f"query_id {q_type}, cand_id {id_type}, cell int,"
+            " exact_d2 bigint, rnk int",
+        )
     cells = np.arange(len(seed_rows), dtype=np.int32)
     cents = np.asarray([r["_q"] for r in seed_rows], dtype=np.int64)
 

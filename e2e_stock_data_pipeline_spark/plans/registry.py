@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.materialize import release_memos, session_memo
+
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 REGISTRY: dict[str, "QuerySpec"] = {}
@@ -40,25 +42,6 @@ class QuerySpec:
     # correctness anchors): the registered scale-safe query that replaces
     # them on the production path. Enforced by tests/test_plans.py.
     scale_twin: str | None = None
-
-
-# Prepared-plan cache: registry builders are PURE (they construct a
-# DataFrame — an immutable logical-plan description — from the session
-# and the table paths; none write state). Re-invoking the same builder
-# for the same (session, sf_dir) re-runs ~100 py4j round trips plus full
-# analysis for a plan that cannot differ, which at bench scale is a
-# fixed ~0.1-0.2 s per pass charged to every query. Memoizing the built
-# DataFrame is the DataFrame-API analog of a SQL engine's prepared-
-# statement cache. Keyed by applicationId so a new session never sees a
-# plan bound to a stopped one; dropped by invalidate_plan_cache()
-# whenever the table layer rewrites files in place.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def invalidate_plan_cache() -> None:
-    """Drop every memoized query plan (called alongside the table-layer
-    cache invalidation after in-place parquet rewrites)."""
-    _PLAN_CACHE.clear()
 
 
 def release(spark: SparkSession) -> dict:
@@ -97,45 +80,16 @@ def release(spark: SparkSession) -> dict:
     "RDD ... not found" failure can be matched to the release that
     dropped it.
 
-    SESSION MEMOS ARE SPARED (r17, VERDICT r16 item 4): RDD ids that a
-    live session memo still references (graph._EDGE_PLAN_CACHE's
-    co-purchase edge frame, shared by five registered graph queries,
-    and dedup._CLUSTER_PLAN_CACHE's near-dup pair/label frames, shared
-    by four) are skipped, because (a) dropping them forces every graph query in
-    a sweep to pay the ~40 s sf10 edge rebuild the memo exists to
-    amortize (118 s in-sweep vs 59 s steady for q144 in r16), and (b)
-    the blocks are DISK_ONLY localCheckpoints — sparing them holds
-    scratch disk, not executor heap, so the memory-pressure purpose of
-    release is untouched. Memos for a DIFFERENT application id are not
-    spared (they are dead wrappers; the memo itself evicts them).
+    Session memos (ARCHITECTURE.md, "Session memos"): every prepared
+    plan is dropped; the spared entries (table frames and the graph and
+    dedup checkpoint memos) stay, and the RDDs backing them are not
+    unpersisted.
     """
     import gc
     import logging
 
-    n_plans = len(_PLAN_CACHE)
-    _PLAN_CACHE.clear()
+    n_plans, spared = release_memos(spark)
     spark.catalog.clearCache()
-    spared: set[int] = set()
-    try:
-        from ..operators import dedup as _dedup
-        from ..operators import graph as _graph
-
-        app_id = spark.sparkContext.applicationId
-        spared = {
-            rid
-            for key, (_df, rid) in _graph._EDGE_PLAN_CACHE.items()
-            if key[0] == app_id
-        }
-        # the dedup-tier cluster memo (r17): same contract, two backing
-        # rids per entry (candidate pairs + cluster labels)
-        spared |= {
-            rid
-            for key, (_p, _l, rid_p, rid_l) in _dedup._CLUSTER_PLAN_CACHE.items()
-            if key[0] == app_id
-            for rid in (rid_p, rid_l)
-        }
-    except Exception:  # noqa: BLE001 — no live context / import cycle
-        spared = set()
     jsc = spark.sparkContext._jsc.sc()
     jmap = jsc.getPersistentRDDs()
     n_rdds = 0
@@ -166,28 +120,16 @@ def release(spark: SparkSession) -> dict:
 
 
 def _memoized(name: str, fn: SparkQuery) -> SparkQuery:
+    # Prepared-plan memo: a builder that launched no Spark job is pure,
+    # so a rebuild for the same (application, sf_dir) cannot differ.
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        try:
-            key = (spark.sparkContext.applicationId, sf_dir, name)
-            tracker = spark.sparkContext.statusTracker()
-        except Exception:  # session without a live context: just build
-            return fn(spark, sf_dir)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
-            # Cache ONLY builds that ran zero Spark jobs. Iterative
-            # builders (CC/pagerank/coverage/two-pass global rank)
-            # execute localCheckpoint/collect jobs at build time; a
-            # memoized rebuild would return their already-materialized
-            # result and silently skip the real work — correct, but it
-            # turns every warm re-build (and every bench timing) into a
-            # cache read. Detecting impurity at run time keeps the
-            # prepared-plan cache honest with no hand-kept allowlist.
-            before = len(tracker.getJobIdsForGroup(None) or [])
-            df = fn(spark, sf_dir)
-            after = len(tracker.getJobIdsForGroup(None) or [])
-            if after == before:
-                _PLAN_CACHE[key] = df
-        return df
+        return session_memo(
+            spark,
+            ("plan", sf_dir, name),
+            lambda: fn(spark, sf_dir),
+            spare=False,
+            pure=True,
+        )
 
     wrapper.__name__ = fn.__name__
     wrapper.__doc__ = fn.__doc__

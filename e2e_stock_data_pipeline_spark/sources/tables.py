@@ -20,6 +20,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
+from e2e_stock_data_pipeline_spark.operators.materialize import drop_memos, session_memo
 from e2e_stock_data_pipeline_spark.session import DEFAULT_CPUS
 
 TABLE_NAMES = (
@@ -231,12 +232,7 @@ def load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = raw_readable_path(sf_dir, name)
-    key = (spark.sparkContext.applicationId, path)
-    df = _DF_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _DF_CACHE[key] = df
-    return df
+    return session_memo(spark, ("table", path), lambda: spark.read.parquet(path))
 
 
 def spark_readable_path(sf_dir: str, name: str) -> str:
@@ -310,58 +306,51 @@ def spark_readable_path(sf_dir: str, name: str) -> str:
     return dst
 
 
-# Analyzed-DataFrame memo: repeated loads of the same table in the same
-# session (75 registry queries in one driver run) skip re-listing files and
-# re-reading parquet footers. Keyed by applicationId so a restarted session
-# never sees a stale DataFrame. No persist()/cache() — that would swap
-# parquet scans for InMemoryTableScan and hide pushdown from the plans the
-# engine asserts on.
-_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def invalidate_cache(path: str | None = None) -> None:
-    """Drop memoized DataFrames whose file index may be stale.
+    """Drop memoized table frames whose file index may be stale, and
+    every prepared plan (plans reference the frames).
 
     Must be called after any in-place rewrite of a parquet dir that may
     have been loaded in this session (maintenance does this itself);
-    with no argument the whole memo is cleared.
+    with no argument every table frame is dropped.
     """
-    # memoized query plans reference these DataFrames: drop them whenever
-    # any table memo is dropped (import here — plans imports sources)
-    from ..plans.registry import invalidate_plan_cache
-
-    invalidate_plan_cache()
     if path is None:
-        _DF_CACHE.clear()
         _ROWS_PROBE_CACHE.clear()
-        return
-    norm = os.path.normpath(path)
-    _ROWS_PROBE_CACHE.pop(norm, None)
-    for key in [k for k in _DF_CACHE if os.path.normpath(k[1]) == norm]:
-        del _DF_CACHE[key]
+    else:
+        path = os.path.normpath(path)
+        _ROWS_PROBE_CACHE.pop(path, None)
+    drop_memos(
+        lambda key: key[0] == "plan"
+        or (key[0] == "table" and path in (None, os.path.normpath(key[1])))
+    )
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = spark_readable_path(sf_dir, name)
-    key = (spark.sparkContext.applicationId, path)
-    df = _DF_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        if _is_hive_partitioned(path):
-            # A partitioned layout carries DERIVED partition columns in
-            # its directory names (dt= from ts, ship-month from
-            # l_shipdate). Project back to the leaf-file data schema so
-            # every query sees the exact same table regardless of
-            # layout. Partition pruning is unaffected for queries on
-            # real data columns: each leaf file covers one partition
-            # value, so pushed predicates skip whole files via footer
-            # min/max stats (measured: see tests/test_partitioned_layout.py).
-            data_cols = pq.read_schema(_leaf_parquet(path)).names
-            if list(df.columns) != list(data_cols):
-                df = df.select(*data_cols)
-        _DF_CACHE[key] = df
+    return session_memo(spark, ("table", path), lambda: _read(spark, path))
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    # Table frames are session memos (ARCHITECTURE.md "Session memos"):
+    # repeated loads skip re-listing files and re-reading footers. No
+    # persist()/cache(): that would swap parquet scans for
+    # InMemoryTableScan and hide pushdown from the plans the engine
+    # asserts on.
+    df = spark.read.parquet(path)
+    if _is_hive_partitioned(path):
+        # A partitioned layout carries DERIVED partition columns in
+        # its directory names (dt= from ts, ship-month from
+        # l_shipdate). Project back to the leaf-file data schema so
+        # every query sees the exact same table regardless of
+        # layout. Partition pruning is unaffected for queries on
+        # real data columns: each leaf file covers one partition
+        # value, so pushed predicates skip whole files via footer
+        # min/max stats (measured: see tests/test_partitioned_layout.py).
+        data_cols = pq.read_schema(_leaf_parquet(path)).names
+        if list(df.columns) != list(data_cols):
+            df = df.select(*data_cols)
     return df
 
 

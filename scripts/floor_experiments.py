@@ -80,7 +80,7 @@ def q01_variants(spark, sf_dir):
     out["current"] = timed(reg["q01_pricing_summary"].spark(spark, sf_dir))
     for mb in ("33554432", "268435456"):
         spark.conf.set("spark.sql.files.maxPartitionBytes", mb)
-        tables.invalidate_cache(None) if hasattr(tables, "invalidate_cache") else None
+        tables.invalidate_cache(None)
         out[f"maxPartitionBytes={int(mb)//1024//1024}M"] = timed(
             reg["q01_pricing_summary"].spark(spark, sf_dir)
         )

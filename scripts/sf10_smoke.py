@@ -287,9 +287,6 @@ def main(argv: list[str]) -> int:
                 spark.stop()
             except Exception:  # noqa: BLE001
                 pass
-            from e2e_stock_data_pipeline_spark.sources import tables as _tables
-
-            _tables._DF_CACHE.clear()  # cached frames belong to the dead context
             spark = fresh_session()
         emit(rec)
 

@@ -5,8 +5,11 @@ them between queries and leave the session fully usable."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import functions as F
 
+from e2e_stock_data_pipeline_spark.operators import materialize as memo
 from e2e_stock_data_pipeline_spark.plans import registry
 from e2e_stock_data_pipeline_spark.plans.registry import load_all_query_modules
 
@@ -17,15 +20,22 @@ def _n_persistent(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
+def _memos(kind: str) -> list[tuple]:
+    """Keys of the session-memo entries of one kind."""
+    return [k for k in memo._MEMO if k[1] == kind]
+
+
+def _drop(*kinds: str) -> None:
+    memo.drop_memos(lambda key: key[0] in kinds)
+
+
 def test_release_reclaims_iterative_residue(spark, sf_dir):
-    from e2e_stock_data_pipeline_spark.operators import dedup, graph
     from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
 
     # no spared memos in this scenario (earlier tests in the session may
-    # have populated either session memo — both must be emptied or
+    # have populated either checkpoint memo — both must be emptied or
     # release() correctly spares their backing rids)
-    graph._EDGE_PLAN_CACHE.clear()
-    dedup._CLUSTER_PLAN_CACHE.clear()
+    _drop("copurchase_edges", "cluster_labels")
     registry.release(spark)
     nodes = spark.createDataFrame([(i,) for i in range(40)], ["doc_id"])
     edges = spark.createDataFrame(
@@ -49,7 +59,7 @@ def test_release_spares_live_session_memo(spark, sf_dir):
     from e2e_stock_data_pipeline_spark.operators import graph
     from e2e_stock_data_pipeline_spark.operators.materialize import materialize
 
-    graph._EDGE_PLAN_CACHE.clear()
+    _drop("copurchase_edges")
     registry.release(spark)
     li = spark.createDataFrame(
         [(o, p) for o in range(30) for p in (o % 5, (o + 1) % 5, (o + 2) % 5)],
@@ -57,7 +67,7 @@ def test_release_spares_live_session_memo(spark, sf_dir):
     )
     edges = graph.copurchase_edges_plan(li, min_support=2)
     n_edges = edges.count()
-    assert n_edges > 0 and len(graph._EDGE_PLAN_CACHE) == 1
+    assert n_edges > 0 and len(_memos("copurchase_edges")) == 1
     # unrelated checkpoint residue that release MUST still reclaim
     residue = materialize(spark.range(100).selectExpr("id", "id * 2 AS v"))
     assert residue.count() == 100
@@ -68,7 +78,7 @@ def test_release_spares_live_session_memo(spark, sf_dir):
     again = graph.copurchase_edges_plan(li, min_support=2)
     assert again is edges, "live memo must be reused after release"
     assert again.count() == n_edges
-    graph._EDGE_PLAN_CACHE.clear()
+    _drop("copurchase_edges")
     registry.release(spark)
 
 
@@ -89,6 +99,38 @@ def test_release_is_idempotent(spark):
     assert b["rdds_unpersisted"] == 0
     assert a["plans_dropped"] >= 0
 
+
+def test_release_drops_plans_and_keeps_table_frames(spark, sf_dir):
+    """Prepared plans are not spared by release; table frames are (they
+    hold no blocks, and rebuilding them re-lists files)."""
+    from e2e_stock_data_pipeline_spark.sources import tables
+
+    region = tables.load(spark, sf_dir, "region")
+    REGISTRY["q01_pricing_summary"].spark(spark, sf_dir)
+    assert _memos("plan")
+    stats = registry.release(spark)
+    assert stats["plans_dropped"] >= 1 and not _memos("plan")
+    assert tables.load(spark, sf_dir, "region") is region
+
+
+def test_new_application_evicts_every_memo_of_the_old_one(spark, sf_dir):
+    """A process that cycles sessions (one application per nightly pass)
+    must not keep the stopped application's plans and table frames: the
+    first memo access from the new application evicts them all."""
+    from e2e_stock_data_pipeline_spark.sources import tables
+
+    stopped = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app-stopped")
+    )
+    plan_key = ("plan", sf_dir, "q01_pricing_summary")
+    memo.session_memo(stopped, plan_key, object, spare=False)
+    memo.session_memo(stopped, ("table", tables.path_for(sf_dir, "region")), object)
+    assert {k[0] for k in memo._MEMO} >= {"app-stopped"}
+    tables.load(spark, sf_dir, "region")
+    live = spark.sparkContext.applicationId
+    assert memo._MEMO and all(k[0] == live for k in memo._MEMO)
+
+
 def test_release_spares_live_cluster_memo(spark, sf_dir):
     """r17: the dedup-tier cluster memo (q56/q105/q153/q158) follows the
     graph memo's contract — BOTH backing frames (pairs, labels) survive
@@ -97,7 +139,7 @@ def test_release_spares_live_cluster_memo(spark, sf_dir):
     unrecomputable frame."""
     from e2e_stock_data_pipeline_spark.operators import dedup
 
-    dedup._CLUSTER_PLAN_CACHE.clear()
+    _drop("cluster_labels")
     registry.release(spark)
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta") for i in range(6)]
@@ -106,7 +148,7 @@ def test_release_spares_live_cluster_memo(spark, sf_dir):
     )
     pairs, labels = dedup.cluster_labels_plan(docs)
     n_pairs, n_labels = pairs.count(), labels.count()
-    assert n_labels == 12 and len(dedup._CLUSTER_PLAN_CACHE) == 1
+    assert n_labels == 12 and len(_memos("cluster_labels")) == 1
     # the 6 identical docs share one cluster rooted at the min doc_id
     assert labels.filter("cluster_id = 0").count() == 6
     stats = registry.release(spark)
@@ -120,9 +162,9 @@ def test_release_spares_live_cluster_memo(spark, sf_dir):
     it = jmap.values().iterator()
     while it.hasNext():
         it.next().unpersist(False)
-    assert len(dedup._CLUSTER_PLAN_CACHE) == 1  # stale entry still cached
+    assert len(_memos("cluster_labels")) == 1  # stale entry still cached
     p3, l3 = dedup.cluster_labels_plan(docs)
     assert p3 is not pairs and l3 is not labels
     assert l3.count() == n_labels and p3.count() == n_pairs
-    dedup._CLUSTER_PLAN_CACHE.clear()
+    _drop("cluster_labels")
     registry.release(spark)

@@ -983,6 +983,38 @@ class TestIvfSeeded:
         got = pairs(3)
         assert len(got & truth) >= int(0.8 * len(truth))
 
+    def test_ivf_arrow_empty_candidates_return_empty_frame(self, spark, sf_dir):
+        """No candidates: the arrow path returns the empty result frame
+        with the lazy path's columns instead of dying on a 0-row
+        centroid matrix."""
+        from e2e_stock_data_pipeline_spark.operators.similarity import (
+            ivf_rerank_topk_seeded,
+        )
+        from e2e_stock_data_pipeline_spark.sources import tables
+
+        e = tables.load(spark, sf_dir, "embeddings")
+        q, c = e.filter(F.col("vec_id") < 5), e.filter(F.col("vec_id") < 0)
+        for kwargs in ({"n_cells": 8, "n_probe": 4}, {"density_scaled": True}):
+            arrow = ivf_rerank_topk_seeded(q, c, arrow_assign=True, **kwargs)
+            lazy = ivf_rerank_topk_seeded(q, c, arrow_assign=False, **kwargs)
+            assert arrow.collect() == [] == lazy.collect()
+            assert arrow.columns == lazy.columns
+
+    def test_ivf_arrow_assign_rejects_null_elements(self, spark):
+        """A NULL inside a quantized vector must fail loudly, not become
+        NaN and then an arbitrary int64 that picks a wrong cell."""
+        from e2e_stock_data_pipeline_spark.operators.similarity import (
+            _arrow_assign_cells,
+        )
+
+        cn = spark.createDataFrame(
+            [(1, [1, 2]), (2, [3, None])], "cand_id int, _q array<bigint>"
+        )
+        cents = np.asarray([[0, 0], [4, 4]], dtype=np.int64)
+        assigned = _arrow_assign_cells(cn, [0, 1], cents, 2, "int")
+        with pytest.raises(Exception, match="NULL _q elements"):
+            assigned.collect()
+
 
 class TestIncrementalNearDup:
     def test_equals_cross_boundary_slice_of_full_pipeline(self, spark, sf_dir):
@@ -2015,6 +2047,17 @@ class TestGraphPagerank:
         edges = spark.createDataFrame([(1, 2), (2, 1)], ["u", "v"])
         with pytest.raises(ValueError):
             pagerank(edges, n_iters=0)
+
+    def test_bigint_dst_is_guarded_when_src_is_int(self, spark):
+        """The int narrowing guard is decided per column: an int src
+        must not waive the overflow check on a bigint dst."""
+        from e2e_stock_data_pipeline_spark.operators.graph import pagerank
+
+        edges = spark.createDataFrame(
+            [(1, 2**31), (2, 1)], "u int, v bigint"
+        )
+        with pytest.raises(Exception, match="overflows int narrowing"):
+            pagerank(edges, n_iters=1).collect()
 
 
 class TestSaltedGroupTopk:

@@ -381,15 +381,16 @@ class TestMaintenance:
         # ADVICE r2: the sources.tables DataFrame memo keys on path; an
         # in-place maintenance rewrite must evict it or later loads see a
         # stale (deleted) file index.
+        from e2e_stock_data_pipeline_spark.operators import materialize as memo
         from e2e_stock_data_pipeline_spark.pipeline.maintenance import compact
-        from e2e_stock_data_pipeline_spark.sources import tables
 
         path = str(tmp_path / "t")
         spark.range(1000).repartition(8).write.parquet(path)
-        key = (spark.sparkContext.applicationId, path)
-        tables._DF_CACHE[key] = spark.read.parquet(path)
+        memo.session_memo(spark, ("table", path), lambda: spark.read.parquet(path))
+        key = (spark.sparkContext.applicationId, "table", path)
+        assert key in memo._MEMO
         compact(spark, path)
-        assert key not in tables._DF_CACHE  # evicted by the rewrite
+        assert key not in memo._MEMO  # evicted by the rewrite
 
     def test_recover_staged_heals_crash_window(self, spark, tmp_path):
         # ADVICE r12: a crash between rename-aside and promote leaves the
