@@ -62,11 +62,3 @@ def last_n_trading_days(cal: DataFrame, n: int, end: str) -> DataFrame:
         .select("cal_date")
     )
 
-
-def calendar_join(facts: DataFrame, cal: DataFrame, date_col: str) -> DataFrame:
-    """Inner join facts to trading days (drops non-trading dates); the
-    calendar side is broadcast — it is tiny by construction."""
-    return facts.join(
-        F.broadcast(cal.filter(F.col("is_trading")).select(F.col("cal_date"))),
-        facts[date_col] == F.col("cal_date"),
-    ).drop("cal_date")

@@ -9,17 +9,18 @@ the reference's Delta maintenance surface:
   a target count derived from the data size.
 
 When delta-spark is importable these route to real `OPTIMIZE`; the
-parquet fallback rewrites through a staging dir (never reads and
+parquet fallback rewrites through `commit.staged` (never reads and
 overwrites the same path in one job).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from .commit import recover, staged
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 # Row-group size for maintenance rewrites. Spark's writer default is one
@@ -34,45 +35,11 @@ TARGET_FILE_BYTES = 128 * 1024 * 1024
 ROW_GROUP_BYTES = 16 * 1024 * 1024
 
 
-def recover_staged(path: str) -> bool:
-    """Heal the one crash window a staged rewrite leaves: between the
-    rename-aside and the promote, `path` is missing and the data lives at
-    `path._old`. Restore it; returns True if a recovery happened. Called
-    on entry by every maintenance rewrite so the window self-heals on the
-    next run instead of the next run deleting the only surviving copy."""
-    old = path.rstrip("/") + "._old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.replace(old, path)
-        return True
-    return False
-
-
-def _staged_rewrite(df, path: str) -> None:
-    tmp = path.rstrip("/") + "._maint_tmp"
-    df.write.option("parquet.block.size", ROW_GROUP_BYTES).mode(
-        "overwrite"
-    ).parquet(tmp)
-    # Rename the live table aside BEFORE promoting tmp: a crash between
-    # the two renames leaves either the old table at `path`, or — in the
-    # window between the two os.replace calls — ONLY at `path._old`,
-    # which recover_staged() restores on the next maintenance entry.
-    old = path.rstrip("/") + "._old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    elif os.path.exists(old):
-        os.remove(old)
-    had_old = False
-    if os.path.exists(path):
-        os.replace(path, old)
-        had_old = True
-    os.replace(tmp, path)
-    if had_old:
-        shutil.rmtree(old) if os.path.isdir(old) else os.remove(old)
-    # the sources.tables memo keys on path; its cached file index would be
-    # stale (FileNotFound or old rows) after this in-place swap
-    from ..sources.tables import invalidate_cache
-
-    invalidate_cache(path)
+def _rewrite(df, path: str) -> None:
+    with staged(path) as tmp:
+        df.write.option("parquet.block.size", ROW_GROUP_BYTES).mode(
+            "overwrite"
+        ).parquet(tmp)
 
 
 def _dir_bytes(path: str) -> int:
@@ -86,10 +53,10 @@ def _dir_bytes(path: str) -> int:
 
 def compact(spark: SparkSession, path: str, target_file_bytes: int = TARGET_FILE_BYTES) -> int:
     """Rewrite a parquet dir into ceil(size/target) files; returns file count."""
-    recover_staged(path)
+    recover(path)
     n = max(1, -(-_dir_bytes(path) // target_file_bytes))
     df = spark.read.parquet(path)
-    _staged_rewrite(df.repartition(n), path)
+    _rewrite(df.repartition(n), path)
     return n
 
 
@@ -105,12 +72,12 @@ def cluster_rewrite(
     num_files pins the output file count — without it AQE may coalesce a
     small table to one file, which erases the per-file span narrowing
     the rewrite exists to produce (size-based default as in compact)."""
-    recover_staged(path)
+    recover(path)
     df = spark.read.parquet(path)
     cols = [F.col(c) for c in cluster_cols]
     if num_files is None:
         num_files = max(1, -(-_dir_bytes(path) // TARGET_FILE_BYTES))
-    _staged_rewrite(
+    _rewrite(
         df.repartitionByRange(num_files, *cols).sortWithinPartitions(*cols), path
     )
 
@@ -148,7 +115,7 @@ def zorder_rewrite(
     plan. Cast date/timestamp dimensions to epoch numerics first."""
     from pyspark.sql import functions as F
 
-    recover_staged(path)
+    recover(path)
     df = spark.read.parquet(path)
     n_buckets = 1 << min(bits, 12)
     staged = df.withColumn(
@@ -161,7 +128,7 @@ def zorder_rewrite(
     staged = staged.withColumn("_zv", F.expr(expr_terms))
     if num_files is None:
         num_files = max(1, -(-_dir_bytes(path) // TARGET_FILE_BYTES))
-    _staged_rewrite(
+    _rewrite(
         staged.repartitionByRange(num_files, F.col("_zv"))
         .sortWithinPartitions("_zv")
         .drop("_za", "_zb", "_zv"),

@@ -1,4 +1,4 @@
-"""Silver layer: quality gate + keep-latest upsert (reference:
+"""Silver layer: keep-latest upsert (reference:
 docs/databricks_setup.md:146-198 — `MERGE INTO silver USING (dedup
 subquery) ... WHEN MATCHED AND row_num=1 THEN UPDATE SET *`).
 
@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.windows import keep_last
+from .commit import recover, staged
 
 try:  # pragma: no cover - delta not present in this environment
     from delta.tables import DeltaTable  # type: ignore
@@ -26,21 +27,6 @@ try:  # pragma: no cover - delta not present in this environment
 except Exception:  # pragma: no cover
     DeltaTable = None
     HAVE_DELTA = False
-
-
-def apply_quality_gate(
-    df: DataFrame, predicates: list, quarantine_path: str | None = None
-) -> DataFrame:
-    """Split rows by conjunctive quality predicates (P4/P5); violations go
-    to a quarantine sink instead of being silently dropped."""
-    cond = None
-    for p in predicates:
-        cond = p if cond is None else (cond & p)
-    if cond is None:
-        return df
-    if quarantine_path is not None:
-        df.filter(~cond).write.mode("append").parquet(quarantine_path)
-    return df.filter(cond)
 
 
 def merge_upsert(
@@ -98,6 +84,7 @@ def merge_upsert(
         return
     import os
 
+    recover(target_path)
     if os.path.exists(target_path):
         existing = spark.read.parquet(target_path)
     else:  # first run: nothing to merge with (avoids a noisy read probe)
@@ -116,10 +103,5 @@ def merge_upsert(
         )
     # Can't overwrite the path being read: stage to a sibling temp dir,
     # then swap (distributed write, no driver materialization).
-    import shutil
-
-    tmp = target_path.rstrip("/") + "._merge_tmp"
-    result.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(target_path):
-        shutil.rmtree(target_path)
-    os.replace(tmp, target_path)
+    with staged(target_path) as tmp:
+        result.write.mode("overwrite").parquet(tmp)

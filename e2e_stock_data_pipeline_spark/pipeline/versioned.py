@@ -29,6 +29,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .commit import write_atomic
+
 _MANIFEST = "_manifest.json"
 
 
@@ -50,7 +52,9 @@ def write_version(df: DataFrame, root: str, op: str = "write") -> int:
     log = history(root)
     v = (log[-1]["version"] + 1) if log else 0
     dest = os.path.join(root, "_versions", f"v={v}")
-    df.write.mode("errorifexists").parquet(dest)
+    # v is past every listed version, so an existing v=N is the orphan of
+    # a write that crashed before its manifest commit: overwrite it
+    df.write.mode("overwrite").parquet(dest)
     n = df.sparkSession.read.parquet(dest).count()
     log.append(
         {
@@ -60,9 +64,7 @@ def write_version(df: DataFrame, root: str, op: str = "write") -> int:
             "rows": n,
         }
     )
-    os.makedirs(root, exist_ok=True)
-    with open(_manifest_path(root), "w") as f:
-        json.dump(log, f, indent=1)
+    write_atomic(_manifest_path(root), json.dumps(log, indent=1))
     return v
 
 

@@ -5,8 +5,9 @@ happen in batch. The engine adds the streaming-complete surface:
 tumbling / sliding / session windows, expressed with the SAME
 `F.window` / `F.session_window` operators Structured Streaming uses,
 validated here in batch mode against a SQL oracle (the streaming
-execution of these exact plans lives in streaming/windows.py and is
-exercised by the pytest streaming suite).
+execution of the tumbling plan lives in streaming/windows.py and is
+exercised by the pytest streaming suite; sliding and session windows
+are checked in batch only).
 """
 
 from __future__ import annotations

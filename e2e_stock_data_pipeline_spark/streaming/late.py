@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..pipeline.commit import write_atomic
+
 _UNITS = {
     "day": 86400, "days": 86400,
     "hour": 3600, "hours": 3600,
@@ -56,13 +58,6 @@ def _read_high_water(path: str) -> dt.datetime | None:
             return dt.datetime.fromisoformat(json.load(f)["max_event_time"])
     except (OSError, ValueError, KeyError):
         return None
-
-
-def _write_high_water(path: str, value: dt.datetime) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"max_event_time": value.isoformat()}, f)
-    os.replace(tmp, path)
 
 
 def late_audit_plan(batched: DataFrame, delay_us: int) -> DataFrame:
@@ -141,7 +136,7 @@ def route_late_events(
         row = batch_df.agg(F.max(ts).alias("m")).first()  # single-row, driver-sized
         if row and row.m is not None:
             new_max = row.m if prev_max is None else max(prev_max, row.m)
-            _write_high_water(hw_file, new_max)
+            write_atomic(hw_file, json.dumps({"max_event_time": new_max.isoformat()}))
 
     return (
         stream.writeStream.foreachBatch(handle)

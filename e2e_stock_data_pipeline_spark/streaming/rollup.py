@@ -7,16 +7,17 @@ rescanning history.
 Only decomposable aggregates participate (count/sum/min/max — the same
 algebra Spark's own partial aggregation uses); avg derives as sum/count
 at read time. Exactly-once per epoch comes from foreachBatch
-checkpointing + the idempotent staged rewrite.
+checkpointing + the idempotent staged commit (pipeline/commit.py).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..pipeline.commit import recover, staged
 
 DEC = "decimal(18,4)"
 
@@ -28,9 +29,7 @@ def _merge_add(
     epoch marker: the marker is written into the staged directory before the
     swap, so data and epoch advance in the same rename — a crash can never
     leave new data with an old marker (the double-count window) or vice
-    versa. The old table is renamed aside (not rmtree'd) before the swap;
-    ``_recover`` heals the one remaining crash window (old aside, new swap
-    not yet done) by restoring the aside copy on the next call.
+    versa. ``commit.staged`` does the swap.
     """
     agg_cols = [c for c in partial.columns if c not in keys]
     if os.path.exists(target):
@@ -42,28 +41,12 @@ def _merge_add(
         )
     else:
         merged = partial
-    tmp = target.rstrip("/") + "._rollup_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    # Underscore-prefixed files are invisible to Spark's parquet reader, so
-    # the marker can live INSIDE the data directory and travel with it.
-    with open(os.path.join(tmp, "_last_epoch"), "w") as f:
-        f.write(str(epoch_id))
-    aside = target.rstrip("/") + "._rollup_old"
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
-    if os.path.exists(target):
-        os.rename(target, aside)
-    os.replace(tmp, target)
-    if os.path.exists(aside):
-        shutil.rmtree(aside)
-
-
-def _recover(target: str) -> None:
-    """Heal a crash between rename-aside and swap: the aside dir holds the
-    last committed state (data + marker); restore it if target vanished."""
-    aside = target.rstrip("/") + "._rollup_old"
-    if not os.path.exists(target) and os.path.exists(aside):
-        os.rename(aside, target)
+    with staged(target) as tmp:
+        merged.write.mode("overwrite").parquet(tmp)
+        # Underscore-prefixed files are invisible to Spark's parquet reader,
+        # so the marker can live INSIDE the data directory and travel with it.
+        with open(os.path.join(tmp, "_last_epoch"), "w") as f:
+            f.write(str(epoch_id))
 
 
 def hourly_rollup_partial(batch: DataFrame) -> DataFrame:
@@ -99,7 +82,7 @@ def apply_epoch(batch: DataFrame, target: str, epoch_id: int) -> bool:
     (Delta solves this with txnAppId/txnVersion; this is the parquet-sink
     equivalent.) Returns True when applied, False when skipped as replay.
     """
-    _recover(target)
+    recover(target)
     if epoch_id <= _read_last_epoch(target):
         return False
     _merge_add(

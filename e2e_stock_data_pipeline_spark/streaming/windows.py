@@ -1,6 +1,6 @@
 """Streaming event-time window aggregates with watermarks [EXT,
-SURVEY.md §2.10]. The same logical plans as plans/queries_streaming.py
-(tumbling / sliding / session), attached to an unbounded source —
+SURVEY.md §2.10]. The tumbling plan of plans/queries_streaming.py
+(q29) plus OHLC and dedup, attached to an unbounded source —
 correctness of the window semantics is proven by the batch oracle gate;
 these wire in watermarking and state cleanup for the streaming run.
 """
@@ -33,38 +33,6 @@ def tumbling_counts(
             F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
         )
         .select(F.col("w.start").alias("bucket_start"), "event_type", "n", "total_value")
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    size: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    return (
-        _with_event_time(events, ts_col, watermark)
-        .groupBy(F.window(ts_col, size, slide).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-        )
-        .select(F.col("w.start").alias("bucket_start"), "n", "total_value")
-    )
-
-
-def session_counts(
-    events: DataFrame, ts_col: str = "ts", gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    return (
-        _with_event_time(events, ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-        )
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events", "total_value")
     )
 
 

@@ -284,6 +284,45 @@ class TestMergeUpsert:
         with pytest.raises(ValueError, match="_src_pri"):
             merge_upsert(spark, str(tmp_path / "s"), df, ["symbol", "trade_date"], "v")
 
+    def test_crash_before_promote_loses_no_silver_rows(self, spark, tmp_path, monkeypatch):
+        """A crash after the live table is moved out of the way and before
+        the staged one is promoted must not turn the next merge into a
+        first load that silently drops every earlier silver row."""
+        cols = ["symbol", "trade_date", "close", "v"]
+        keys = ["symbol", "trade_date"]
+        path = str(tmp_path / "silver")
+        base = [("A", "d1", 1.0, 1), ("B", "d1", 2.0, 1)]
+        merge_upsert(spark, path, spark.createDataFrame(base, cols), keys, "v")
+        upd = spark.createDataFrame([("A", "d1", 5.0, 2), ("C", "d1", 3.0, 1)], cols)
+
+        crashed = []
+
+        def crash_on_promote(real):
+            def call(src, dst, *args, **kwargs):
+                if not crashed and os.path.normpath(dst) == os.path.normpath(path):
+                    crashed.append(dst)
+                    raise OSError("injected crash before promote")
+                return real(src, dst, *args, **kwargs)
+
+            return call
+
+        monkeypatch.setattr(os, "replace", crash_on_promote(os.replace))
+        monkeypatch.setattr(os, "rename", crash_on_promote(os.rename))
+        with pytest.raises(OSError, match="injected crash"):
+            merge_upsert(spark, path, upd, keys, "v")
+        monkeypatch.undo()
+        assert crashed
+        merge_upsert(spark, path, upd, keys, "v")
+        got = {
+            (r.symbol, r.trade_date): (r.close, r.v)
+            for r in spark.read.parquet(path).collect()
+        }
+        assert got == {
+            ("A", "d1"): (5.0, 2),
+            ("B", "d1"): (2.0, 1),
+            ("C", "d1"): (3.0, 1),
+        }
+
 
 class TestGoldFeatures:
     def test_known_values(self, spark):
@@ -398,10 +437,8 @@ class TestMaintenance:
         # it rather than delete the sole surviving copy.
         import os
 
-        from e2e_stock_data_pipeline_spark.pipeline.maintenance import (
-            compact,
-            recover_staged,
-        )
+        from e2e_stock_data_pipeline_spark.pipeline.commit import recover as recover_staged
+        from e2e_stock_data_pipeline_spark.pipeline.maintenance import compact
 
         path = str(tmp_path / "t")
         spark.range(500).write.parquet(path)
@@ -483,6 +520,40 @@ class TestVersionedTable:
             "C": (3.0, "delete"),
             "D": (4.0, "insert"),
         }  # A unchanged -> absent
+
+    def test_failed_manifest_write_keeps_history(self, spark, tmp_path, monkeypatch):
+        import json
+
+        from e2e_stock_data_pipeline_spark.pipeline.versioned import history, write_version
+
+        root = str(tmp_path / "vt")
+        write_version(spark.createDataFrame([("A", 1.0)], ["k", "x"]), root, "create")
+        df = spark.createDataFrame([("B", 2.0)], ["k", "x"])
+
+        def boom(*args, **kwargs):
+            raise RuntimeError("injected manifest failure")
+
+        monkeypatch.setattr(json, "dump", boom)
+        monkeypatch.setattr(json, "dumps", boom)
+        with pytest.raises(RuntimeError, match="injected manifest failure"):
+            write_version(df, root, "merge")
+        monkeypatch.undo()
+        assert [(e["version"], e["operation"]) for e in history(root)] == [(0, "create")]
+
+    def test_unlisted_version_dir_is_overwritten(self, spark, tmp_path):
+        from e2e_stock_data_pipeline_spark.pipeline.versioned import (
+            read_version,
+            write_version,
+        )
+
+        root = str(tmp_path / "vt")
+        write_version(spark.createDataFrame([("A", 1.0)], ["k", "x"]), root)
+        # the snapshot of a write that crashed before its manifest commit
+        spark.createDataFrame([("Z", 9.0)], ["k", "x"]).write.parquet(
+            os.path.join(root, "_versions", "v=1")
+        )
+        assert write_version(spark.createDataFrame([("B", 2.0)], ["k", "x"]), root) == 1
+        assert {r.k: r.x for r in read_version(spark, root, 1).collect()} == {"B": 2.0}
 
 
 class TestEmptyInputs:
@@ -683,3 +754,22 @@ class TestTableStats:
         df, meta = pruned_scan(spark, path, "k", 10_001, 10_002)
         assert meta["files_read"] == 0 and df.count() == 0
         assert df.columns == ["k", "v"]
+
+
+def test_only_commit_module_renames_or_deletes_tables():
+    """The table-commit protocol lives in pipeline/commit.py alone: no
+    other module under pipeline/ or streaming/ renames or deletes."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "e2e_stock_data_pipeline_spark"
+    pat = re.compile(r"\bos\.(replace|rename)\(|\brmtree\(")
+    offenders = [
+        f"{f.relative_to(pkg)}:{i}"
+        for d in ("pipeline", "streaming")
+        for f in sorted((pkg / d).rglob("*.py"))
+        if f != pkg / "pipeline" / "commit.py"
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if pat.search(line.split("#")[0])
+    ]
+    assert not offenders, offenders

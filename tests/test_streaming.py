@@ -12,6 +12,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from e2e_stock_data_pipeline_spark.pipeline import commit
 from e2e_stock_data_pipeline_spark.sources import tables
 from e2e_stock_data_pipeline_spark.streaming import bronze
 from e2e_stock_data_pipeline_spark.streaming.windows import (
@@ -795,7 +796,7 @@ class TestRollupAtomicity:
         R.apply_epoch(batch, dest, epoch_id=0)
         before = sorted(map(tuple, spark.read.parquet(dest).collect()))
         # simulate a crash between rename-aside and swap
-        os.rename(dest, dest + "._rollup_old")
+        os.rename(dest, dest + commit.ASIDE)
         # next apply_epoch heals first, then refuses the replayed epoch
         assert not R.apply_epoch(batch, dest, epoch_id=0)
         assert sorted(map(tuple, spark.read.parquet(dest).collect())) == before
@@ -808,8 +809,8 @@ class TestRollupAtomicity:
         batch = self._batch(spark, sf_dir)
         R.apply_epoch(batch, dest, epoch_id=0)
         R.apply_epoch(batch, dest, epoch_id=1)
-        assert not os.path.exists(dest + "._rollup_old")
-        assert not os.path.exists(dest + "._rollup_tmp")
+        assert not os.path.exists(dest + commit.ASIDE)
+        assert not os.path.exists(dest + commit.TMP)
         assert R._read_last_epoch(dest) == 1
 
 
