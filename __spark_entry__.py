@@ -65,16 +65,16 @@ _CHANGED_IN_ROUND = {
     # r17 NULL-safe COUNT(DISTINCT) split + left-join re-shape (plan
     # only; same values on NULL-free generators):
     "q37_approx_distinct": 17,
-    # r17 pagerank broadcast re-gate after round 1 (physical only):
-    "q144_pagerank_copurchase": 17,
+    # (r17 pagerank broadcast re-gate: q144, superseded by its r18
+    # entry below)
     # r17 q184 redesign (VERDICT item 1): hoisted parse, single
     # checkpointed token pass, integer rarity ranks downstream —
     # output bijection-identical, sf10 110.8 -> 51.5 s:
     "q184_set_similarity_join": 17,
     # r17 IVF probe ring widened to cells DIV 2 (VERDICT item 2):
     # output CHANGES at every density (more probed cells can only add
-    # true neighbors); oracle mirrors via the shared IVF_PROBE_DIV:
-    "q128_ivf_rerank": 17,
+    # true neighbors); oracle mirrors via the shared IVF_PROBE_DIV
+    # (q128, superseded by its r18 entry below)
     # r17 PQ codebook 16 -> 32 seeds (family recall floor; knob sweep
     # in queries_ext6.py): output changes at every sf, oracle mirrors:
     "q123_pq_rerank": 17,
@@ -140,6 +140,17 @@ _CHANGED_IN_ROUND = {
     "q48_knn_bruteforce": 17,
     "q50_cosine_neardup_pairs": 17,
     "q148_rrf_hybrid_search": 17,
+    # r18 rewrites, none of them in CORRECTNESS_r18: q99's posting-list
+    # pass (now also exact on duplicate doc_id rows); nullability fences
+    # on q124/q127/q129/q134; q128's numpy mapInArrow IVF assignment;
+    # q144's one-Generate symmetric edges with int-narrowed ids.
+    "q99_contamination_check": 18,
+    "q124_late_quarantine_audit": 18,
+    "q127_temperature_mixture": 18,
+    "q128_ivf_rerank": 18,
+    "q129_source_lang_cap": 18,
+    "q134_token_budget_mixture": 18,
+    "q144_pagerank_copurchase": 18,
 }
 
 

@@ -2,19 +2,17 @@
 
 The data-curation primitive behind "pick the k sources/owners whose
 union covers the most items": classic greedy on a submodular objective
-(1 - 1/e optimal). Each round is ONE distributed aggregation over the
-remaining (set, item) pairs plus an anti-join against the covered-item
-set — never a materialized power set, never a driver-side pair scan.
+(1 - 1/e optimal) — never a materialized power set, never a
+driver-side pair scan.
 
-Scale design (100 TB): the pair table is the only data-sized input and
-is scanned once per round with the covered set removed by broadcast
-anti-join (covered grows by at most one set's items per round, bounded
-by k * max-set-size — dimension-sized by construction). The per-round
+Scale design (100 TB): the pair table is scanned once, into one item
+array per set; each round scores that set-dimension frame against a
+one-row broadcast of the covered set (covered grows by at most one
+set's items per round, bounded by k * max-set-size). The per-round
 argmax reduces to one row collected to the driver (same documented
 driver-contact pattern as ranking.py's two-pass global rank: k rows
-total cross the driver for k rounds). Lineage of the covered set is
-truncated per round (eager localCheckpoint — iterative operators run
-build-time jobs by design, like graph.pagerank / dedup CC).
+total cross the driver for k rounds). The covered set is checkpointed
+per round (ARCHITECTURE.md, "Eager rounds").
 
 Reference anchor: the reference has no curation tier; this extends the
 [EXT] training-data operators (SURVEY.md SS2.14).
@@ -25,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .materialize import materialize
+from .materialize import materialize, unpersist_materialized
 
 
 def greedy_max_coverage(
@@ -59,7 +57,7 @@ def greedy_max_coverage(
     # for set cardinalities beyond that, the pre-r17 per-round
     # anti-join form in git history is the fallback.
     spark: SparkSession = pairs.sparkSession
-    p = materialize(
+    p, _ = materialize(
         pairs.select(F.col(set_col).alias("_s"), F.col(item_col).alias("_i"))
         .groupBy("_s")
         .agg(F.collect_set("_i").alias("_items")),
@@ -86,17 +84,22 @@ def greedy_max_coverage(
         s_key, gain = best[0]["_s"], int(best[0]["_n"])
         total += gain
         out_rows.append((round_no, s_key, gain, total))
+        if round_no == k:
+            break  # no later round reads the covered set
         picked_items = (
             p.filter(F.col("_s") == F.lit(s_key))
             .select(F.explode("_items").alias("_c"))
         )
         # bounded by k * max-set-size — plain checkpoint is fine, but
         # the serialized storage level costs nothing here
-        covered = materialize(
+        covered, _ = materialize(
             picked_items
             if covered is None
-            else covered.unionByName(picked_items)
+            else covered.unionByName(picked_items),
+            release=[covered],
         )
+    # no checkpoint supersedes these: the result is driver rows
+    unpersist_materialized(p, covered)
     schema_set_type = [f.dataType for f in p.schema.fields if f.name == "_s"][0]
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 

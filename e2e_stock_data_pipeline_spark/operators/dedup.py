@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import MAX_ROWS_PER_TASK, materialize, session_memo, unpersist_materialized
+from .materialize import MAX_ROWS_PER_TASK, materialize, session_memo
 
 WORD_SPLIT = " +"
 
@@ -612,7 +612,7 @@ def node_gated_broadcast_hint(nodes: DataFrame):
     """Broadcast-hint factory gated on the CC node bound: returns
     ``F.broadcast`` when ``nodes`` has at most ``_BCAST_NODE_LIMIT``
     rows (one driver-sized count — the same probe connected_components
-    runs per round), else the identity, so callers joining a per-node
+    runs once per call), else the identity, so callers joining a per-node
     frame against a pair set fall back to AQE's shuffle choice instead
     of force-broadcasting an unbounded build side. Lives here (not in a
     plan module) because the count is an action by design — the plan
@@ -622,15 +622,10 @@ def node_gated_broadcast_hint(nodes: DataFrame):
     return lambda frame: frame
 
 
-def _edge_signature(e: DataFrame) -> tuple:
-    """Order-independent fingerprint of a deduped edge set: (count,
-    bit_xor(xxhash64(u, v))) — xor is order-independent over a SET and
-    cannot overflow under ANSI mode. One scan of the materialized frame."""
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
+def _edge_hash() -> Column:
+    """The hash half of an edge set's signature (count, hash): xor is
+    order-independent over a SET and cannot overflow under ANSI mode."""
+    return F.expr("bit_xor(xxhash64(u, v))").alias("h")
 
 
 def connected_components(
@@ -667,8 +662,9 @@ def connected_components(
     The edge set is a fixed point of the round map iff it is a union of
     min-rooted stars (the paper's termination theorem), at which point
     the edges ARE the (node -> cluster-min) labels. Convergence is
-    detected by an order-independent signature (count + hash sum) of the
-    materialized edge set — one cheap scan per round, no join.
+    detected by an order-independent signature (count + xor hash) of the
+    edge set, observed on the round's own checkpoint job — no extra
+    scan, no join.
 
     The dedup use: LSH candidate pairs form the edges; each cluster keeps
     one canonical doc. Scale/latency design:
@@ -685,9 +681,9 @@ def connected_components(
       per-node min tables broadcast, making a round broadcast joins +
       ONE shuffle (the output dedup); otherwise shuffle joins, with the
       round's exchange width sized from the live edge count;
-    * the per-round frames are explicitly unpersisted once the next
-      round's set is materialized, so a long session does not accumulate
-      block-manager residue (VERDICT r11 item 3).
+    * each round's checkpoint releases the frames it supersedes, so a
+      long session does not accumulate block-manager residue (VERDICT
+      r11 item 3).
     """
     import os
     import time as _time
@@ -719,7 +715,13 @@ def connected_components(
     # the pair set to other consumers materializes it once at its own
     # level); round 0 then iterates the cheap projection directly — the
     # lazy-plan hazard documented above doesn't apply to block re-reads.
-    e = canon if pre_materialized else materialize(canon, "u", widen=False)
+    # Its signature costs one scan; being a projection, no round releases it.
+    if pre_materialized:
+        e = canon
+        st = e.agg(F.count(F.lit(1)).alias("n"), _edge_hash()).collect()[0]
+    else:
+        e, st = materialize(canon, "u", widen=False, observe=[_edge_hash()])
+    prev_sig = (st["n"], st["h"])
     # Dense near-dup graphs have FAR fewer nodes than edges (sf10: 500k
     # docs, 336M candidate pairs): when the per-node min table fits a
     # broadcast, ship it to the map side so a star round is broadcast
@@ -738,7 +740,6 @@ def connected_components(
             f"[cc] node_bound={n_node_bound} broadcast={use_broadcast}",
             flush=True,
         )
-    prev_sig: tuple | None = _edge_signature(e)
     converged = prev_sig[0] == 0  # empty graph: already a (trivial) fixpoint
     # Size the round's shuffle width from the LIVE edge count: the star
     # joins/aggregates process ~2x the edge set (symmetric view), and at
@@ -781,8 +782,8 @@ def connected_components(
                 # lg feeds BOTH small-star inputs; checkpoint it so the
                 # broadcast build doesn't re-execute the large-star
                 # subtree, and so each half-round is one simple
-                # scan -> broadcast-join -> dedup pipeline
-                lg = materialize(lg, "u")
+                # scan -> broadcast-join -> dedup pipeline (e's last)
+                lg, _ = materialize(lg, "u", release=[e])
             # small-star: grouped by the larger endpoint u over its
             # smaller neighbors, m(u) = min; each smaller neighbor != m
             # and u itself reconnect to m. m < u always, and v > m is
@@ -790,33 +791,28 @@ def connected_components(
             smin = lg.groupBy("u").agg(F.min("v").alias("m"))
             if use_broadcast:
                 smin = F.broadcast(smin)
-            stepped = materialize(
+            e, st = materialize(
                 lg.join(smin, "u")
                 .where(F.col("v") != F.col("m"))
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
                 .unionByName(smin.select("u", F.col("m").alias("v")))
                 .distinct(),
                 "u",
+                observe=[_edge_hash()],
+                release=[lg if use_broadcast else e],
             )
-            sig = _edge_signature(stepped)
-            unpersist_materialized(e)
-            if use_broadcast:
-                unpersist_materialized(lg)
-            e = stepped
+            sig = (st["n"], st["h"])
             if verbose:
                 print(
                     f"[cc] round={_round} width={width} edges={sig[0]} "
                     f"sec={_time.perf_counter() - _t0:.1f}",
                     flush=True,
                 )
-            if sig[0] == 0 or sig == prev_sig:
-                converged = True
-                prev_sig = sig
-                break
+            converged = sig[0] == 0 or sig == prev_sig
             prev_sig = sig
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_width)
-    if prev_sig is None or prev_sig[0] > 0:
+    if prev_sig[0] > 0:
         # The signature is a heuristic trigger; soundness (both ways)
         # comes from this one structural check: E is a union of stars iff
         # every child appears exactly once AND no child is also a parent.
@@ -906,7 +902,7 @@ def cluster_labels_plan(
 
 def _cluster_labels(docs: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]:
     sh = exploded_shingles(docs, id_col=id_col, distinct=False)
-    pairs = materialize(
+    pairs, _ = materialize(
         lsh_candidate_pairs(minhash_bands(sh, id_col=id_col), id_col=id_col),
         "doc_a",
         widen=False,
@@ -920,4 +916,5 @@ def _cluster_labels(docs: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]
     )
     # one ~|corpus|-row DISK_ONLY write; memo hits then read label
     # blocks directly instead of re-joining the final star edge set
-    return pairs, materialize(labels, id_col, widen=False)
+    labels, _ = materialize(labels, id_col, widen=False)
+    return pairs, labels

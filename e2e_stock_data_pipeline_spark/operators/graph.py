@@ -41,13 +41,11 @@ def pagerank(
     Each round: contribution = rank DIV out-degree, shipped along edges,
     reduced per target, damped with integer arithmetic — identical to
     the q144 recursion, so fixed-round results are bit-comparable. The
-    edge list and the degree table are materialized once; per-round
-    lineage is truncated (localCheckpoint; swap for checkpoint() on
-    durable storage at cluster scale).
+    adjacency is materialized once; each round's ranks are materialized
+    (localCheckpoint; swap for checkpoint() on durable storage at
+    cluster scale), releasing the round they supersede.
 
-    ``n_iters`` must be >= 1: with zero rounds the returned frame's only
-    backing blocks would be ``deg``'s — released by the post-loop
-    unpersist below, so any later action would die on missing blocks."""
+    ``n_iters`` must be >= 1: zero rounds would rank nothing."""
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
     # Checkpoint the ADJACENCY form, not the edge list (r16): one
@@ -104,7 +102,7 @@ def pagerank(
             .alias(c)
         )
 
-    adj = materialize(
+    adj, st = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .select(_as_int("u", src), _as_int("v", dst))
         .groupBy("u")
@@ -113,48 +111,40 @@ def pagerank(
     )
     # Per-round join pairs the adjacency against the NODE-sized ranks
     # table. materialize()'s LogicalRDD stats deliberately suppress
-    # auto-broadcast, so gate an explicit hint on the node count (the
-    # count is one cheap scan of checkpointed blocks — the same probe
-    # connected_components runs): under the CC bound each round is
+    # auto-broadcast, so gate an explicit hint on the node count the
+    # checkpoint observed: under the CC bound each round is
     # adjacency-scan -> broadcast hash join -> explode -> ONE shuffle
     # (the per-target reduce); above it, fall back to AQE's choice.
     from .dedup import _BCAST_NODE_LIMIT
 
-    n_nodes = adj.count()
-    bcast_ok = 0 < n_nodes <= _BCAST_NODE_LIMIT
+    bcast_ok = 0 < st["n"] <= _BCAST_NODE_LIMIT
     ranks = adj.select(
         F.col("u").alias("node"), F.lit(PR_SCALE).cast("bigint").alias("rank")
     )
-    prev = None
     for i in range(n_iters):
         bcast = F.broadcast if bcast_ok else (lambda f: f)
         contrib = adj.join(bcast(ranks), adj.u == ranks.node).select(
             F.expr("rank DIV size(_nb)").alias("c"),
             F.explode("_nb").alias("v"),
         )
-        ranks = materialize(
+        # round 0's ranks is a projection of adj, not a checkpoint; the
+        # last round is the adjacency's last consumer
+        ranks, st = materialize(
             contrib.groupBy(F.col("v").alias("node")).agg(
                 (F.lit(PR_BASE) + F.expr("(85 * sum(c)) DIV 100"))
                 .cast("bigint")
                 .alias("rank")
             ),
             "node",
+            release=[ranks if i > 0 else None, adj if i == n_iters - 1 else None],
         )
         if i == 0 and bcast_ok:
             # After round 1 ranks holds the reduce TARGETS (nodes with
             # in-edges), which on a sink-heavy directed graph can exceed
             # the out-node count the gate measured (r16 ADVICE). The
-            # target set is identical every later round, so ONE recount
-            # of the just-checkpointed node-sized frame re-gates all
-            # remaining broadcasts exactly.
-            bcast_ok = ranks.count() <= _BCAST_NODE_LIMIT
-        if prev is not None:
-            unpersist_materialized(prev)  # superseded round's blocks
-        prev = ranks
-    # ranks is checkpointed/self-contained — the data-sized adjacency
-    # blocks are dead once the loop ends (bfs_hops releases sym the
-    # same way)
-    unpersist_materialized(adj)
+            # target set is identical every later round, so round 1's
+            # observed count re-gates all remaining broadcasts exactly.
+            bcast_ok = st["n"] <= _BCAST_NODE_LIMIT
     # undo the int narrowing at the boundary: callers see the input's
     # node id type (the cast is exact — ids proved in-range above)
     return ranks.select(F.col("node").cast(out_type).alias("node"), "rank")
@@ -172,8 +162,12 @@ def bfs_hops(edges: DataFrame, max_hops: int = 4) -> DataFrame:
     growing input and it is lineage-truncated per round
     (localCheckpoint; swap for checkpoint() on durable storage at
     cluster scale), the same bounded-iteration contract as
-    :func:`pagerank` and dedup.connected_components."""
-    sym = materialize(
+    :func:`pagerank` and dedup.connected_components.
+
+    ``max_hops`` must be >= 1: the last round releases the probe table."""
+    if max_hops < 1:
+        raise ValueError(f"max_hops must be >= 1, got {max_hops}")
+    sym, _ = materialize(
         edges.select(F.col("pa").alias("u"), F.col("pb").alias("v"))
         .unionAll(edges.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
         .repartition("u"),
@@ -185,36 +179,27 @@ def bfs_hops(edges: DataFrame, max_hops: int = 4) -> DataFrame:
         .limit(1)
         .select(F.col("x").alias("node"))
     )
-    dist = seed.select(
-        "node", F.lit(0).cast("bigint").alias("hops")
-    ).localCheckpoint(eager=True)  # one seed row — no sizing needed
-    frontier = dist.select("node")
-    prev_nxt = None
+    # one seed row — no sizing needed
+    dist, _ = materialize(
+        seed.select("node", F.lit(0).cast("bigint").alias("hops")), widen=False
+    )
+    frontier = dist
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt, _ = materialize(
             frontier.join(sym, frontier.node == sym.u)
             .select(F.col("v").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .select("node", F.lit(h).cast("bigint").alias("hops"))
+            .select("node", F.lit(h).cast("bigint").alias("hops")),
+            "node",
         )
-        nxt = materialize(nxt, "node")
-        new_dist = materialize(dist.unionAll(nxt), "node")
-        # superseded blocks are dead once the new round is materialized
-        # (localCheckpoint truncates lineage, so release only AFTER every
-        # consumer has run): the old dist, and the previous frontier
-        # which fed this round's joins
-        unpersist_materialized(dist)
-        if prev_nxt is not None:
-            unpersist_materialized(prev_nxt)
-        dist = new_dist
-        prev_nxt = nxt
-        frontier = nxt.select("node")
-    # dist is self-contained (checkpointed); the probe table and the last
-    # frontier are no longer reachable from it
-    unpersist_materialized(sym)
-    if prev_nxt is not None:
-        unpersist_materialized(prev_nxt)
+        # the new dist is the last reader of the old one and of this
+        # round's input frontier; in the last round, of sym and nxt too
+        last = [sym, nxt] if h == max_hops else []
+        dist, _ = materialize(
+            dist.unionAll(nxt), "node", release=[dist, frontier, *last]
+        )
+        frontier = nxt
     return dist
 
 
@@ -230,31 +215,26 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 6) -> DataFrame:
     joins, all keyed on node id; the surviving edge set shrinks
     monotonically and is lineage-truncated per round."""
     spark = edges.sparkSession
-    cur = materialize(edges.select("pa", "pb"), "pa")
 
-    def sizes(r: int, e: DataFrame) -> tuple[int, int, int]:
-        # one driver-scalar row per round — collected EAGERLY so the
-        # superseded round's checkpoint blocks can be released (a lazy
-        # union over all rounds would pin every round's frame until the
-        # caller's final action; found in r12 while adding the per-round
-        # release)
-        nd = node_degrees(e).agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-        ne = e.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
-        row = nd.crossJoin(F.broadcast(ne)).collect()[0]
-        return (r, row["n_nodes"], row["n_edges"])
+    def n_nodes(e: DataFrame) -> int:
+        # collected EAGERLY so the superseded round can be released (a
+        # lazy union of all rounds would pin every round's frame; r12).
+        # A DISTINCT count, which observe cannot take.
+        return node_degrees(e).agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
 
-    out_rows = [sizes(0, cur)]
+    cur, st = materialize(edges.select("pa", "pb"), "pa")
+    out_rows = [(0, n_nodes(cur), st["n"])]
     for r in range(1, rounds + 1):
         keep = node_degrees(cur).filter(F.col("d") >= k).select("x")
-        nxt = (
+        cur, st = materialize(
             cur.join(keep.select(F.col("x").alias("pa")), "pa", "left_semi")
             .join(keep.select(F.col("x").alias("pb")), "pb", "left_semi")
-            .select("pa", "pb")
+            .select("pa", "pb"),
+            "pa",
+            release=[cur],
         )
-        nxt = materialize(nxt, "pa")
-        out_rows.append(sizes(r, nxt))
-        unpersist_materialized(cur)  # superseded round's blocks
-        cur = nxt
+        out_rows.append((r, n_nodes(cur), st["n"]))
+    # no checkpoint supersedes the last round: the result is driver rows
     unpersist_materialized(cur)
     return spark.createDataFrame(
         out_rows, "round_no bigint, n_nodes bigint, n_edges bigint"
@@ -314,12 +294,13 @@ def _copurchase_edges(li: DataFrame, min_support: int) -> DataFrame:
             )
         ).alias("pr")
     ).select("pr.pa", "pr.pb")
-    return materialize(
+    edges, _ = materialize(
         pairs.groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= min_support)
         .select("pa", "pb")
     )
+    return edges
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:

@@ -25,15 +25,18 @@ array growth steps, then Java heap space in the localCheckpoint job).
   serialized in-memory level would pay — this is the local-mode analog
   of the cluster-scale checkpoint-to-durable-storage the operator docs
   prescribe;
-* sized re-widening — after materializing, the (now cheap) row count
-  is checked against a per-task bound and the frame is reshuffled to
-  ``ceil(n / 5M)`` partitions when the inherited width would leave
-  multi-GB partitions for every downstream round (the same
-  rows-per-task rule as operators/asof.asof_shuffle_width).
+* sized re-widening — the checkpoint's row count is checked against a
+  per-task bound and the frame is reshuffled to ``ceil(n / 5M)``
+  partitions when the inherited width would leave multi-GB partitions
+  for every downstream round (the same rows-per-task rule as
+  operators/asof.asof_shuffle_width).
 
 Pass ``cols`` when downstream rounds join the frame on specific keys:
 the widening repartition then hash-partitions on those columns so the
 co-location the caller set up survives.
+
+It is also the eager operators' one round protocol: ARCHITECTURE.md,
+"Eager rounds".
 
 :func:`session_memo` is the engine's one store for values reused within
 a Spark application: prepared query plans, table frames and the
@@ -43,23 +46,36 @@ ARCHITECTURE.md, "Session memos".
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Sequence
 from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 # Same bound as operators/asof.py: a cached/sorted partition beyond this
 # row count risks unspillable pressure; below it, fewer tasks win.
 MAX_ROWS_PER_TASK = 5_000_000
 
 
-def materialize(df: DataFrame, *cols: str, widen: bool = True) -> DataFrame:
+def materialize(
+    df: DataFrame,
+    *cols: str,
+    widen: bool = True,
+    observe: Sequence[Column] = (),
+    release: Iterable[DataFrame | None] = (),
+) -> tuple[DataFrame, dict[str, Any]]:
     """Eagerly materialize ``df`` with serialized spill-safe storage,
     re-widening to ``ceil(rows / MAX_ROWS_PER_TASK)`` partitions (hash
     partitioned on ``cols`` when given) if the inherited partitioning
-    is coarser than the bound. Returns the materialized frame; the
-    interim narrow frame is unpersisted when a re-widen happens.
+    is coarser than the bound. Returns ``(frame, stats)``; the interim
+    narrow frame is unpersisted when a re-widen happens.
+
+    ``stats`` maps ``n`` (the row count) and the alias of each aggregate
+    in ``observe`` (no DISTINCT) to its value, all observed on the
+    checkpoint job itself: no other job runs. ``release`` lists the
+    frames this one supersedes (earlier results; ``None`` is skipped),
+    unpersisted once the checkpoint has run: nothing may read them later.
 
     ``widen=False`` skips the re-widen: correct when every downstream
     consumer re-exchanges the frame anyway (scan-side map partitions
@@ -67,37 +83,35 @@ def materialize(df: DataFrame, *cols: str, widen: bool = True) -> DataFrame:
     apply). For CC's 336M-row sf10 edge set the re-widen was a SECOND
     full checkpoint write plus a full shuffle — ~60 s of pure overhead
     (r12 measurement)."""
-    out = df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    if not widen:
-        return out
-    n = out.count()  # scan of the just-cached blocks — cheap
-    parts = out.rdd.getNumPartitions()
-    need = max(1, -(-n // MAX_ROWS_PER_TASK))
-    if need > parts:
-        wide = out.repartition(need, *cols) if cols else out.repartition(need)
-        wide = wide.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
-        unpersist_materialized(out)
-        return wide
-    return out
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n"), *observe).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY
+    )
+    stats = obs.get
+    unpersist_materialized(*release)
+    need = max(1, -(-stats["n"] // MAX_ROWS_PER_TASK))
+    if widen and need > out.rdd.getNumPartitions():
+        out, _ = materialize(out.repartition(need, *cols), widen=False, release=[out])
+    return out, stats
 
 
-def unpersist_materialized(df: DataFrame) -> bool:
-    """Release the block-manager storage behind a frame returned by
-    :func:`materialize`. ``Dataset.unpersist()`` is NOT enough: it only
-    clears CacheManager entries, and a localCheckpoint's persistence
-    lives on the internal RDD wrapped by the LogicalRDD plan node — so
-    iterative operators that called ``.unpersist()`` per round were
-    silently accumulating every round's blocks (found in r12 while
+def unpersist_materialized(*frames: DataFrame | None) -> None:
+    """Release the block-manager storage behind frames returned by
+    :func:`materialize` (``None`` is skipped): for what no later
+    checkpoint supersedes. ``Dataset.unpersist()`` is NOT enough: it
+    only clears CacheManager entries, and a localCheckpoint's
+    persistence lives on the internal RDD wrapped by the LogicalRDD plan
+    node — so iterative operators that called ``.unpersist()`` per round
+    were silently accumulating every round's blocks (found in r12 while
     wiring the session-lifecycle release). Reaches the RDD through the
-    analyzed plan; returns False (and leaves cleanup to the session-
-    level registry.release sweep) if the plan isn't a LogicalRDD."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        return True
-    except Exception:  # noqa: BLE001 — non-checkpoint plan or dead session
-        return False
+    analyzed plan; a frame whose plan isn't a LogicalRDD (a projection
+    of a checkpoint, say) is left alone, for the session-level
+    registry.release sweep."""
+    for df in (f for f in frames if f is not None):
+        try:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        except Exception:  # noqa: BLE001 — non-checkpoint plan or dead session
+            pass
 
 
 # (applicationId, *key) -> (value, backing RDD ids, spared by release)

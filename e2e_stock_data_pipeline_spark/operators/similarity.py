@@ -20,6 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 QUANT = 10000
 
 
@@ -651,16 +653,15 @@ def ivf_rerank_topk_seeded(
     # Each extra step pays one more corpus x cells assignment pass plus
     # a (cells x dim)-row update agg; the oracle replays the same fixed
     # number of (a_i, cent_i) CTE rounds.
-    cent = seeds
+    cent, held = seeds, None
     for step in range(lloyd_steps):
         if step > 0:
             # truncate the previous step's corpus-sized lineage: the
             # centroid frame itself is only cells x dim values, but
             # un-checkpointed it would re-execute the whole prior
             # assignment pass once per downstream reference
-            from .materialize import materialize
-
-            cent = materialize(cent)
+            cent, _ = materialize(cent, release=[held])
+            held = cent
         comp = assign(cent).join(cn, "cand_id").select(
             "cell", F.posexplode("_q").alias("pos", "val")
         )

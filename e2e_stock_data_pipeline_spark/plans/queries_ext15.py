@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.materialize import materialize, unpersist_materialized
+from ..operators.materialize import materialize
 from ..operators.similarity import QUANT
 from ..sources import tables
 from .registry import query
@@ -280,7 +280,7 @@ def q184_ordered_plan(d: DataFrame) -> DataFrame:
     # re-runs inside the interpreted lambda, which made the fused
     # explode pipeline cost 30-34 s where its parts cost ~9 s. Against
     # checkpointed blocks the inferred filter tests a stored column.
-    wm = materialize(w)
+    wm, _ = materialize(w)
     tok = wm.select("doc_id", F.explode("sset").alias("shingle"))
     df = tok.groupBy("shingle").agg(
         F.count(F.lit(1)).cast("bigint").alias("dfreq")
@@ -292,7 +292,9 @@ def q184_ordered_plan(d: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("r"),
     )
-    ordered = materialize(
+    # both consumers (dfreq agg, rank attach) re-explode the cheap
+    # checkpointed arrays — the sset blocks are dead weight after this
+    ordered, _ = materialize(
         tok.join(F.broadcast(rank), "shingle")
         .groupBy("doc_id")
         .agg(
@@ -300,10 +302,8 @@ def q184_ordered_plan(d: DataFrame) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("l"),
         ),
         "doc_id",
+        release=[wm],
     )
-    # both consumers (dfreq agg, rank attach) re-explode the cheap
-    # checkpointed arrays — the sset blocks are dead weight now
-    unpersist_materialized(wm)
     return ordered
 
 

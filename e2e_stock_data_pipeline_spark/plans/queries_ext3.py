@@ -144,16 +144,18 @@ def q99_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (df-count leg + both join sides), shuffled the exploded frame for
     # the per-doc DISTINCT, again for the df join, and a third time for
     # the tr x ev posting join. Here per-doc dedup happens in-row
-    # (shingle_sets — no distinct shuffle), the doc-frequency cut is a
-    # partial-agg count whose exchange carries (shingle, count) partial
-    # rows only, and surviving shingles' postings group ONCE per shingle
+    # (shingle_sets — no distinct shuffle), the doc-frequency cut is one
+    # distinct-count aggregate whose single exchange carries (shingle,
+    # doc_id) rows only, and surviving shingles' postings group ONCE per shingle
     # into (eval-list, train-list) arrays whose in-row cross expansion
     # emits exactly the rows the posting join emitted. Equivalence:
     # each capped shingle contributes one row per (train, eval) in
     # tr_docs(s) x ev_docs(s) in both forms, so the per-pair counts are
-    # identical; the cap test size(_ev) + size(_tr) <= 50 is the old
-    # df(s) <= 50 because the exploded rows are per-doc distinct.
-    # The count pass runs BEFORE any collect_list, so a hot shingle
+    # identical. The rows are distinct per ROW, not per doc_id, so two
+    # rows with one doc_id would count twice: the cap counts DISTINCT
+    # doc ids and the postings are sets, which keeps the old per-
+    # (doc_id, shingle) semantics (and the oracle's) on such input.
+    # The count pass runs BEFORE any collect_set, so a hot shingle
     # (df > 50) is dropped without ever building its posting array —
     # the unbounded-array-cell hazard the naive one-pass collect form
     # would have (the q187 precondition class).
@@ -164,7 +166,7 @@ def q99_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = D.exploded_shingle_sets(_t(spark, sf_dir, "documents"))
     rare = (
         sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("c"))
+        .agg(F.countDistinct("doc_id").alias("c"))
         .filter(F.col("c") <= 50)
         .select("shingle")
     )
@@ -172,10 +174,10 @@ def q99_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.join(rare.hint("merge"), "shingle")
         .groupBy("shingle")
         .agg(
-            F.collect_list(
+            F.collect_set(
                 F.when(F.col("doc_id") % 97 == 0, F.col("doc_id"))
             ).alias("_ev"),
-            F.collect_list(
+            F.collect_set(
                 F.when(F.col("doc_id") % 97 != 0, F.col("doc_id"))
             ).alias("_tr"),
         )

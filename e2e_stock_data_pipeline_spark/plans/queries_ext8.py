@@ -833,8 +833,8 @@ def pagerank_plan(li: DataFrame, n_iters: int = _PR_ITERS) -> DataFrame:
     "replays bit-for-bit in SQL — the iterative-algorithm oracle pattern "
     "(match the engine's iteration, don't recompute reachability) "
     "applied to a numeric fixpoint. Deterministic top-100. Runs the "
-    "materialized operators/graph.pagerank (edges/deg checkpointed once, "
-    "per-round ranks materialized + superseded blocks released) — "
+    "materialized operators/graph.pagerank (adjacency checkpointed once, "
+    "each round's ranks checkpointed, releasing the round they supersede) — "
     "bit-equal to the lazy pagerank_plan unroll the oracle replays "
     "(pinned by TestGraphPagerank), but each round is its own bounded "
     "job, so late-session execution-memory pressure cannot starve the "

@@ -55,12 +55,12 @@ def main(argv: list[str]) -> int:
 
     spark.sparkContext.setJobDescription("q144: adjacency collect_set")
     t0 = time.perf_counter()
-    adj = materialize(
+    adj, st = materialize(
         edges.select("u", "v").groupBy("u").agg(F.collect_set("v").alias("_nb")),
         "u",
     )
     t_adj = time.perf_counter() - t0
-    n_nodes = adj.count()
+    n_nodes = st["n"]
     print(f"adjacency (materialize) {t_adj:7.2f} s   n_nodes={n_nodes}", flush=True)
 
     spark.sparkContext.setJobDescription("q144: one round (explode+reduce)")

@@ -52,9 +52,9 @@ def main(argv: list[str]) -> int:
     t_ordered = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    cand = materialize(q184_cand_plan(ordered), "doc_a")
+    cand, st = materialize(q184_cand_plan(ordered), "doc_a")
     t_cand = time.perf_counter() - t0
-    n_cand = cand.count()
+    n_cand = st["n"]
 
     t0 = time.perf_counter()
     noop(q184_verify_plan(ordered, cand))

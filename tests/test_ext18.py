@@ -1,6 +1,7 @@
 """Unit/property tests for the round-10 session-4 tier: BFS hop
 distance, k-core peel, Kaplan-Meier fold, and the spill-safe
-materialize() helper."""
+materialize() helper (observed round scalars, release of superseded
+frames)."""
 
 from __future__ import annotations
 
@@ -171,10 +172,16 @@ class TestKaplanMeierFold:
             assert got == self._km_ppm(data, h), f"horizon {h}"
 
 
+def _last_job(spark) -> int:
+    return max(
+        spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [], default=-1
+    )
+
+
 class TestMaterialize:
     def test_returns_same_rows(self, spark):
         df = spark.range(1000).select(F.col("id"), (F.col("id") % 7).alias("k"))
-        out = materialize(df, "k")
+        out, _ = materialize(df, "k")
         assert sorted(r.id for r in out.collect()) == list(range(1000))
 
     def test_rewidens_coarse_partitions(self, spark, monkeypatch):
@@ -182,11 +189,58 @@ class TestMaterialize:
 
         monkeypatch.setattr(mat, "MAX_ROWS_PER_TASK", 100)
         df = spark.range(1000).coalesce(2)
-        out = mat.materialize(df)
+        out, _ = mat.materialize(df)
         assert out.rdd.getNumPartitions() == 10
         assert out.count() == 1000
 
     def test_keeps_fine_partitions(self, spark):
         df = spark.range(100).repartition(8)
-        out = materialize(df)
+        out, _ = materialize(df)
         assert out.rdd.getNumPartitions() == 8
+
+    def test_shuffle_free_frame_runs_one_job(self, spark):
+        """The row count re-widening needs comes out of the checkpoint
+        job itself: no count job follows it."""
+        before = _last_job(spark)
+        _, stats = materialize(spark.range(1000))
+        assert _last_job(spark) - before == 1
+        assert stats["n"] == 1000
+
+    @pytest.mark.parametrize("case", ["random", "empty", "rewiden"])
+    def test_observed_stats_equal_a_separate_aggregate(self, spark, monkeypatch, case):
+        import e2e_stock_data_pipeline_spark.operators.materialize as mat
+
+        rng = random.Random(23)
+        rows = [(rng.randrange(60), rng.randrange(60)) for _ in range(500)]
+        df = spark.createDataFrame(rows, "u: long, v: long").distinct()
+        if case == "empty":
+            df = df.filter(F.col("u") < 0)
+        if case == "rewiden":
+            monkeypatch.setattr(mat, "MAX_ROWS_PER_TASK", 50)
+            df = df.coalesce(1)
+
+        def aggs():
+            return [
+                F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+                F.sum("u").alias("s"),
+            ]
+
+        want = df.agg(F.count(F.lit(1)).alias("n"), *aggs()).collect()[0].asDict()
+        out, stats = mat.materialize(df, "u", observe=aggs())
+        assert stats == want
+        assert out.agg(F.count(F.lit(1)).alias("n"), *aggs()).collect()[0].asDict() == want
+        if case == "empty":
+            assert want["n"] == 0
+        if case == "rewiden":
+            assert out.rdd.getNumPartitions() == -(-want["n"] // 50) > 1
+
+    def test_releases_superseded_frames_after_its_checkpoint(self, spark):
+        def persisted(frame) -> bool:
+            rid = frame._jdf.queryExecution().analyzed().rdd().id()
+            return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rid)
+
+        old, _ = materialize(spark.range(100))
+        new, stats = materialize(old.select((F.col("id") * 2).alias("x")), release=[old, None])
+        assert not persisted(old) and persisted(new)
+        assert stats["n"] == 100
+        assert sorted(r.x for r in new.collect()) == list(range(0, 200, 2))

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from types import SimpleNamespace
 
+import pytest
 from pyspark.sql import functions as F
 
 from e2e_stock_data_pipeline_spark.operators import materialize as memo
@@ -69,7 +70,7 @@ def test_release_spares_live_session_memo(spark, sf_dir):
     n_edges = edges.count()
     assert n_edges > 0 and len(_memos("copurchase_edges")) == 1
     # unrelated checkpoint residue that release MUST still reclaim
-    residue = materialize(spark.range(100).selectExpr("id", "id * 2 AS v"))
+    residue, _ = materialize(spark.range(100).selectExpr("id", "id * 2 AS v"))
     assert residue.count() == 100
     stats = registry.release(spark)
     assert stats["rdds_spared"], "memo rdd should be spared"
@@ -168,3 +169,105 @@ def test_release_spares_live_cluster_memo(spark, sf_dir):
     assert l3.count() == n_labels and p3.count() == n_pairs
     _drop("cluster_labels")
     registry.release(spark)
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _leaf_rdd_ids(df) -> set[int]:
+    """Ids of the RDDs behind the LogicalRDD leaves of a frame's plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+def _residue_graph():
+    import random
+
+    rng = random.Random(17)
+    return sorted({tuple(sorted(rng.sample(range(40), 2))) for _ in range(60)})
+
+
+def _run_cc(spark):
+    from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
+
+    nodes = spark.createDataFrame([(i,) for i in range(40)], "doc_id: long")
+    edges = spark.createDataFrame(_residue_graph(), "doc_a: long, doc_b: long")
+    return connected_components(nodes, edges)
+
+
+def _run_pagerank(spark):
+    from e2e_stock_data_pipeline_spark.operators.graph import pagerank
+
+    g = _residue_graph()
+    edges = spark.createDataFrame(g + [(b, a) for a, b in g], "u: long, v: long")
+    return pagerank(edges, n_iters=3)
+
+
+def _run_bfs(spark):
+    from e2e_stock_data_pipeline_spark.operators.graph import bfs_hops
+
+    return bfs_hops(spark.createDataFrame(_residue_graph(), "pa: long, pb: long"), 3)
+
+
+def _run_kcore(spark):
+    from e2e_stock_data_pipeline_spark.operators.graph import kcore_peel
+
+    edges = spark.createDataFrame(_residue_graph(), "pa: long, pb: long")
+    return kcore_peel(edges, k=3, rounds=3)
+
+
+def _run_coverage(spark):
+    from e2e_stock_data_pipeline_spark.operators.coverage import greedy_max_coverage
+
+    sets = [range(0, 9), range(5, 12), range(10, 14), range(13, 20), range(0, 3),
+            range(18, 23)]
+    pairs = spark.createDataFrame(
+        [(s, i) for s, items in enumerate(sets) for i in items], "s: long, i: long"
+    )
+    return greedy_max_coverage(pairs, "s", "i", k=4)
+
+
+def _run_ivf(spark):
+    import random
+
+    from e2e_stock_data_pipeline_spark.operators.similarity import (
+        ivf_rerank_topk_seeded,
+    )
+
+    rng = random.Random(3)
+    df = spark.createDataFrame(
+        [(i, [rng.uniform(-1.0, 1.0) for _ in range(8)]) for i in range(120)],
+        "vec_id: long, embedding: array<double>",
+    )
+    q, c = df.filter(F.col("vec_id") < 4), df.filter(F.col("vec_id") >= 4)
+    return ivf_rerank_topk_seeded(
+        q, c, dim=8, n_cells=6, n_probe=2, k_top=3, lloyd_steps=3, arrow_assign=False
+    )
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_run_cc, _run_pagerank, _run_bfs, _run_kcore, _run_coverage, _run_ivf],
+    ids=[
+        "connected_components",
+        "pagerank",
+        "bfs_hops",
+        "kcore_peel",
+        "greedy_max_coverage",
+        "ivf_lloyd_catalyst",
+    ],
+)
+def test_eager_operator_leaves_only_what_backs_its_result(spark, run):
+    """Each round's checkpoint releases what it supersedes, so after the
+    call (and a read of its result) the only new persisted RDDs are the
+    checkpoints the result's plan reads."""
+    before = _persisted_ids(spark)
+    result = run(spark)
+    assert result.collect()
+    after = _persisted_ids(spark)
+    assert after - before == _leaf_rdd_ids(result) & after

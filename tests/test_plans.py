@@ -128,7 +128,7 @@ def test_no_eager_actions_in_plan_modules():
         r"\.(count|first|collect|toPandas|head)\(\)"
         r"|\.(localCheckpoint|checkpoint|cache|persist)\("
         # operators.materialize routes the same eager work (DISK_ONLY
-        # localCheckpoint + count) through a helper the method regexes
+        # localCheckpoint) through a helper the method regexes
         # above can't see — an eager plan builder must be a CONSCIOUS
         # decision, recorded in the allowlist below with its rationale
         r"|materialize\("
@@ -146,7 +146,7 @@ def test_no_eager_actions_in_plan_modules():
     #     explode is checkpointed so the interpreted shingle build runs
     #     ONCE instead of twice (dfreq pass + rank-attach pass) — half
     #     of the measured q184 87.5->38.7 s ordered-phase cut; released
-    #     via unpersist_materialized as soon as `ordered` materializes.
+    #     by the `ordered` checkpoint (materialize's release=).
     #   similarity.py (r17): ivf_rerank_topk_seeded checkpoints the
     #     INTERMEDIATE Lloyd centroids when lloyd_steps >= 2 (each has
     #     two consumers: next assignment + its own update) — dead code
