@@ -681,9 +681,10 @@ def connected_components(
       per-node min tables broadcast, making a round broadcast joins +
       ONE shuffle (the output dedup); otherwise shuffle joins, with the
       round's exchange width sized from the live edge count;
-    * each round's checkpoint releases the frames it supersedes, so a
-      long session does not accumulate block-manager residue (VERDICT
-      r11 item 3).
+    * each round's checkpoint releases the frames it supersedes, and
+      the returned labels are a checkpoint that releases the final edge
+      set, so a long session does not accumulate block-manager residue
+      (VERDICT r11 item 3).
     """
     import os
     import time as _time
@@ -863,9 +864,19 @@ def connected_components(
         id_col,
         "left",
     )
-    return out.select(
-        F.col(id_col), F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id")
+    # the labels are checkpointed (one ~|corpus|-row DISK_ONLY write) so
+    # the final edge set, which nothing reads after this job, is released
+    # here instead of staying persisted behind a lazy result
+    out, _ = materialize(
+        out.select(
+            F.col(id_col),
+            F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
+        ),
+        id_col,
+        widen=False,
+        release=[e],
     )
+    return out
 
 
 def cluster_labels_plan(
@@ -907,6 +918,8 @@ def _cluster_labels(docs: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]
         "doc_a",
         widen=False,
     )
+    # CC returns its labels checkpointed: memo hits read label blocks
+    # directly instead of re-joining the final star edge set
     labels = connected_components(
         docs.select(id_col),
         pairs,
@@ -914,7 +927,4 @@ def _cluster_labels(docs: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]
         assume_canonical=True,
         pre_materialized=True,
     )
-    # one ~|corpus|-row DISK_ONLY write; memo hits then read label
-    # blocks directly instead of re-joining the final star edge set
-    labels, _ = materialize(labels, id_col, widen=False)
     return pairs, labels

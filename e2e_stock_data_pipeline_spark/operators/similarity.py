@@ -20,8 +20,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .materialize import materialize
-
 QUANT = 10000
 
 
@@ -403,8 +401,9 @@ def _d2_int(a: Column, b: Column) -> Column:
 #
 # IVF_PROBE_DIV = 2 since r17 (VERDICT r16 item 2: q128's 81.6%
 # recall@5 was the similarity family's low bar, misses pure probe
-# pruning). The knob sweep at sf10 (scripts/ivf_variants.py, planted
-# protocol, 2 reps x 25 truth slots per variant, one session):
+# pruning). The knob sweep at sf10 (lloyd = Lloyd steps, div = this
+# constant; the scripts/sf10_ann_recall.py planted protocol, 2 reps x
+# 25 truth slots per variant, one session):
 #   lloyd=1 div=4: 78.0%  41.9 s   (the r16 geometry)
 #   lloyd=1 div=2: 92.0%  44.3 s   <- chosen
 #   lloyd=2 div=4: 80.0%  55.5 s
@@ -415,27 +414,28 @@ def _d2_int(a: Column, b: Column) -> Column:
 # weak, so sharper centroids don't move neighbor-cell ranking). The
 # div=2 rerank leg is cheap because only probed-cell rows pay exact
 # distance and the query set is small; the dominant cost stays the
-# assignment passes, which div does not touch.
+# assignment passes, which div does not touch. Both stay constants:
+# one Lloyd step (what q128's oracle replays) and IVF_PROBE_DIV.
 IVF_CELLS_SCALE_DIV = 4
 IVF_PROBE_DIV = 2
 IVF_CELLS_MAX = 1024
 
 
-def _arrow_assign_cells(
+def _assign_cells(
     cn: DataFrame, cells, cents, dim: int, id_type: str
 ) -> DataFrame:
     """Argmin-cell assignment of (cand_id, _q) rows against a fixed
     centroid matrix, computed as ONE int64 matrix product per Arrow
     batch (guide §4.2: hand whole batches to vectorized native code).
 
-    Exactness contract (must stay bit-identical to the Catalyst fold
-    ``min(struct(reduced_d2, c))`` and to the oracle's ``row_number()
-    ORDER BY d2, c``): all arithmetic is int64 (quantized components
+    Exactness contract (must stay bit-identical to the oracle's
+    ``row_number() ORDER BY d2, c``; pinned against an independent numpy
+    reference in tests/test_operators.py): all arithmetic is int64 (quantized components
     are < ~2^17, so a 64-dim reduced distance is < 2^45 — no overflow),
     the reduced distance |c|^2 - 2<x,c> drops the row's own |x|^2 term
     (constant across cells, cannot reorder an argmin), ``cents`` rows
     are sorted by ascending cell id so numpy's first-minimum argmin
-    breaks ties toward the smallest cell id, exactly the struct min.
+    breaks ties toward the smallest cell id, exactly the oracle's order.
     ``_q`` is passed through the batch, so consumers need no join back
     to the candidate table.
 
@@ -501,37 +501,45 @@ def ivf_rerank_topk_seeded(
     n_probe: int = 4,
     k_top: int = 5,
     density_scaled: bool = False,
-    lloyd_steps: int = 1,
-    probe_div: int = IVF_PROBE_DIV,
-    arrow_assign: bool = True,
 ) -> DataFrame:
-    """IVF probe -> exact rerank, fully lazy and integer-exact.
+    """IVF probe -> exact rerank, integer-exact and oracle-replayable.
 
     The oracle-replayable twin of :func:`ivf_topk` (which fits a real
-    KMeans): here the coarse quantizer is DATA-DERIVED INSIDE THE PLAN —
-    seed centroids are the ``n_cells`` smallest-id candidates (KMeans
-    iteration zero, the q123 codebook trick) refined by ONE exact Lloyd
-    step in Catalyst: assign every candidate to its nearest seed, then
-    recompute each cell centroid component-wise as ``sum div count``
-    (integer floor-toward-zero division, identical in Spark and DuckDB,
+    KMeans): here the coarse quantizer is DATA-DERIVED from the
+    candidates — seed centroids are the ``n_cells`` smallest-id
+    candidates (KMeans iteration zero, the q123 codebook trick) refined
+    by ONE exact Lloyd step: assign every candidate to its nearest seed,
+    then recompute each cell centroid component-wise as ``sum div
+    count`` (integer truncating division, identical in Spark and DuckDB,
     so the "learned" centroids are bit-replayable by SQL). Candidates
     are then indexed by the refined cells, each query probes its
     ``n_probe`` nearest cells and pays exact integer-L2 distance only
     inside those cells.
 
-    Scale shape: centroids are a broadcast O(n_cells) frame at every
-    stage; both assignment passes are cross-join-to-broadcast + one
-    map-side-combinable argmin per candidate (no data-sized shuffle
-    beyond the groupBy on unique cand_id); the Lloyd update is one
-    posexplode groupBy (cell, pos) -> n_cells x dim rows; probes are a
-    |Q| x n_cells window; the search joins candidates to the BROADCAST
-    probe frame (never shuffles candidates on the 16-value cell key —
-    the low-cardinality-key hazard), and only probed-cell rows pay a
-    full-vector distance. An empty refined cell simply vanishes on both
-    engines.
+    Eager like the iterative operators (connected_components,
+    pagerank): the geometry count, the seed scan and the Lloyd centroid
+    update are collected at build time — all dimension-sized (<=
+    IVF_CELLS_MAX rows), recomputed from the inputs on every call,
+    never a cross-run memo. The two corpus x cells argmin scans run in
+    :func:`_assign_cells` (one int64 numpy matmul per Arrow
+    batch); everything the oracle replays arithmetically (quantize, the
+    sum-div-count update, the probe ranking, the exact rerank) stays in
+    Catalyst. Against the pure-Catalyst fold it replaced, at identical
+    rows: 2.07 vs 3.15 s on 2k vectors, 4.16 vs 29.0 s on 20k, 16.9 vs
+    546.9 s on 200k (BENCH_NOTES.md, "IVF assignment: Arrow vs
+    Catalyst").
+
+    Scale shape: the search joins candidates to the BROADCAST probe
+    frame (never shuffles candidates on the low-cardinality cell key),
+    and only probed-cell rows pay a full-vector distance. An empty
+    refined cell simply vanishes on both engines.
 
     Returns (query_id, cand_id, cell, exact_d2, rnk); ties on cand_id.
     """
+    import math
+
+    import numpy as np
+
     def checked_q(side: str) -> Column:
         # length guard inside the _q expression (pq.py convention): a
         # short embedding would silently truncate zip_with dots.
@@ -555,205 +563,25 @@ def ivf_rerank_topk_seeded(
 
     qn = queries.select(F.col(id_col).alias("query_id"), checked_q("query").alias("_q"))
     cn = candidates.select(F.col(id_col).alias("cand_id"), checked_q("candidate").alias("_q"))
-
-    if lloyd_steps < 1:
-        raise ValueError(f"lloyd_steps must be >= 1, got {lloyd_steps}")
-    if arrow_assign:
-        try:
-            import numpy as np  # noqa: F401
-            import pyarrow  # noqa: F401
-        except ImportError:  # pragma: no cover — local env always has both
-            arrow_assign = False
-    if arrow_assign:
-        # r18 (guide §4.2): the corpus x cells assignment — 2.85 B
-        # interpreted multiply-adds per pass at sf10, twice adjudicated
-        # at its Catalyst floor in r16/r17, with both exact pruning
-        # bounds measured dead (see _arrow_assign_cells) — moves to one
-        # int64 numpy matmul per Arrow batch. Everything the oracle
-        # replays arithmetically (quantize, Lloyd's sum-div-count, the
-        # probe ranking, the exact rerank) STAYS in Catalyst; only the
-        # argmin scan is vectorized, and its tie order is proved
-        # identical in _arrow_assign_cells. The centroid frames this
-        # path collects are dimension-sized (<= IVF_CELLS_MAX x dim —
-        # the same rows the lazy path broadcasts), recomputed from the
-        # parquet inputs on every call: eager like the iterative
-        # operators, never a cross-run memo.
-        return _ivf_rerank_arrow(
-            qn, cn, dim, n_cells, n_probe, k_top,
-            density_scaled, lloyd_steps, probe_div,
-        )
-
-    if density_scaled:
-        # one lazy one-row count picks the geometry (no driver probe);
-        # the static smallest-id seed scan stays a TakeOrdered of
-        # IVF_CELLS_MAX rows, then the data-dependent cell count clips it
-        params = (
-            cn.agg(F.count(F.lit(1)).alias("_n"))
-            .select(
-                F.least(
-                    F.lit(IVF_CELLS_MAX).cast("bigint"),
-                    F.greatest(
-                        F.lit(n_cells).cast("bigint"),
-                        F.floor(
-                            F.sqrt(F.expr(f"_n DIV {IVF_CELLS_SCALE_DIV}"))
-                        ).cast("bigint"),
-                    ),
-                ).alias("_ncells")
-            )
-            .select(
-                "_ncells",
-                F.greatest(
-                    F.lit(n_probe).cast("bigint"),
-                    F.expr(f"_ncells DIV {int(probe_div)}"),
-                ).alias("_nprobe"),
-            )
-        )
-        seeds = (
-            cn.orderBy("cand_id")
-            .limit(IVF_CELLS_MAX)
-            .crossJoin(F.broadcast(params))
-            .withColumn("c", F.row_number().over(Window.orderBy("cand_id")) - 1)
-            .filter(F.col("c") < F.col("_ncells"))
-            .select("c", F.col("_q").alias("_cent"))
-        )
-    else:
-        params = None
-        seeds = (
-            cn.orderBy("cand_id")
-            .limit(n_cells)
-            .withColumn("c", F.row_number().over(Window.orderBy("cand_id")) - 1)
-            .select("c", F.col("_q").alias("_cent"))
-        )
-    # Cell RANKING uses the norm-decomposed reduced distance
-    # |cent|^2 - 2<x, cent>: the row's own |x|^2 is constant across the
-    # cells it is ranked against, so dropping it cannot reorder any
-    # argmin/row_number — assignments and probes are bit-identical to
-    # the full d2 the oracle sorts by, at one array fold per pair
-    # instead of three (r16: the density-scaled 223-cell assignment was
-    # 3x-paying dot(x,x) per (candidate, cell); sf10 111 s -> measured
-    # below). |cent|^2 rides the broadcast centroid frame.
-    with_cn2 = lambda cells: cells.withColumn(  # noqa: E731
-        "_cn2", dot_q(F.col("_cent"), F.col("_cent"))
-    )
-    d2r = F.col("_cn2") - F.lit(2).cast("bigint") * dot_q(F.col("_q"), F.col("_cent"))
-
-    def assign(to_cells: DataFrame) -> DataFrame:
-        """Argmin cell per candidate vs a broadcast centroid frame —
-        min over a lexicographic (reduced d2, c) struct is
-        partial-aggregable."""
-        return (
-            cn.crossJoin(F.broadcast(with_cn2(to_cells)))
-            .select("cand_id", d2r.alias("_d2"), "c")
-            .groupBy("cand_id")
-            .agg(F.min(F.struct("_d2", "c")).alias("_mc"))
-            .select("cand_id", F.col("_mc.c").alias("cell"))
-        )
-
-    # exact Lloyd step(s): cell centroid = component-wise sum div count.
-    # Each extra step pays one more corpus x cells assignment pass plus
-    # a (cells x dim)-row update agg; the oracle replays the same fixed
-    # number of (a_i, cent_i) CTE rounds.
-    cent, held = seeds, None
-    for step in range(lloyd_steps):
-        if step > 0:
-            # truncate the previous step's corpus-sized lineage: the
-            # centroid frame itself is only cells x dim values, but
-            # un-checkpointed it would re-execute the whole prior
-            # assignment pass once per downstream reference
-            cent, _ = materialize(cent, release=[held])
-            held = cent
-        comp = assign(cent).join(cn, "cand_id").select(
-            "cell", F.posexplode("_q").alias("pos", "val")
-        )
-        cent = (
-            comp.groupBy("cell", "pos")
-            .agg(F.sum("val").alias("_s"), F.count(F.lit(1)).alias("_n"))
-            .select("cell", "pos", F.expr("_s div _n").alias("_cv"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "_cv"))).alias("_a"))
-            .select(
-                F.col("cell").alias("c"),
-                F.transform(F.col("_a"), lambda s: s["_cv"]).alias("_cent"),
-            )
-        )
-
-    indexed = assign(cent).join(cn, "cand_id")  # (cand_id, cell, _q)
-
-    wp = Window.partitionBy("query_id").orderBy("_d2", "c")
-    ranked = (
-        qn.crossJoin(F.broadcast(with_cn2(cent)))
-        .select("query_id", "_q", d2r.alias("_d2"), "c")
-        .withColumn("_r", F.row_number().over(wp))
-    )
-    if density_scaled:
-        ranked = ranked.crossJoin(F.broadcast(params)).filter(
-            F.col("_r") <= F.col("_nprobe")
-        )
-    else:
-        ranked = ranked.filter(F.col("_r") <= n_probe)
-    probes = ranked.select(
-        "query_id", F.col("_q").alias("_qq"), F.col("c").alias("cell")
-    )
-
-    wk = Window.partitionBy("query_id").orderBy("exact_d2", "cand_id")
-    return (
-        indexed.join(F.broadcast(probes), "cell")
-        .select(
-            "query_id",
-            "cand_id",
-            "cell",
-            _d2_int(F.col("_qq"), F.col("_q")).alias("exact_d2"),
-        )
-        .withColumn("rnk", F.row_number().over(wk).cast("int"))
-        .filter(F.col("rnk") <= k_top)
-    )
-
-
-def _ivf_rerank_arrow(
-    qn: DataFrame,
-    cn: DataFrame,
-    dim: int,
-    n_cells: int,
-    n_probe: int,
-    k_top: int,
-    density_scaled: bool,
-    lloyd_steps: int,
-    probe_div: int,
-) -> DataFrame:
-    """The arrow_assign=True body of :func:`ivf_rerank_topk_seeded` —
-    identical recursion, the two corpus x cells argmin scans run in
-    :func:`_arrow_assign_cells`. Eager like the iterative operators
-    (connected_components, pagerank): the seed scan, each Lloyd
-    centroid update, and the geometry count are collected at build
-    time — all dimension-sized (<= IVF_CELLS_MAX rows), exactly what
-    the lazy path would broadcast anyway. Bit-equality with the lazy
-    path is pinned by tests/test_operators.py (arrow-vs-catalyst and
-    the oracle parity rows)."""
-    import math
-
-    import numpy as np
-
     spark = cn.sparkSession
     id_type = cn.schema["cand_id"].dataType.simpleString()
 
     if density_scaled:
-        # python mirror of the lazy params frame: LEAST(CMAX,
-        # GREATEST(n_cells, FLOOR(SQRT(n DIV CSD)))). math.isqrt ==
+        # the geometry the oracle computes from the same count: LEAST(
+        # CMAX, GREATEST(n_cells, FLOOR(SQRT(n DIV CSD)))). math.isqrt ==
         # FLOOR(SQRT(double)) for every count below 2^52 (IEEE sqrt is
         # correctly rounded and the nearest double to isqrt's integer
         # result never crosses an integer boundary at these magnitudes).
         n_cand = cn.count()
-        ncells_eff = min(
+        n_cells = min(
             IVF_CELLS_MAX,
             max(n_cells, math.isqrt(n_cand // IVF_CELLS_SCALE_DIV)),
         )
-        nprobe_eff = max(n_probe, ncells_eff // int(probe_div))
-    else:
-        ncells_eff, nprobe_eff = n_cells, n_probe
+        n_probe = max(n_probe, n_cells // IVF_PROBE_DIV)
 
-    # seeds: the ncells smallest-id candidates, c = 0..m-1 in id order
-    # (the lazy path's row_number() - 1 over the same TakeOrdered scan)
-    seed_rows = cn.orderBy("cand_id").limit(ncells_eff).collect()
+    # seeds: the n_cells smallest-id candidates, cell c = 0..m-1 in id
+    # order (the oracle's row_number() - 1 over the same ordered scan)
+    seed_rows = cn.orderBy("cand_id").limit(n_cells).collect()
     if not seed_rows:
         # no candidates: nothing to index, so no query has a neighbour
         q_type = qn.schema["query_id"].dataType.simpleString()
@@ -762,47 +590,48 @@ def _ivf_rerank_arrow(
             f"query_id {q_type}, cand_id {id_type}, cell int,"
             " exact_d2 bigint, rnk int",
         )
-    cells = np.arange(len(seed_rows), dtype=np.int32)
-    cents = np.asarray([r["_q"] for r in seed_rows], dtype=np.int64)
+    seeds = np.asarray([r["_q"] for r in seed_rows], dtype=np.int64)
+    assigned = _assign_cells(
+        cn, np.arange(len(seed_rows), dtype=np.int32), seeds, dim, id_type
+    )
 
-    for _step in range(lloyd_steps):
-        # assignment in Arrow, centroid update (sum div count — the
-        # truncating division the oracle replays) in Catalyst, then ONE
-        # dimension-sized collect of the new centroids
-        assigned = _arrow_assign_cells(cn, cells, cents, dim, id_type)
-        comp = assigned.select("cell", F.posexplode("_q").alias("pos", "val"))
-        cent_rows = (
-            comp.groupBy("cell", "pos")
-            .agg(F.sum("val").alias("_s"), F.count(F.lit(1)).alias("_n"))
-            .select("cell", "pos", F.expr("_s div _n").alias("_cv"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "_cv"))).alias("_a"))
-            .select("cell", F.transform(F.col("_a"), lambda s: s["_cv"]).alias("_cent"))
-            .collect()
-        )
-        # empty refined cells vanish (both engines agree); keep rows
-        # sorted by cell id so argmin tie order stays smallest-cell
-        cent_rows.sort(key=lambda r: r["cell"])
-        cells = np.asarray([r["cell"] for r in cent_rows], dtype=np.int32)
-        cents = np.asarray([r["_cent"] for r in cent_rows], dtype=np.int64)
+    # the Lloyd step: centroid = component-wise sum div count (the
+    # truncating division the oracle replays), ONE dimension-sized collect
+    cent_rows = (
+        assigned.select("cell", F.posexplode("_q").alias("pos", "val"))
+        .groupBy("cell", "pos")
+        .agg(F.sum("val").alias("_s"), F.count(F.lit(1)).alias("_n"))
+        .select("cell", "pos", F.expr("_s div _n").alias("_cv"))
+        .groupBy("cell")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "_cv"))).alias("_a"))
+        .select("cell", F.transform(F.col("_a"), lambda s: s["_cv"]).alias("_cent"))
+        .collect()
+    )
+    # empty refined cells vanish (both engines agree); rows sorted by
+    # cell id keep the argmin tie order smallest-cell
+    cent_rows.sort(key=lambda r: r["cell"])
+    cells = np.asarray([r["cell"] for r in cent_rows], dtype=np.int32)
+    cents = np.asarray([r["_cent"] for r in cent_rows], dtype=np.int64)
+    indexed = _assign_cells(cn, cells, cents, dim, id_type)
 
-    indexed = _arrow_assign_cells(cn, cells, cents, dim, id_type)
-
-    # probe ranking + exact rerank stay in Catalyst over a rebuilt
-    # dimension-sized centroid frame (created from the collected values
-    # — re-deriving it lazily would re-run the assignment pipeline)
+    # probe ranking + exact rerank stay in Catalyst over a centroid
+    # frame built from the collected values (re-deriving it lazily would
+    # re-run the assignment pipeline). Cell RANKING uses the
+    # norm-decomposed reduced distance |cent|^2 - 2<x, cent>: the
+    # query's own |x|^2 is constant across the cells it is ranked
+    # against, so dropping it cannot reorder the row_number the oracle
+    # takes over the full d2.
     cent_df = spark.createDataFrame(
         [(int(c), [int(v) for v in vec]) for c, vec in zip(cells, cents)],
         schema="c int, _cent array<bigint>",
-    )
-    with_cn2 = cent_df.withColumn("_cn2", dot_q(F.col("_cent"), F.col("_cent")))
+    ).withColumn("_cn2", dot_q(F.col("_cent"), F.col("_cent")))
     d2r = F.col("_cn2") - F.lit(2).cast("bigint") * dot_q(F.col("_q"), F.col("_cent"))
     wp = Window.partitionBy("query_id").orderBy("_d2", "c")
     probes = (
-        qn.crossJoin(F.broadcast(with_cn2))
+        qn.crossJoin(F.broadcast(cent_df))
         .select("query_id", "_q", d2r.alias("_d2"), "c")
         .withColumn("_r", F.row_number().over(wp))
-        .filter(F.col("_r") <= F.lit(int(nprobe_eff)))
+        .filter(F.col("_r") <= F.lit(int(n_probe)))
         .select("query_id", F.col("_q").alias("_qq"), F.col("c").alias("cell"))
     )
     wk = Window.partitionBy("query_id").orderBy("exact_d2", "cand_id")

@@ -44,7 +44,7 @@ def test_release_reclaims_iterative_residue(spark, sf_dir):
     )
     result = connected_components(nodes, edges)
     assert result.count() == 40
-    # the converged edge set is still persisted — the operator cannot
+    # the labels checkpoint is still persisted — the operator cannot
     # release what backs its own return value
     assert _n_persistent(spark) > 0
     stats = registry.release(spark)
@@ -171,6 +171,28 @@ def test_release_spares_live_cluster_memo(spark, sf_dir):
     registry.release(spark)
 
 
+def test_fresh_cluster_labels_plan_leaves_only_its_memo(spark):
+    """A fresh build of the cluster memo adds exactly the persisted RDDs
+    the memo entry holds (pairs and labels): connected components
+    releases its final edge set when it checkpoints the labels."""
+    from e2e_stock_data_pipeline_spark.operators import dedup
+
+    _drop("cluster_labels")
+    registry.release(spark)
+    docs = spark.createDataFrame(
+        [(i, "alpha beta gamma delta epsilon zeta") for i in range(6)]
+        + [(i, f"unique{i} text{i} body{i} words{i} here{i}") for i in range(6, 12)],
+        ["doc_id", "text"],
+    )
+    before = _persisted_ids(spark)
+    dedup.cluster_labels_plan(docs)
+    (held,) = [ids for k, (_v, ids, _s) in memo._MEMO.items() if k[1] == "cluster_labels"]
+    assert len(held) == 2
+    assert _persisted_ids(spark) - before == set(held)
+    _drop("cluster_labels")
+    registry.release(spark)
+
+
 def _persisted_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
@@ -245,9 +267,7 @@ def _run_ivf(spark):
         "vec_id: long, embedding: array<double>",
     )
     q, c = df.filter(F.col("vec_id") < 4), df.filter(F.col("vec_id") >= 4)
-    return ivf_rerank_topk_seeded(
-        q, c, dim=8, n_cells=6, n_probe=2, k_top=3, lloyd_steps=3, arrow_assign=False
-    )
+    return ivf_rerank_topk_seeded(q, c, dim=8, n_cells=6, n_probe=2, k_top=3)
 
 
 @pytest.mark.parametrize(
@@ -259,7 +279,7 @@ def _run_ivf(spark):
         "bfs_hops",
         "kcore_peel",
         "greedy_max_coverage",
-        "ivf_lloyd_catalyst",
+        "ivf_rerank_seeded",
     ],
 )
 def test_eager_operator_leaves_only_what_backs_its_result(spark, run):

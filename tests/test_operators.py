@@ -5,6 +5,7 @@ properties, similarity vs numpy, multimodal plumbing.
 from __future__ import annotations
 
 import datetime as dt
+import math
 
 import numpy as np
 import pytest
@@ -984,34 +985,35 @@ class TestIvfSeeded:
         assert len(got & truth) >= int(0.8 * len(truth))
 
     def test_ivf_arrow_empty_candidates_return_empty_frame(self, spark, sf_dir):
-        """No candidates: the arrow path returns the empty result frame
-        with the lazy path's columns instead of dying on a 0-row
-        centroid matrix."""
+        """No candidates: the operator returns an empty result frame with
+        the columns and types of a non-empty call instead of dying on a
+        0-row centroid matrix."""
         from e2e_stock_data_pipeline_spark.operators.similarity import (
             ivf_rerank_topk_seeded,
         )
         from e2e_stock_data_pipeline_spark.sources import tables
 
         e = tables.load(spark, sf_dir, "embeddings")
-        q, c = e.filter(F.col("vec_id") < 5), e.filter(F.col("vec_id") < 0)
+        q = e.filter(F.col("vec_id") < 5)
         for kwargs in ({"n_cells": 8, "n_probe": 4}, {"density_scaled": True}):
-            arrow = ivf_rerank_topk_seeded(q, c, arrow_assign=True, **kwargs)
-            lazy = ivf_rerank_topk_seeded(q, c, arrow_assign=False, **kwargs)
-            assert arrow.collect() == [] == lazy.collect()
-            assert arrow.columns == lazy.columns
+            empty = ivf_rerank_topk_seeded(q, e.filter(F.col("vec_id") < 0), **kwargs)
+            full = ivf_rerank_topk_seeded(q, e.filter(F.col("vec_id") >= 5), **kwargs)
+            assert empty.collect() == []
+            assert full.collect()
+            assert empty.dtypes == full.dtypes
 
     def test_ivf_arrow_assign_rejects_null_elements(self, spark):
         """A NULL inside a quantized vector must fail loudly, not become
         NaN and then an arbitrary int64 that picks a wrong cell."""
         from e2e_stock_data_pipeline_spark.operators.similarity import (
-            _arrow_assign_cells,
+            _assign_cells,
         )
 
         cn = spark.createDataFrame(
             [(1, [1, 2]), (2, [3, None])], "cand_id int, _q array<bigint>"
         )
         cents = np.asarray([[0, 0], [4, 4]], dtype=np.int64)
-        assigned = _arrow_assign_cells(cn, [0, 1], cents, 2, "int")
+        assigned = _assign_cells(cn, [0, 1], cents, 2, "int")
         with pytest.raises(Exception, match="NULL _q elements"):
             assigned.collect()
 
@@ -1269,6 +1271,63 @@ class TestDistributedGlobalRanking:
         assert sizes[1] == 30001 and all(sizes[t] == 30000 for t in range(2, 11))
 
 
+def _ivf_reference(queries, candidates, n_cells, n_probe, k_top, dim=64):
+    """Sorted (query_id, cand_id, cell, exact_d2, rnk) rows of the seeded
+    IVF, replayed in numpy over the Spark-quantized vectors: seeds are
+    the n_cells smallest-id candidates, one Lloyd step sets each
+    non-empty cell's centroid to its members' component-wise sum
+    divided by their count, truncated toward zero; assignment and
+    probes order cells by (full d2, cell), the rerank orders candidates
+    by (exact_d2, cand_id)."""
+    from e2e_stock_data_pipeline_spark.operators.similarity import quantized
+
+    def vectors(df):
+        rows = df.select("vec_id", quantized("embedding").alias("_q")).collect()
+        assert all(len(r["_q"]) == dim for r in rows)
+        return dict(sorted((r["vec_id"], r["_q"]) for r in rows))
+
+    qs, cs = vectors(queries), vectors(candidates)
+    if not cs:
+        return []
+    ids = list(cs)
+    x = np.asarray(list(cs.values()), dtype=np.int64)
+
+    def nearest(cells, cents):
+        d2 = np.stack([((x - cent) ** 2).sum(axis=1) for cent in cents], axis=1)
+        tied = d2 == d2.min(axis=1, keepdims=True)
+        big = np.iinfo(np.int64).max
+        return np.where(tied, np.asarray(cells)[None, :], big).min(axis=1)
+
+    seeds = x[:n_cells]
+    first = nearest(list(range(len(seeds))), seeds)
+    cells = sorted(set(first.tolist()))
+    cents = []
+    for cell in cells:
+        members = x[first == cell]
+        total, n = members.sum(axis=0).tolist(), len(members)
+        cents.append([abs(t) // n * (1 if t >= 0 else -1) for t in total])
+    cents = np.asarray(cents, dtype=np.int64)
+    indexed = nearest(cells, cents)
+
+    rows = []
+    for qid, qv in qs.items():
+        qv = np.asarray(qv, dtype=np.int64)
+        ranked = sorted(
+            (int(((cent - qv) ** 2).sum()), cell) for cell, cent in zip(cells, cents)
+        )
+        probed = {cell for _d2, cell in ranked[:n_probe]}
+        hits = sorted(
+            (int(((x[i] - qv) ** 2).sum()), cid, int(indexed[i]))
+            for i, cid in enumerate(ids)
+            if indexed[i] in probed
+        )
+        rows += [
+            (qid, cid, cell, d2, rnk)
+            for rnk, (d2, cid, cell) in enumerate(hits[:k_top], 1)
+        ]
+    return sorted(rows)
+
+
 class TestDensityScaledGeometry:
     """r16 (VERDICT r15 items 1-2): the similarity tier's two remaining
     fixed geometries became density-scaled — banded hyperplane LSH for
@@ -1414,41 +1473,75 @@ class TestDensityScaledGeometry:
         )
         assert scaled == explicit
 
-    def test_ivf_arrow_assign_matches_catalyst_bitwise(self, spark, sf_dir):
-        """r18: the arrow_assign path (numpy int64 matmul argmin per
-        Arrow batch) must be BIT-IDENTICAL to the pure-Catalyst fold it
-        replaces — same reduced-distance arithmetic, same smallest-cell
-        tie order — on both the fixed and the density-scaled geometry.
-        This is the parity row that licenses the only registered
-        mapInArrow site outside the sanctioned q125 boundary."""
+    def test_ivf_matches_numpy_reference_bitwise(self, spark, sf_dir):
+        """q128's operator must be BIT-IDENTICAL to an independent numpy
+        replay of the algorithm its oracle states — smallest-id seeds,
+        one truncating Lloyd step, explicit (d2, cell) and
+        (exact_d2, cand_id) tie order — on the fixed and the
+        density-scaled geometry. This is the parity row that licenses
+        the only registered mapInArrow site outside the sanctioned q125
+        boundary."""
         from e2e_stock_data_pipeline_spark.operators.similarity import (
+            IVF_CELLS_MAX,
+            IVF_CELLS_SCALE_DIV,
+            IVF_PROBE_DIV,
             ivf_rerank_topk_seeded,
         )
-        from e2e_stock_data_pipeline_spark.sources import tables
 
         e = tables.load(spark, sf_dir, "embeddings")
         q, c = e.filter(F.col("vec_id") < 5), e.filter(F.col("vec_id") >= 5)
-        for kwargs in (
-            {"n_cells": 8, "n_probe": 4},
-            {"density_scaled": True},
+        n_cand = c.count()
+        scaled_cells = min(
+            IVF_CELLS_MAX, max(16, math.isqrt(n_cand // IVF_CELLS_SCALE_DIV))
+        )
+        scaled_probes = max(4, scaled_cells // IVF_PROBE_DIV)
+        for kwargs, geometry in (
+            ({"n_cells": 8, "n_probe": 4}, (8, 4)),
+            ({"density_scaled": True}, (scaled_cells, scaled_probes)),
         ):
-            arrow = sorted(
-                map(
-                    tuple,
-                    ivf_rerank_topk_seeded(
-                        q, c, k_top=5, arrow_assign=True, **kwargs
-                    ).collect(),
-                )
+            got = sorted(
+                map(tuple, ivf_rerank_topk_seeded(q, c, k_top=5, **kwargs).collect())
             )
-            catalyst = sorted(
-                map(
-                    tuple,
-                    ivf_rerank_topk_seeded(
-                        q, c, k_top=5, arrow_assign=False, **kwargs
-                    ).collect(),
-                )
+            assert got == _ivf_reference(q, c, *geometry, k_top=5), kwargs
+
+    def test_ivf_reference_tie_order_on_duplicate_vectors(self, spark):
+        """Duplicate vectors make every tie real: duplicate seeds tie
+        each assignment (the smaller cell wins and the other cell
+        empties), symmetric clusters tie a query's probe ranking
+        between cells, and duplicate candidates tie exact_d2 (the
+        smaller cand_id ranks first). The negative clusters' centroid
+        sums do not divide evenly, so a floor division instead of
+        truncation breaks the symmetry the probe ties rest on."""
+        from e2e_stock_data_pipeline_spark.operators.similarity import (
+            ivf_rerank_topk_seeded,
+        )
+
+        a, b = 1.0, 1.25  # exact in binary, so quantizing is exact too
+        cand = [
+            (0, [a, 0.0]), (1, [a, 0.0]), (2, [-a, 0.0]), (3, [0.0, a]),
+            (4, [0.0, -a]), (5, [0.0, -a]), (6, [b, 0.0]), (7, [-a, 0.0]),
+            (8, [-b, 0.0]), (9, [0.0, b]), (10, [0.0, a]), (11, [0.0, -b]),
+        ]
+        qry = [(100, [0.0, 0.0]), (101, [0.5, 0.5]), (102, [a, 0.0])]
+        c = spark.createDataFrame(cand, "vec_id long, embedding array<double>")
+        q = spark.createDataFrame(qry, "vec_id long, embedding array<double>")
+        got = sorted(
+            map(
+                tuple,
+                ivf_rerank_topk_seeded(
+                    q, c, dim=2, n_cells=6, n_probe=2, k_top=3
+                ).collect(),
             )
-            assert arrow == catalyst, kwargs
+        )
+        want = _ivf_reference(q, c, 6, 2, k_top=3, dim=2)
+        assert got == want
+        # the ties resolved as described: cells 1 and 5 emptied, the
+        # origin query probed cells 0 and 2 of four equidistant ones
+        # and ranked the tied candidates 0, 1, 2 by id
+        assert {r[2] for r in want} <= {0, 2, 3, 4}
+        assert [(r[1], r[2], r[4]) for r in want if r[0] == 100] == [
+            (0, 0, 1), (1, 0, 2), (2, 2, 3)
+        ]
 
     def test_pq_shortlist_div_zero_rejected(self, spark, sf_dir):
         """ADVICE r15: shortlist_scale_div=0 used to silently disable

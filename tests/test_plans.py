@@ -147,25 +147,23 @@ def test_no_eager_actions_in_plan_modules():
     #     ONCE instead of twice (dfreq pass + rank-attach pass) — half
     #     of the measured q184 87.5->38.7 s ordered-phase cut; released
     #     by the `ordered` checkpoint (materialize's release=).
-    #   similarity.py (r17): ivf_rerank_topk_seeded checkpoints the
-    #     INTERMEDIATE Lloyd centroids when lloyd_steps >= 2 (each has
-    #     two consumers: next assignment + its own update) — dead code
-    #     at the default lloyd_steps=1, so every registered plan stays
-    #     lazy; the knob exists for clustered corpora (priced in
-    #     BENCH_NOTES r17).
     # Keyed by file -> EXPECTED materialize() occurrence count, so a new
     # eager call site added to an already-allowlisted file still fails
     # here and must be consciously recorded (ADVICE r15).
-    allowed_eager = {"queries_ext15.py": 2, "similarity.py": 1}
+    allowed_eager = {"queries_ext15.py": 2}
     # driver-side collects/counts allowed in plan builders, file ->
     # EXPECTED occurrence count (same conscious-decision contract):
-    #   similarity.py (r18): _ivf_rerank_arrow collects the density
-    #     count, the seed scan, and each Lloyd centroid update — all
-    #     dimension-sized (<= IVF_CELLS_MAX rows, the exact frames the
-    #     lazy path broadcasts), recomputed from parquet every call.
-    #     Eager like the iterative operators, after both exact pruning
-    #     bounds measured dead on this corpus. Its sf10 win is
-    #     unmeasured until the owed q128 before/after record lands.
+    #   similarity.py: ivf_rerank_topk_seeded collects the density
+    #     count, the seed scan and the Lloyd centroid update — all
+    #     dimension-sized (<= IVF_CELLS_MAX rows), recomputed from
+    #     parquet every call — so its two corpus x cells argmin scans
+    #     run as numpy matmuls over Arrow batches. Measured against the
+    #     lazy Catalyst fold it replaced (q128's arguments, local[4],
+    #     identical rows at every size; BENCH_NOTES.md):
+    #       vectors   Arrow     Catalyst   runs
+    #       2k        2.07 s    3.15 s     5 alternating reps
+    #       20k       4.16 s    29.0 s     5 alternating reps
+    #       200k      16.9 s    546.9 s    1 rep
     allowed_driver_eager = {"similarity.py": 3}
     eager_pat = re.compile(r"\.(count|first|collect|toPandas|head)\(\)")
     offenders = []
