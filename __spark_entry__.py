@@ -108,12 +108,8 @@ _CHANGED_IN_ROUND = {
     # r17 resumed session: q07 anti-join build side bounded by a
     # distinct key set (plan only, identity values):
     "q07_parts_never_ordered": 17,
-    # r17 cluster-fixpoint session memo (dedup.cluster_labels_plan) —
-    # same values, plans now read the shared checkpointed frames:
-    "q56_dedup_clusters": 17,
-    "q105_cluster_size_histogram": 17,
-    "q153_cluster_split": 17,
-    "q158_cluster_canonicals": 17,
+    # (r17 cluster-fixpoint session memo: q56/q105/q153/q158,
+    # superseded by their r18 entries below)
     # r17 simhash 16-sums-in-one-aggregate (bit-identical values):
     "q43_simhash": 17,
     # r17 q90 split hoisted out of the bigram lambda (identical):
@@ -151,6 +147,13 @@ _CHANGED_IN_ROUND = {
     "q129_source_lang_cap": 18,
     "q134_token_budget_mixture": 18,
     "q144_pagerank_copurchase": 18,
+    # after r18: connected components and pagerank finish graphs of at
+    # most LOCAL_FINISH_ROWS edges in numpy on the driver (same values;
+    # the cluster memo's build and q144's rounds changed):
+    "q56_dedup_clusters": 18,
+    "q105_cluster_size_histogram": 18,
+    "q153_cluster_split": 18,
+    "q158_cluster_canonicals": 18,
 }
 
 

@@ -17,9 +17,12 @@ data-sized join + one reduce.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import materialize as _mat
 from .materialize import materialize, session_memo, unpersist_materialized
 
 # Integer PageRank constants shared with plans/queries_ext8.pagerank_plan
@@ -35,15 +38,19 @@ def pagerank(
     dst: str = "v",
 ) -> DataFrame:
     """Integer PageRank over a DIRECTED edge list (symmetrize first for
-    undirected graphs). Returns (node, rank) for every node with at
-    least one outgoing edge.
+    undirected graphs). Returns (node, rank) for every node that
+    received a contribution in the last round, ids at ``dst``'s type.
 
     Each round: contribution = rank DIV out-degree, shipped along edges,
     reduced per target, damped with integer arithmetic — identical to
     the q144 recursion, so fixed-round results are bit-comparable. The
     adjacency is materialized once; each round's ranks are materialized
     (localCheckpoint; swap for checkpoint() on durable storage at
-    cluster scale), releasing the round they supersede.
+    cluster scale), releasing the round they supersede. When the
+    adjacency checkpoint observes at most
+    ``materialize.LOCAL_FINISH_ROWS`` edges, the adjacency is collected
+    and the same rounds run in numpy on the driver
+    (:func:`_pagerank_rounds`).
 
     ``n_iters`` must be >= 1: zero rounds would rank nothing."""
     if n_iters < 1:
@@ -68,47 +75,35 @@ def pagerank(
     # caller, or degrees silently inflate and ranks change.
     # Set order is storage-nondeterministic, which is safe: the only
     # consumer is an integer SUM, order-independent and exact.
-    #
-    # r18 (§2.3 narrower types): node ids are narrowed to INT for the
-    # whole iteration — the adjacency exchange's payload is the
-    # serialized partial SETS (UnsafeArrayData packs int elements in 4
-    # bytes vs 8), so the one edge-sized shuffle and every per-round
-    # explode move half the bytes. The guard raises loudly (never
-    # silently wraps) the moment an id leaves int range — at that scale
-    # drop the two casts, the recursion is width-agnostic. Ranks stay
-    # bigint throughout; ids round-trip int<->bigint exactly, so results
-    # are bit-identical (pinned by TestGraphPagerank). Each column is
-    # judged by its own type: an int src says nothing about dst.
-    out_type = edges.schema[src].dataType.simpleString()
-
-    def _as_int(c: str, source: str) -> Column:
-        col = F.col(c)
-        narrow = ("int", "smallint", "tinyint")
-        if edges.schema[source].dataType.simpleString() in narrow:
-            return col.alias(c)  # already narrow: no guard needed
-        return (
-            F.when(
-                (col >= F.lit(-2147483648)) & (col <= F.lit(2147483647)),
-                col.cast("int"),
-            )
-            .otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("pagerank: node id overflows int narrowing: "),
-                        col.cast("string"),
-                    )
-                )
-            )
-            .alias(c)
-        )
-
     adj, st = materialize(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .select(_as_int("u", src), _as_int("v", dst))
         .groupBy("u")
         .agg(F.collect_set("v").alias("_nb")),
         "u",
+        observe=[F.sum(F.size("_nb")).alias("n_edges")],
     )
+    if 0 < (st["n_edges"] or 0) <= _mat.LOCAL_FINISH_ROWS:
+        # Small graph: every round would cost only per-job overhead, so
+        # run the rounds on the driver (null ids never join a rank, so
+        # their rows contribute nothing in Spark either)
+        t = adj.where(F.col("u").isNotNull()).toArrow()
+        unpersist_materialized(adj)
+        nb = t["_nb"].combine_chunks()
+        offsets = nb.offsets.to_numpy()
+        node, rank = _pagerank_rounds(
+            t["u"].to_numpy(),
+            offsets - offsets[0],
+            nb.flatten().to_numpy(),
+            n_iters,
+        )
+        return edges.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "node": pa.array(node, nb.type.value_type),
+                    "rank": pa.array(rank, pa.int64()),
+                }
+            )
+        )
     # Per-round join pairs the adjacency against the NODE-sized ranks
     # table. materialize()'s LogicalRDD stats deliberately suppress
     # auto-broadcast, so gate an explicit hint on the node count the
@@ -141,13 +136,51 @@ def pagerank(
         if i == 0 and bcast_ok:
             # After round 1 ranks holds the reduce TARGETS (nodes with
             # in-edges), which on a sink-heavy directed graph can exceed
-            # the out-node count the gate measured (r16 ADVICE). The
-            # target set is identical every later round, so round 1's
-            # observed count re-gates all remaining broadcasts exactly.
+            # the out-node count the gate measured (r16 ADVICE). Later
+            # rounds rank the targets of a subset of sources, so the set
+            # only shrinks and round 1's observed count bounds every
+            # remaining broadcast.
             bcast_ok = st["n"] <= _BCAST_NODE_LIMIT
-    # undo the int narrowing at the boundary: callers see the input's
-    # node id type (the cast is exact — ids proved in-range above)
-    return ranks.select(F.col("node").cast(out_type).alias("node"), "rank")
+    return ranks
+
+
+def _pagerank_rounds(
+    u: np.ndarray, offsets: np.ndarray, dst: np.ndarray, n_iters: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(node, rank) after ``n_iters`` rounds of :func:`pagerank`'s
+    recursion over a CSR adjacency: source ``u[i]`` points to
+    ``dst[offsets[i]:offsets[i + 1]]`` (distinct targets). Same
+    semantics as the distributed join: round 1 ranks every source at
+    PR_SCALE, and a round's ranks are exactly the targets of the
+    sources ranked the round before, so a node with no in-edges stops
+    contributing after round 1. numpy wraps int64 silently where
+    Spark's ANSI bigint raises, so each round first checks the exact
+    rank total: every contribution is non-negative, so no per-target
+    ``85 * sum`` can exceed 85 times that total."""
+    limit = (2**63 - 1) // 85
+    deg = np.diff(offsets)
+    ids, idx = np.unique(
+        np.concatenate([u.astype(np.int64), dst.astype(np.int64)]),
+        return_inverse=True,
+    )
+    src_i, dst_i = idx[: len(u)], idx[len(u) :]
+    rank = np.zeros(len(ids), np.int64)
+    ranked = np.zeros(len(ids), bool)
+    rank[src_i], ranked[src_i] = PR_SCALE, True
+    for _ in range(n_iters):
+        if sum(rank[ranked].tolist()) > limit:
+            raise ArithmeticError(
+                "pagerank: rank total overflows 85 * rank in bigint"
+            )
+        live = np.repeat(ranked[src_i], deg)
+        c = np.repeat(rank[src_i] // np.maximum(deg, 1), deg)[live]
+        to = dst_i[live]
+        total = np.zeros(len(ids), np.int64)
+        np.add.at(total, to, c)
+        ranked = np.zeros(len(ids), bool)
+        ranked[to] = True
+        rank = np.where(ranked, PR_BASE + (85 * total) // 100, 0)
+    return ids[ranked].astype(dst.dtype), rank[ranked]
 
 
 def bfs_hops(edges: DataFrame, max_hops: int = 4) -> DataFrame:

@@ -57,6 +57,13 @@ from pyspark.sql import functions as F
 # row count risks unspillable pressure; below it, fewer tasks win.
 MAX_ROWS_PER_TASK = 5_000_000
 
+# Once a round's checkpoint observes at most this many edges, connected
+# components and pagerank collect the live graph and finish it exactly
+# in numpy on the driver (ARCHITECTURE.md, "Eager rounds"): 2M
+# (long, long) edges are 32 MB, the same order as the node tables CC
+# already broadcasts. Read at call time; 0 keeps every round distributed.
+LOCAL_FINISH_ROWS = 2_000_000
+
 
 def materialize(
     df: DataFrame,

@@ -117,16 +117,17 @@ _CMAX = similarity_ops.IVF_CELLS_MAX
     "identical in Spark and DuckDB), candidates indexed by refined "
     "cell, each query probes its nearest cells and exact-reranks "
     "only in-cell candidates to top-5. The cell/probe counts are "
-    "DENSITY-SCALED from a lazy one-row candidate count (cells ~ "
+    "DENSITY-SCALED from the candidate count, taken at build time (cells ~ "
     "sqrt(n_cand DIV 4) clamped to [16, 1024], probes = cells DIV 2 "
     "floored at 4 since r17 — constant probed fraction over ever-finer "
     "cells; the r16 1/4 fraction left recall@5 at 81.6%, the family's "
     "low bar, and the sf10 knob sweep showed the probe ring, not "
     "centroid quality, was the binding constraint: 1/2 measures 92% "
     "at +2.4 s because only probed-cell rows pay exact distance). "
-    "Every centroid frame is broadcast and the search "
-    "joins candidates to the BROADCAST probe frame — candidates are "
-    "never shuffled on the low-cardinality cell key. Closes the last "
+    "The seeds and the Lloyd centroids are collected at build time "
+    "(the corpus x cells argmin runs per Arrow batch in numpy) and the "
+    "search joins candidates to the BROADCAST probe frame — candidates "
+    "are never shuffled on the low-cardinality cell key. Closes the last "
     "ANN path without oracle evidence (ivf_topk is the KMeans-fit "
     "production twin, recall-tested).",
     tags=("similarity", "ann", "ivf", "ext"),

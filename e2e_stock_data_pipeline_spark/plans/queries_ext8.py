@@ -834,11 +834,13 @@ def pagerank_plan(li: DataFrame, n_iters: int = _PR_ITERS) -> DataFrame:
     "(match the engine's iteration, don't recompute reachability) "
     "applied to a numeric fixpoint. Deterministic top-100. Runs the "
     "materialized operators/graph.pagerank (adjacency checkpointed once, "
-    "each round's ranks checkpointed, releasing the round they supersede) — "
+    "each round's ranks checkpointed, releasing the round they supersede; "
+    "an adjacency of at most LOCAL_FINISH_ROWS edges runs its rounds in "
+    "numpy on the driver instead) — "
     "bit-equal to the lazy pagerank_plan unroll the oracle replays "
-    "(pinned by TestGraphPagerank), but each round is its own bounded "
-    "job, so late-session execution-memory pressure cannot starve the "
-    "overlapped unrolled stages (r13 sf10 smoke fix).",
+    "(pinned by TestGraphPagerank on both paths), but each round is its "
+    "own bounded job, so late-session execution-memory pressure cannot "
+    "starve the overlapped unrolled stages (r13 sf10 smoke fix).",
     tags=("graph", "iterative", "affinity", "topk"),
 )
 def q144_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:

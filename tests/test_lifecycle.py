@@ -171,24 +171,29 @@ def test_release_spares_live_cluster_memo(spark, sf_dir):
     registry.release(spark)
 
 
-def test_fresh_cluster_labels_plan_leaves_only_its_memo(spark):
+def test_fresh_cluster_labels_plan_leaves_only_its_memo(spark, monkeypatch):
     """A fresh build of the cluster memo adds exactly the persisted RDDs
     the memo entry holds (pairs and labels): connected components
-    releases its final edge set when it checkpoints the labels."""
+    releases its final edge set when it checkpoints the labels, whether
+    its tail runs distributed (bound 0) or on the driver."""
     from e2e_stock_data_pipeline_spark.operators import dedup
 
-    _drop("cluster_labels")
-    registry.release(spark)
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon zeta") for i in range(6)]
         + [(i, f"unique{i} text{i} body{i} words{i} here{i}") for i in range(6, 12)],
         ["doc_id", "text"],
     )
-    before = _persisted_ids(spark)
-    dedup.cluster_labels_plan(docs)
-    (held,) = [ids for k, (_v, ids, _s) in memo._MEMO.items() if k[1] == "cluster_labels"]
-    assert len(held) == 2
-    assert _persisted_ids(spark) - before == set(held)
+    for bound in (0, memo.LOCAL_FINISH_ROWS):
+        monkeypatch.setattr(memo, "LOCAL_FINISH_ROWS", bound)
+        _drop("cluster_labels")
+        registry.release(spark)
+        before = _persisted_ids(spark)
+        dedup.cluster_labels_plan(docs)
+        (held,) = [
+            ids for k, (_v, ids, _s) in memo._MEMO.items() if k[1] == "cluster_labels"
+        ]
+        assert len(held) == 2, bound
+        assert _persisted_ids(spark) - before == set(held), bound
     _drop("cluster_labels")
     registry.release(spark)
 
@@ -271,21 +276,38 @@ def _run_ivf(spark):
 
 
 @pytest.mark.parametrize(
-    "run",
-    [_run_cc, _run_pagerank, _run_bfs, _run_kcore, _run_coverage, _run_ivf],
+    "run, finish_bound",
+    [
+        (_run_cc, None),
+        (_run_cc, 0),
+        (_run_pagerank, None),
+        (_run_pagerank, 0),
+        (_run_bfs, None),
+        (_run_kcore, None),
+        (_run_coverage, None),
+        (_run_ivf, None),
+    ],
     ids=[
         "connected_components",
+        "connected_components_distributed",
         "pagerank",
+        "pagerank_distributed",
         "bfs_hops",
         "kcore_peel",
         "greedy_max_coverage",
         "ivf_rerank_seeded",
     ],
 )
-def test_eager_operator_leaves_only_what_backs_its_result(spark, run):
+def test_eager_operator_leaves_only_what_backs_its_result(
+    spark, monkeypatch, run, finish_bound
+):
     """Each round's checkpoint releases what it supersedes, so after the
     call (and a read of its result) the only new persisted RDDs are the
-    checkpoints the result's plan reads."""
+    checkpoints the result's plan reads. CC and pagerank run once with
+    the default driver finish and once (``LOCAL_FINISH_ROWS`` = 0) with
+    every round distributed."""
+    if finish_bound is not None:
+        monkeypatch.setattr(memo, "LOCAL_FINISH_ROWS", finish_bound)
     before = _persisted_ids(spark)
     result = run(spark)
     assert result.collect()

@@ -1084,8 +1084,20 @@ class TestIncrementalNearDup:
         ]
 
 
+def _finish_bounds(monkeypatch):
+    """Yield each graph tail in turn: ``LOCAL_FINISH_ROWS`` = 0 keeps
+    every round distributed, the default finishes small graphs on the
+    driver. The bound is a module constant read at call time."""
+    from e2e_stock_data_pipeline_spark.operators import materialize as mat
+
+    default = mat.LOCAL_FINISH_ROWS
+    for bound in (0, default):
+        monkeypatch.setattr(mat, "LOCAL_FINISH_ROWS", bound)
+        yield bound
+
+
 class TestConnectedComponents:
-    def test_known_clusters(self, spark):
+    def test_known_clusters(self, spark, monkeypatch):
         from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
 
         nodes = spark.createDataFrame([(i,) for i in range(8)], ["doc_id"])
@@ -1093,8 +1105,12 @@ class TestConnectedComponents:
         edges = spark.createDataFrame(
             [(0, 1), (1, 2), (2, 3), (4, 5)], ["doc_a", "doc_b"]
         )
-        got = {r.doc_id: r.cluster_id for r in connected_components(nodes, edges).collect()}
-        assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 6, 7: 7}
+        for bound in _finish_bounds(monkeypatch):
+            got = {
+                r.doc_id: r.cluster_id
+                for r in connected_components(nodes, edges).collect()
+            }
+            assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 6, 7: 7}, bound
 
     @staticmethod
     def _union_find(n, pairs):
@@ -1117,41 +1133,107 @@ class TestConnectedComponents:
             labels.setdefault(r, x)  # first x hitting r is the min (ascending scan)
         return {x: labels[find(x)] for x in range(n)}
 
-    def test_random_graphs_match_union_find(self, spark):
-        """Property: on arbitrary random graphs the distributed min-label
-        fixpoint equals a sequential union-find reference."""
+    def test_random_graphs_match_union_find(self, spark, monkeypatch):
+        """Property: on arbitrary random graphs the min-label fixpoint,
+        distributed or finished on the driver, equals a sequential
+        union-find reference."""
         import random
 
         from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
 
-        for seed in range(5):
-            rng = random.Random(seed)
-            n = rng.randint(5, 40)
-            m = rng.randint(0, 2 * n)
-            pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-            pairs = [(a, b) for a, b in pairs if a != b]
-            expect = self._union_find(n, pairs)
-            nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-            edges = spark.createDataFrame(pairs or [(0, 0)], ["doc_a", "doc_b"])
-            if not pairs:
-                edges = edges.limit(0)
-            got = {
-                r.doc_id: r.cluster_id
-                for r in connected_components(nodes, edges, max_iter=n + 1).collect()
-            }
-            assert got == expect, f"seed={seed} n={n} m={len(pairs)}"
+        for bound in _finish_bounds(monkeypatch):
+            for seed in range(5):
+                rng = random.Random(seed)
+                n = rng.randint(5, 40)
+                m = rng.randint(0, 2 * n)
+                pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+                pairs = [(a, b) for a, b in pairs if a != b]
+                expect = self._union_find(n, pairs)
+                nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
+                edges = spark.createDataFrame(pairs or [(0, 0)], ["doc_a", "doc_b"])
+                if not pairs:
+                    edges = edges.limit(0)
+                got = {
+                    r.doc_id: r.cluster_id
+                    for r in connected_components(
+                        nodes, edges, max_iter=n + 1
+                    ).collect()
+                }
+                assert got == expect, f"bound={bound} seed={seed} n={n} m={len(pairs)}"
 
-    def test_chain_graph_fast_convergence_and_budget_surfaces(self, spark):
+    def test_driver_finish_at_the_bound_matches_union_find(self, spark, monkeypatch):
+        """Old-vs-new equivalence right at the switch: with the bound set
+        to the edge count round 0's checkpoint observes (n), and to n - 1
+        and n + 1, the labels equal the union-find reference, and the
+        driver finish runs right after round 0 exactly when n <= bound."""
+        import random
+
+        from e2e_stock_data_pipeline_spark.operators import dedup
+        from e2e_stock_data_pipeline_spark.operators import materialize as mat
+
+        observed, finished = [], []
+        real_materialize, real_finish = dedup.materialize, dedup._driver_labels
+
+        def spy_materialize(df, *cols, **kw):
+            out, st = real_materialize(df, *cols, **kw)
+            if kw.get("observe"):  # the initial edge set and each round's
+                observed.append(st["n"])
+            return out, st
+
+        def spy_finish(e):
+            finished.append(len(observed))
+            return real_finish(e)
+
+        monkeypatch.setattr(dedup, "materialize", spy_materialize)
+        monkeypatch.setattr(dedup, "_driver_labels", spy_finish)
+        for seed in range(3):
+            rng = random.Random(100 + seed)
+            n = rng.randint(30, 60)
+            # a shuffled chain does not contract in one round; random
+            # chords on top vary the shape
+            order = rng.sample(range(n), n)
+            pairs = list(zip(order, order[1:]))
+            pairs += [tuple(rng.sample(range(n), 2)) for _ in range(n // 3)]
+            expect = self._union_find(n, pairs)
+            nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id: long")
+            edges = spark.createDataFrame(pairs, "doc_a: long, doc_b: long")
+
+            def run(bound):
+                observed.clear()
+                finished.clear()
+                monkeypatch.setattr(mat, "LOCAL_FINISH_ROWS", bound)
+                got = {
+                    r.doc_id: r.cluster_id
+                    for r in dedup.connected_components(nodes, edges).collect()
+                }
+                assert got == expect, f"seed={seed} bound={bound}"
+
+            run(0)
+            assert not finished and len(observed) > 2, "round 0 converged"
+            round0 = observed[1]
+            for bound, finish_after_round0 in (
+                (round0 - 1, False),
+                (round0, True),
+                (round0 + 1, True),
+            ):
+                run(bound)
+                assert (finished[:1] == [2]) == finish_after_round0, (seed, bound)
+                assert len(finished) <= 1
+
+    def test_chain_graph_fast_convergence_and_budget_surfaces(self, spark, monkeypatch):
         """Large-star/small-star contracts a chain in O(log^2 n) rounds,
         NOT O(diameter): a 120-node chain (which min-label propagation
         would need ~119 rounds for) must solve well inside the default
         20-round budget. An absurdly small budget must still RAISE
         (partial labels are wrong labels), and strict=False must opt in
-        to one-row-per-node partial labels."""
+        to one-row-per-node partial labels. Run with every round
+        distributed: the budget only binds there."""
         import pytest
 
+        from e2e_stock_data_pipeline_spark.operators import materialize as mat
         from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
 
+        monkeypatch.setattr(mat, "LOCAL_FINISH_ROWS", 0)
         n = 120
         nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
         edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"])
@@ -1167,6 +1249,33 @@ class TestConnectedComponents:
         partial = connected_components(nodes, edges, max_iter=1, strict=False)
         assert partial.count() == n
         assert partial.select("doc_id").distinct().count() == n
+
+    def test_chain_finishes_exactly_on_the_driver_within_one_round(self, spark):
+        """At the default bound the 120-node chain's first round leaves
+        a small edge set, which the driver labels exactly: max_iter=1
+        is enough."""
+        from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
+
+        n = 120
+        nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
+        edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"])
+        got = {
+            r.doc_id: r.cluster_id
+            for r in connected_components(nodes, edges, max_iter=1).collect()
+        }
+        assert got == {i: 0 for i in range(n)}
+
+    def test_min_labels_is_the_component_minimum(self):
+        from e2e_stock_data_pipeline_spark.operators.dedup import _min_labels
+
+        # {3, 9, 40} via a path through the largest id, {7, 8}; ids are
+        # sparse and unsorted so index order must be id order
+        u = np.array([40, 9, 8], np.int64)
+        v = np.array([3, 40, 7], np.int64)
+        nodes, labels = _min_labels(u, v)
+        assert dict(zip(nodes.tolist(), labels.tolist())) == {
+            3: 3, 9: 3, 40: 3, 7: 7, 8: 7
+        }
 
 
 class TestAsofForward:
@@ -2069,7 +2178,7 @@ class TestHeavyHitters:
 
 
 class TestGraphPagerank:
-    def test_operator_bit_equal_to_lazy_unroll(self, spark):
+    def test_operator_bit_equal_to_lazy_unroll(self, spark, monkeypatch):
         """operators/graph.pagerank (materialized per round, production
         form) must reproduce plans/queries_ext8.pagerank_plan (lazy
         3-round unroll, oracle form) bit-for-bit at the same round count."""
@@ -2090,29 +2199,24 @@ class TestGraphPagerank:
         # (distinct=False since r17: pagerank's collect_set adjacency
         # dedups identically, the pair-level DISTINCT was a redundant
         # exchange), so this bit-equality pin covers the exact
-        # registered path...
+        # registered path, distributed and finished on the driver...
         edges = copurchase_sym_edges(li, distinct=False)
-        got = [
-            tuple(r)
-            for r in pagerank(edges, n_iters=_PR_ITERS)
-            .select(F.col("node").alias("part_id"), F.col("rank").alias("pagerank"))
-            .orderBy(F.col("pagerank").desc(), "part_id")
-            .limit(100)
-            .collect()
-        ]
-        assert got == want
 
-        # the distinct and non-distinct inputs must yield the same
-        # ranks (the set-equality argument behind the r17 change)
-        got_distinct = [
-            tuple(r)
-            for r in pagerank(copurchase_sym_edges(li), n_iters=_PR_ITERS)
-            .select(F.col("node").alias("part_id"), F.col("rank").alias("pagerank"))
-            .orderBy(F.col("pagerank").desc(), "part_id")
-            .limit(100)
-            .collect()
-        ]
-        assert got_distinct == want
+        def top(edge_frame):
+            return [
+                tuple(r)
+                for r in pagerank(edge_frame, n_iters=_PR_ITERS)
+                .select(F.col("node").alias("part_id"), F.col("rank").alias("pagerank"))
+                .orderBy(F.col("pagerank").desc(), "part_id")
+                .limit(100)
+                .collect()
+            ]
+
+        for bound in _finish_bounds(monkeypatch):
+            assert top(edges) == want, bound
+            # the distinct and non-distinct inputs must yield the same
+            # ranks (the set-equality argument behind the r17 change)
+            assert top(copurchase_sym_edges(li)) == want, bound
 
         # ...which makes the helper itself a shared blind spot (a bug in
         # it would hit both sides identically). Cross-check the edge SET
@@ -2141,16 +2245,100 @@ class TestGraphPagerank:
         with pytest.raises(ValueError):
             pagerank(edges, n_iters=0)
 
-    def test_bigint_dst_is_guarded_when_src_is_int(self, spark):
-        """The int narrowing guard is decided per column: an int src
-        must not waive the overflow check on a bigint dst."""
+    @staticmethod
+    def _reference(pairs, n_iters):
+        """{node: rank} by the recursion's definition, in plain Python:
+        edges are a set, round 1 ranks every source, later rounds rank
+        the targets of the sources ranked before."""
+        from e2e_stock_data_pipeline_spark.operators.graph import PR_BASE, PR_SCALE
+
+        out = {}
+        for a, b in set(pairs):
+            if a is not None:  # a NULL source never joins a rank
+                out.setdefault(a, set()).add(b)
+        rank = {a: PR_SCALE for a in out}
+        for _ in range(n_iters):
+            total = {}
+            for a, r in rank.items():
+                for b in out.get(a, ()):
+                    total[b] = total.get(b, 0) + r // len(out[a])
+            rank = {b: PR_BASE + (85 * t) // 100 for b, t in total.items()}
+        return rank
+
+    def _both_paths(self, spark, monkeypatch, edges, n_iters):
         from e2e_stock_data_pipeline_spark.operators.graph import pagerank
 
-        edges = spark.createDataFrame(
-            [(1, 2**31), (2, 1)], "u int, v bigint"
+        got = {}
+        for bound in _finish_bounds(monkeypatch):
+            out = pagerank(edges, n_iters=n_iters)
+            got[bound] = (out.dtypes, {r.node: r.rank for r in out.collect()})
+        return list(got.values())
+
+    def test_wide_ids_rank_on_both_paths(self, spark, monkeypatch):
+        """Ids at and above 2^31 keep their bigint type and rank exactly
+        on both paths: nothing narrows them."""
+        base = 2**31
+        pairs = [(base, base + 7), (base + 7, 1), (1, base), (2**40, base),
+                 (base + 7, 2**40)]
+        edges = spark.createDataFrame(pairs, "u bigint, v bigint")
+        want = self._reference(pairs, 3)
+        assert max(want) >= 2**31
+        for dtypes, got in self._both_paths(spark, monkeypatch, edges, 3):
+            assert dtypes == [("node", "bigint"), ("rank", "bigint")]
+            assert got == want
+
+    def test_random_directed_graphs_match_on_both_paths(self, spark, monkeypatch):
+        """Old-vs-new equivalence on directed multigraphs with sources
+        that have no in-edges (they stop contributing after round 1),
+        sinks, nodes that drop out of later rounds and a NULL source;
+        plus the empty graph."""
+        import random
+
+        for seed in range(4):
+            rng = random.Random(seed)
+            n = rng.randint(6, 30)
+            pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(2 * n)]
+            pairs = [(a, b) for a, b in pairs if a != b]
+            pairs += [(n, 0), (n + 1, n)]  # a source chain into the graph
+            pairs += pairs[:3]  # parallel edges carry no weight
+            pairs += [(None, 0)]
+            edges = spark.createDataFrame(pairs, "u int, v int")
+            n_iters = rng.randint(1, 5)
+            want = self._reference(pairs, n_iters)
+            for dtypes, got in self._both_paths(spark, monkeypatch, edges, n_iters):
+                assert dtypes == [("node", "int"), ("rank", "bigint")]
+                assert got == want, f"seed={seed}"
+        empty = spark.createDataFrame([], "u bigint, v bigint")
+        for _dtypes, got in self._both_paths(spark, monkeypatch, empty, 2):
+            assert got == {}
+
+    def test_rank_rounds_refuse_to_wrap_int64(self, monkeypatch):
+        """numpy would wrap 85 * sum silently: the driver rounds check
+        the exact rank total before each round and raise instead."""
+        from e2e_stock_data_pipeline_spark.operators import graph
+
+        limit = (2**63 - 1) // 85
+        u = np.array([1, 2], np.int64)
+        offsets = np.array([0, 1, 2], np.int64)
+        dst = np.array([3, 3], np.int64)
+        monkeypatch.setattr(graph, "PR_SCALE", limit // 2)  # total <= limit
+        node, rank = graph._pagerank_rounds(u, offsets, dst, 1)
+        assert node.tolist() == [3]
+        assert rank.tolist() == [graph.PR_BASE + (85 * 2 * (limit // 2)) // 100]
+        monkeypatch.setattr(graph, "PR_SCALE", limit // 2 + 1)  # total > limit
+        with pytest.raises(ArithmeticError):
+            graph._pagerank_rounds(u, offsets, dst, 1)
+
+    def test_copurchase_part_key_overflow_raises(self, spark):
+        """The int narrowing in copurchase_sym_edges(distinct=False) is
+        q144's only one, so its guard must raise on a wide part key."""
+        from e2e_stock_data_pipeline_spark.plans.queries_ext8 import copurchase_sym_edges
+
+        li = spark.createDataFrame(
+            [(1, 5), (1, 2**31), (2, 5)], "l_orderkey bigint, l_partkey bigint"
         )
-        with pytest.raises(Exception, match="overflows int narrowing"):
-            pagerank(edges, n_iters=1).collect()
+        with pytest.raises(Exception, match="copurchase_sym_edges: part key overflows int"):
+            copurchase_sym_edges(li, distinct=False).collect()
 
 
 class TestSaltedGroupTopk:
