@@ -669,14 +669,16 @@ def _driver_labels(e: DataFrame) -> DataFrame:
     )
 
 
+# Star-round budget of connected_components, read at call time. The
+# rounds are O(log^2 n), so running out means a pathological input:
+# the call raises instead of returning partial labels.
+CC_MAX_ROUNDS = 20
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 20,
-    strict: bool = True,
-    assume_canonical: bool = False,
-    pre_materialized: bool = False,
 ) -> DataFrame:
     """Cluster ids for an undirected pair graph: each node labeled with the
     minimum node id reachable from it.
@@ -690,7 +692,17 @@ def connected_components(
     here both shrinks the edge set (edges contract toward component
     minima) and runs in a constant number of shuffles.
 
-    One round over the current edge set E (kept deduped, no self-loops):
+    ``edges`` is (doc_a, doc_b) and may be a multiset: duplicate,
+    reversed and self-loop pairs are allowed, since the first round's
+    output is deduped and loop-free. Round 0 reads ``edges`` twice (the
+    per-node min build and the reconnect probe) through a plain
+    projection, so a large edge set should arrive as a checkpoint
+    (operators/materialize.py): a lazy input re-runs its whole upstream
+    plan per read (measured at sf10, r12: >1200 s lazy vs 284 s
+    checkpointed).
+
+    One round over the current edge set E (oriented child > parent, no
+    self-loops; deduped from round 0's output on):
 
     * large-star — over the symmetric neighbor view, each node u computes
       m(u) = min(N(u) + {u}) and reconnects every STRICTLY LARGER
@@ -714,10 +726,10 @@ def connected_components(
       graph the overwhelming majority of docs are singletons and are
       attached by one final left join, so per-round data is O(|E|), not
       O(|corpus|);
-    * the initial edge set and each round's output are materialized with
-      spill-safe DISK_ONLY storage + sized re-widening
-      (operators/materialize.py) so lineage stays flat; at cluster scale
-      swap in checkpoint() on durable storage;
+    * each round's output is materialized with spill-safe DISK_ONLY
+      storage + sized re-widening (operators/materialize.py) so lineage
+      stays flat; at cluster scale swap in checkpoint() on durable
+      storage;
     * when the node universe is small enough (_BCAST_NODE_LIMIT), the
       per-node min tables broadcast, making a round broadcast joins +
       ONE shuffle (the output dedup); otherwise shuffle joins, with the
@@ -731,45 +743,26 @@ def connected_components(
       cost only fixed per-job overhead: the edge set is collected and
       labeled exactly by a numpy union-find on the driver
       (:func:`_min_labels`), with no exit star check and no
-      ``max_iter`` budget left to exhaust. Round 0 always runs
+      ``CC_MAX_ROUNDS`` budget left to exhaust. Round 0 always runs
       distributed.
+
+    Raises RuntimeError when ``CC_MAX_ROUNDS`` rounds end short of the
+    fixpoint: partial labels may split a component.
     """
     import os
     import time as _time
 
     spark = edges.sparkSession
-    canon = edges.select(
+    max_rounds = CC_MAX_ROUNDS
+    e = edges.select(
         F.greatest("doc_a", "doc_b").alias("u"),
         F.least("doc_a", "doc_b").alias("v"),
     ).where(F.col("u") != F.col("v"))
-    if not assume_canonical:
-        # ``assume_canonical=True`` is the caller's attestation that the
-        # pair set is already deduped with doc_a != doc_b (true for
-        # lsh_candidate_pairs, which ends in a distinct) — skipping this
-        # re-dedup saves one full-edge-set shuffle (~15% of the sf10
-        # closure's wall)
-        canon = canon.distinct()
-    # The initial edge set IS materialized, deliberately: round 0 consumes
-    # it twice (the per-node min build and the reconnect probe), and a
-    # lazy input was MEASURED far worse at sf10 (r12: >1200 s vs 284 s) —
-    # AQE stage reuse shares the upstream exchange, but every consumer
-    # re-runs the banding pipeline's final distinct aggregate over the
-    # 336M-row shuffle, and the round-0 width override bloats the
-    # upstream pipeline's own exchanges. Writing the 5.4 GB of DISK_ONLY
-    # blocks once is the cheaper trade. widen=False: every round-0
-    # consumer re-exchanges at the conf width anyway, so the re-widen's
-    # second checkpoint write + full shuffle buys nothing here.
-    # ``pre_materialized=True`` is the caller's attestation that
-    # ``edges`` is ALREADY checkpointed blocks (a query that also feeds
-    # the pair set to other consumers materializes it once at its own
-    # level); round 0 then iterates the cheap projection directly — the
-    # lazy-plan hazard documented above doesn't apply to block re-reads.
-    # Its signature costs one scan; being a projection, no round releases it.
-    if pre_materialized:
-        e = canon
-        st = e.agg(F.count(F.lit(1)).alias("n"), _edge_hash()).collect()[0]
-    else:
-        e, st = materialize(canon, "u", widen=False, observe=[_edge_hash()])
+    # Duplicates in ``edges`` only make this first signature differ from
+    # round 0's deduped output (one more round at worst): the exit star
+    # check, not the signature, proves the fixpoint. Being a projection,
+    # no round releases it.
+    st = e.agg(F.count(F.lit(1)).alias("n"), _edge_hash()).collect()[0]
     prev_sig = (st["n"], st["h"])
     # Dense near-dup graphs have FAR fewer nodes than edges (sf10: 500k
     # docs, 336M candidate pairs): when the per-node min table fits a
@@ -799,7 +792,7 @@ def connected_components(
     # doesn't need, so over-providing is one cheap config write per round.
     old_width = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        for _round in range(max_iter):
+        for _round in range(max_rounds):
             if converged:
                 break
             _t0 = _time.perf_counter()
@@ -907,21 +900,17 @@ def connected_components(
             .count()
         )
         converged = not_star == 0
-    if not converged and strict:
+    if not converged:
         # partial labels are WRONG labels (an unconverged edge set may
         # still split one component) — surface it instead of returning
         raise RuntimeError(
-            f"connected_components did not converge in max_iter={max_iter} "
-            "star rounds (pathological for this algorithm — rounds are "
-            "O(log^2 n), not O(diameter)); raise max_iter or pass "
-            "strict=False to accept partial labels"
+            f"connected_components did not converge in {max_rounds} star "
+            "rounds (pathological for this algorithm — rounds are "
+            "O(log^2 n), not O(diameter)); raise dedup.CC_MAX_ROUNDS"
         )
     if labels is None:
         # at the fixpoint E is min-rooted stars: each non-root node
-        # appears exactly once as u with v = its component minimum (the
-        # min-agg is a no-op there; under strict=False it collapses an
-        # unconverged node's multiple parents to one partial label
-        # instead of duplicating rows)
+        # appears exactly once as u with v = its component minimum
         labels = e.groupBy("u").agg(F.min("v").alias("label"))
     out = nodes.select(F.col(id_col)).join(
         labels.select(F.col("u").alias(id_col), "label"),
@@ -984,11 +973,5 @@ def _cluster_labels(docs: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]
     )
     # CC returns its labels checkpointed: memo hits read label blocks
     # directly instead of re-joining the final star edge set
-    labels = connected_components(
-        docs.select(id_col),
-        pairs,
-        id_col=id_col,
-        assume_canonical=True,
-        pre_materialized=True,
-    )
+    labels = connected_components(docs.select(id_col), pairs, id_col=id_col)
     return pairs, labels

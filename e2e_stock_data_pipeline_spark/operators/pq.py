@@ -1,38 +1,30 @@
 """Product quantization (PQ) ANN [EXT] — the memory-bound scale path
 for embedding search: candidates compress from d floats to m small
-codes (here m bytes), and query-time distance is a table lookup, not a
-dot product.
+codes, and query-time distance is a table lookup, not a dot product.
 
 At 100 TB of embeddings the working set, not compute, is the binding
-constraint; PQ shrinks a 64-dim float vector 32x so the scan stage
+constraint; PQ shrinks a 64-dim vector to m codes so the scan stage
 streams codes while each query carries a tiny (m x k) distance lookup
-table. Everything here is DataFrame-shaped:
+table. :func:`pq_rerank_topk_seeded` (q123) is the one operator, one
+lazy Catalyst plan end to end:
 
-* codebooks: one KMeans per subspace, fit driver-side on a (sampled)
-  candidate set — the classic train-on-sample trade (same as IVF,
-  operators/similarity.py:ivf_topk);
-* encode: argmin over k centroid distances per subspace as pure
-  Catalyst expressions (no UDF) — ties break to the first index,
-  deterministic;
-* search (ADC): the per-query LUT is |Q| x m x k rows built by joining
-  the query's subvectors against the broadcast codebook table; the
-  candidate side explodes to (cand, subspace, code) and joins the LUT
-  on (subspace, code) — one broadcast join + one groupBy(query, cand),
-  never a full-vector product against the candidate table.
+* codebook: centroid c of subspace j is the j-th subvector of the
+  c-th-smallest-id candidate (a deterministic sample codebook, KMeans
+  iteration zero), so no fit job runs and an SQL oracle replays it;
+* encode: argmin over the centroids per (candidate, subspace) as pure
+  Catalyst expressions (no UDF), ties to the smaller centroid index;
+* search (ADC): the per-query LUT is |Q| x m x k rows, broadcast to
+  the code scan, which joins it on (subspace, code) and sums per
+  (query, candidate) — never a full-vector product against the
+  candidate table;
+* rerank: only the shortlist survivors pay an exact integer distance.
 
-Approximation contract: PQ distances are reconstructions, so top-k is
-approximate; recall is tested against brute force on planted
-duplicates (tests/test_operators.py). Rerank survivors with
-operators/similarity.brute_force_topk when exactness matters.
-
-Measured regime note (sf0.01 embeddings, m=8, k=16): on clustered /
-near-duplicate data (the dedup use) top-1 recall is >= 80%; on
-near-uniform data where the true NN is barely closer than the median
-candidate (rank-1 d2 ~1.3 vs median ~2.0 here), quantization error
-rivals the neighbor gap and PQ must run as a SHORTLIST stage — top-10
-catches 5/10 exact-NNs, top-50 8/10 — followed by exact rerank of the
-shortlist. That two-stage shape (code scan -> rerank ~0.1% of corpus)
-is the standard production deployment and the one the e2e check runs.
+Approximation contract: ADC distances are reconstructions, so the
+shortlist is approximate; recall against brute force is tested in
+tests/test_operators.py. On near-uniform data, where the true NN is
+barely closer than the median candidate, quantization error rivals the
+neighbour gap, which is why PQ runs as a SHORTLIST stage followed by
+exact rerank — the standard production deployment.
 """
 
 from __future__ import annotations
@@ -47,113 +39,6 @@ from .similarity import dot_q, quantized
 # level so the registered q123 call AND its DuckDB oracle f-string
 # reference the same constant and cannot drift (ADVICE r15).
 SHORTLIST_SCALE_DIV = 16
-
-
-def _subvec(vec_col: str, j: int, dsub: int):
-    return F.slice(F.col(vec_col).cast("array<double>"), j * dsub + 1, dsub)
-
-
-def _dist2(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def pq_fit_codebooks(
-    candidates: DataFrame,
-    vec_col: str = "embedding",
-    m: int = 8,
-    k: int = 16,
-    seed: int = 7,
-    dim: int | None = None,
-) -> list[list[list[float]]]:
-    """Fit m per-subspace KMeans codebooks of k centroids each.
-
-    Returns codebooks[j][c] = centroid vector (d/m floats). The fits run
-    over the candidate table (sample it upstream at scale); model state
-    is tiny (m * k * d/m floats = d * k) and travels as literals.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    if dim is None:
-        dim = len(candidates.select(vec_col).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    dsub = dim // m
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        sub = candidates.select(array_to_vector(_subvec(vec_col, j, dsub)).alias("_v"))
-        model = KMeans(k=k, seed=seed + j, featuresCol="_v").fit(sub)
-        books.append([[float(x) for x in c] for c in model.clusterCenters()])
-    return books
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int> of length m): nearest centroid per subspace."""
-    m, k, dsub = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
-    codes = []
-    for j in range(m):
-        dists = F.array(
-            *[
-                _dist2(_subvec(vec_col, j, dsub), F.array(*[F.lit(x) for x in codebooks[j][c]]))
-                for c in range(k)
-            ]
-        )
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
-    return df.select(F.col(id_col), F.array(*codes).alias("codes"))
-
-
-def pq_topk(
-    queries: DataFrame,
-    encoded_candidates: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k_top: int = 5,
-) -> DataFrame:
-    """Asymmetric-distance top-k: per-query LUT join against codes.
-
-    Returns (query_id, cand_id, adc_dist2, rnk). The LUT side is
-    |Q| * m * k rows (broadcast); the candidate side is |C| * m rows of
-    (subspace, code) — the scan never touches a float vector.
-    """
-    m, k, dsub = len(codebooks), len(codebooks[0]), len(codebooks[0][0])
-    spark = queries.sparkSession
-    book = spark.createDataFrame(
-        [(j, c, codebooks[j][c]) for j in range(m) for c in range(k)],
-        "j int, c int, cent array<double>",
-    )
-    qsub = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}), "
-                f"j -> slice(CAST({vec_col} AS ARRAY<DOUBLE>), j * {dsub} + 1, {dsub}))"
-            )
-        ).alias("j", "qsub"),
-    )
-    lut = qsub.join(F.broadcast(book), "j").select(
-        "query_id", "j", "c", _dist2(F.col("qsub"), F.col("cent")).alias("d2")
-    )
-    cand = encoded_candidates.select(
-        F.col(id_col).alias("cand_id"), F.posexplode("codes").alias("j", "c")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist2"), F.col("cand_id"))
-    return (
-        cand.join(F.broadcast(lut), ["j", "c"])
-        .groupBy("query_id", "cand_id")
-        .agg(F.sum("d2").alias("adc_dist2"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k_top)
-    )
 
 
 def _d2_q(a, b):
@@ -183,8 +68,7 @@ def pq_rerank_topk_seeded(
     The production two-stage ANN composition (see module docstring): an
     ADC scan over m-byte codes shortlists `shortlist` candidates per
     query, then only those survivors pay an exact full-vector distance.
-    Unlike :func:`pq_fit_codebooks` (driver-side KMeans), the codebook
-    here is DATA-DERIVED INSIDE THE PLAN: centroid c of subspace j is
+    The codebook is DATA-DERIVED INSIDE THE PLAN: centroid c of subspace j is
     the j-th subvector of the c-th-smallest-id candidate (a deterministic
     sample codebook ~ KMeans iteration zero). That keeps the whole chain
     one lazy Catalyst plan — no fit job, no literals — and lets a SQL
@@ -207,9 +91,8 @@ def pq_rerank_topk_seeded(
     A fixed FRACTION is the honest operating point for THIS codebook:
     the 16-seed sampled codebook's distortion does not improve with
     corpus size, so a fixed-count shortlist must lose recall as density
-    grows. At true 100 TB scale, swap in a trained codebook
-    (pq_fit_codebooks) and a fixed-count shortlist; pass None to
-    disable scaling.
+    grows. At true 100 TB scale a trained codebook would allow a
+    fixed-count shortlist; pass None to disable scaling.
 
     Returns (query_id, cand_id, adc_dist2, exact_d2, rnk) — all bigint
     but the int rnk; ties break on cand_id everywhere.

@@ -1,9 +1,11 @@
 """Similarity search over embedding columns [EXT].
 
-Brute-force cosine top-k is the correctness baseline; the LSH-bucketed
-variant (random-hyperplane signs -> bucket join) is the 100 TB path:
-signatures are per-row transforms (no shuffle) and the candidate join
-shuffles only on bucket key, never materializing the n^2 pair matrix.
+Brute-force cosine top-k is the correctness baseline. The scale paths
+are LSH-blocked near-dup (random-hyperplane signs -> bucket join:
+signatures are per-row transforms, no shuffle, and the candidate join
+shuffles only on bucket key, never materializing the n^2 pair matrix)
+and the seeded IVF probe -> exact rerank (q128); operators/pq.py holds
+the PQ shortlist -> rerank (q123).
 
 Numeric parity design: cosine is computed over vectors QUANTIZED to
 integers (floor(x * 10000) per component). Integer dot products are
@@ -161,66 +163,6 @@ def hyperplane_lsh_buckets(
     )
 
 
-def ann_topk_lsh(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_planes: int = 8,
-    seed: int = 13,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: LSH bucket join -> exact cosine rerank within
-    buckets. The scale path: candidate pairing shuffles on `bucket`
-    (cardinality 2^n_planes), never the full cross product. Recall is
-    tunable via n_planes (fewer planes -> bigger buckets -> higher
-    recall, more compute); multi-probe = union over several seeds.
-    """
-    qb = hyperplane_lsh_buckets(queries, id_col, vec_col, n_planes, seed, dim)
-    cb = hyperplane_lsh_buckets(candidates, id_col, vec_col, n_planes, seed, dim)
-    q = with_quantized_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("_q").alias("_qq"), F.col("_nn").alias("_qn")
-    ).join(qb.select(F.col(id_col).alias("query_id"), "bucket"), "query_id")
-    c = with_quantized_norm(candidates, vec_col).select(
-        F.col(id_col).alias("cand_id"), F.col("_q").alias("_cq"), F.col("_nn").alias("_cn")
-    ).join(cb.select(F.col(id_col).alias("cand_id"), "bucket"), "cand_id")
-    cos = cosine_q(F.col("_qq"), F.col("_cq"), F.col("_qn"), F.col("_cn"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        q.join(c, "bucket")
-        .select("query_id", "cand_id", cos.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
-
-
-def multiprobe_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str | None = None,
-    threshold: float = 0.2,
-    n_planes: int = 4,
-    seeds: Sequence[int] = (13, 99, 7),
-    dim: int | None = None,
-) -> DataFrame:
-    """Multi-probe form of lsh_blocked_neardup_pairs: union the blocked
-    pairs over several independent hyperplane families and dedup. Each
-    extra seed multiplies the chance that a truly-similar pair collides
-    in at least one family (recall 1-(1-p)^s for per-family collision
-    p), while precision stays 1 — every emitted pair still passes the
-    exact cosine threshold. The scale shape is unchanged: s bucketed
-    self-joins, never an all-pairs product."""
-    out = None
-    for s in seeds:
-        part = lsh_blocked_neardup_pairs(
-            df, id_col, vec_col, label_col, threshold, n_planes, s, dim
-        )
-        out = part if out is None else out.unionByName(part)
-    return out.dropDuplicates(["vec_a", "vec_b"])
-
-
 def lsh_blocked_neardup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -230,150 +172,55 @@ def lsh_blocked_neardup_pairs(
     n_planes: int = 4,
     seed: int = 13,
     dim: int | None = None,
-    density_scaled: bool = False,
 ) -> DataFrame:
-    """Near-dup pairs blocked on (LSH bucket [, label]) — the scale path
-    for q50-style cosine near-dup. The within-label all-pairs join is
-    n^2/L when labels are few; composing the hyperplane bucket into the
-    blocking key multiplies the block count by 2^n_planes, so per-block
-    pair work shrinks by ~4^n_planes while same-bucket probability for
-    truly similar vectors stays high ((1 - theta/pi)^n_planes).
+    """Near-dup pairs blocked on (LSH band, bucket [, label]) — the scale
+    path for q50-style cosine near-dup. The within-label all-pairs join
+    is n^2/L when labels are few; composing hyperplane buckets into the
+    blocking key shrinks per-block pair work while same-bucket
+    probability for truly similar vectors stays high
+    ((1 - theta/pi)^planes per band).
 
-    With ``density_scaled=True`` (r16) the fixed single table becomes
-    the banded density-scaled geometry (embed_band_params over the
-    corpus count, ``n_planes`` as the base): per-band bucket population
-    stays ~EMBED_DENSITY_DIV rows however big the corpus, so in-block
-    pair volume no longer grows n^2/2^base — the same fix shape as the
-    incremental embedding near-dup, and bit-unchanged below the
-    640-row density floor where the geometry reduces to the legacy
-    single band.
+    The bucket tables are the banded density-scaled geometry
+    (embed_band_params over the corpus count, ``n_planes`` as the base):
+    per-band bucket population stays ~EMBED_DENSITY_DIV rows however big
+    the corpus, so in-block pair volume does not grow n^2/2^base — the
+    same fix shape as the incremental embedding near-dup. Below the
+    640-row density floor the geometry is one ``n_planes``-plane table
+    (hyperplane_lsh_buckets' buckets; tests pin the equality).
 
     Output is a SUBSET of the exact pairs (precision 1 at the same
     threshold); recall is the tunable (extra bands raise it where a
     deeper single table would cut it). Returns (vec_a, vec_b, cos_sim).
     """
     keep = [label_col] if label_col else []
-    if density_scaled:
-        params = embed_band_params(df, n_planes)
-        bk = banded_hyperplane_buckets(
-            df, params, id_col, vec_col, seed, dim, n_planes, keep_cols=keep
-        )
-        keys = ["_band", "_bucket", *keep]
-        a = bk.select(F.col(id_col).alias("vec_a"), *keys)
-        c = bk.select(F.col(id_col).alias("vec_b"), *keys)
-        cand = (
-            a.join(c, keys)
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b")
-            .distinct()  # a close pair collides in several bands
-        )
-        n = with_quantized_norm(df, vec_col)
-        qa = n.select(
-            F.col(id_col).alias("vec_a"),
-            F.col("_q").alias("_qa"), F.col("_nn").alias("_na"),
-        )
-        qb = n.select(
-            F.col(id_col).alias("vec_b"),
-            F.col("_q").alias("_qb"), F.col("_nn").alias("_nb"),
-        )
-        cos = cosine_q(F.col("_qa"), F.col("_qb"), F.col("_na"), F.col("_nb"))
-        return (
-            cand.join(qa, "vec_a")
-            .join(qb, "vec_b")
-            .select("vec_a", "vec_b", cos.alias("cos_sim"))
-            .filter(F.col("cos_sim") >= threshold)
-        )
-    b = hyperplane_lsh_buckets(df, id_col, vec_col, n_planes, seed, dim)
-    e = with_quantized_norm(df, vec_col).join(b, id_col)
-    keys = ["bucket", *keep]
-    a = e.select(
-        F.col(id_col).alias("vec_a"), *keys,
+    params = embed_band_params(df, n_planes)
+    bk = banded_hyperplane_buckets(
+        df, params, id_col, vec_col, seed, dim, n_planes, keep_cols=keep
+    )
+    keys = ["_band", "_bucket", *keep]
+    a = bk.select(F.col(id_col).alias("vec_a"), *keys)
+    c = bk.select(F.col(id_col).alias("vec_b"), *keys)
+    cand = (
+        a.join(c, keys)
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .distinct()  # a close pair collides in several bands
+    )
+    n = with_quantized_norm(df, vec_col)
+    qa = n.select(
+        F.col(id_col).alias("vec_a"),
         F.col("_q").alias("_qa"), F.col("_nn").alias("_na"),
     )
-    c = e.select(
-        F.col(id_col).alias("vec_b"), *keys,
+    qb = n.select(
+        F.col(id_col).alias("vec_b"),
         F.col("_q").alias("_qb"), F.col("_nn").alias("_nb"),
     )
     cos = cosine_q(F.col("_qa"), F.col("_qb"), F.col("_na"), F.col("_nb"))
     return (
-        a.join(c, keys)
-        .filter(F.col("vec_a") < F.col("vec_b"))
+        cand.join(qa, "vec_a")
+        .join(qb, "vec_b")
         .select("vec_a", "vec_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    seed: int = 7,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: KMeans partitions candidates into cells;
-    each query probes its n_probe nearest cells and reranks exactly.
-
-    The index build is one ML fit over the candidate table; search
-    shuffles on `_cell` only. Compared to hyperplane LSH, IVF adapts to
-    the data distribution (learned centroids) at the cost of a training
-    pass — the classic trade at 100 TB, where the fit runs on a sample.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    as_vec = array_to_vector(F.col(vec_col).cast("array<double>"))
-    cand_vec = candidates.withColumn("_v", as_vec)
-    model = KMeans(k=n_cells, seed=seed, featuresCol="_v", predictionCol="_cell").fit(cand_vec)
-    cand_cells = model.transform(cand_vec).select(
-        F.col(id_col).alias("cand_id"), F.col("_cell"), F.col(vec_col).alias("_cvec")
-    )
-
-    # Probe assignment: centroid matrix is tiny -> rank cells per query
-    # via a broadcast centroid table (no driver loop over queries).
-    spark = queries.sparkSession
-    centers = model.clusterCenters()
-    cent_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-            ["_cell", "_centroid"],
-        )
-    )
-    dist2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.col("_centroid"),
-            lambda x, c: (x - c) * (x - c),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("_d2"), F.col("_cell"))
-    probes = (
-        queries.select(F.col(id_col).alias("query_id"), vec_col)
-        .crossJoin(cent_df)
-        .select("query_id", vec_col, "_cell", dist2.alias("_d2"))
-        .withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= n_probe)
-        .select("query_id", F.col(vec_col).alias("_qvec"), "_cell")
-    )
-
-    qn = with_quantized_norm(probes.withColumnRenamed("_qvec", vec_col), vec_col).select(
-        "query_id", "_cell", F.col("_q").alias("_qq"), F.col("_nn").alias("_qn")
-    )
-    cn = with_quantized_norm(cand_cells.withColumnRenamed("_cvec", vec_col), vec_col).select(
-        "cand_id", "_cell", F.col("_q").alias("_cq"), F.col("_nn").alias("_cn")
-    )
-    cos = cosine_q(F.col("_qq"), F.col("_cq"), F.col("_qn"), F.col("_cn"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        qn.join(cn, "_cell")
-        .select("query_id", "cand_id", cos.alias("cos_sim"))
-        .distinct()
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
     )
 
 
@@ -504,11 +351,10 @@ def ivf_rerank_topk_seeded(
 ) -> DataFrame:
     """IVF probe -> exact rerank, integer-exact and oracle-replayable.
 
-    The oracle-replayable twin of :func:`ivf_topk` (which fits a real
-    KMeans): here the coarse quantizer is DATA-DERIVED from the
-    candidates — seed centroids are the ``n_cells`` smallest-id
-    candidates (KMeans iteration zero, the q123 codebook trick) refined
-    by ONE exact Lloyd step: assign every candidate to its nearest seed,
+    The coarse quantizer is DATA-DERIVED from the candidates instead of
+    fit by a KMeans job, so an SQL oracle replays it: seed centroids are
+    the ``n_cells`` smallest-id candidates (KMeans iteration zero, the
+    q123 codebook trick) refined by ONE exact Lloyd step: assign every candidate to its nearest seed,
     then recompute each cell centroid component-wise as ``sum div
     count`` (integer truncating division, identical in Spark and DuckDB,
     so the "learned" centroids are bit-replayable by SQL). Candidates

@@ -2,14 +2,10 @@
 docs/databricks_setup.md:146-198 — `MERGE INTO silver USING (dedup
 subquery) ... WHEN MATCHED AND row_num=1 THEN UPDATE SET *`).
 
-delta-spark isn't importable in this environment, so `merge_upsert`
-implements the same semantics engine-side (union + ROW_NUMBER keep-
-latest + full rewrite); when Delta IS available the same call routes
-through DeltaTable.merge — gated on import, not on a fork of the logic.
-
-Scale note: the rewrite path shuffles on the merge key once; with Delta
-the shuffle shrinks to matched files only (partition pruning on the
-key), which is why the table keeps `partition_cols`.
+`merge_upsert` implements the same semantics engine-side (union +
+ROW_NUMBER keep-latest + full rewrite), committed through
+pipeline/commit.py. The rewrite shuffles on the merge key once and
+rewrites the whole table.
 """
 
 from __future__ import annotations
@@ -19,14 +15,6 @@ from pyspark.sql import functions as F
 
 from ..operators.windows import keep_last
 from .commit import recover, staged
-
-try:  # pragma: no cover - delta not present in this environment
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAVE_DELTA = True
-except Exception:  # pragma: no cover
-    DeltaTable = None
-    HAVE_DELTA = False
 
 
 def merge_upsert(
@@ -39,19 +27,18 @@ def merge_upsert(
     """Upsert: newest row per key wins across existing target + updates.
 
     The semantics contract (pinned by the MERGE matrix test in
-    tests/test_pipeline.py, which any future native-Delta route must
-    also pass):
+    tests/test_pipeline.py):
 
     * source is deduped to its newest row per key first (the
       reference's ``row_num = 1`` guard, docs/databricks_setup.md:
       183-197);
     * a matched target row is replaced iff the source row's
       ``order_col`` is **newer or equal** — i.e. the update wins ties
-      (the Delta route's ``s.order >= t.order`` condition; the rewrite
-      path encodes the same policy with a source-precedence tie-break
-      column). This is deliberately stricter than the reference's
-      unconditional ``WHEN MATCHED THEN UPDATE SET *``: a late-arriving
-      OLDER source row must not clobber newer silver data;
+      (a MERGE's ``s.order >= t.order`` condition, encoded here as a
+      source-precedence tie-break column). This is deliberately
+      stricter than the reference's unconditional ``WHEN MATCHED THEN
+      UPDATE SET *``: a late-arriving OLDER source row must not clobber
+      newer silver data;
     * unmatched source rows insert; target rows never disappear;
     * re-running the same merge is a no-op (idempotent);
     * multiple SOURCE rows tied on ``order_col`` resolve by a content
@@ -71,17 +58,6 @@ def merge_upsert(
         # content hash over the DATA columns only, fixed column order
         return df.withColumn("_tie", F.xxhash64(*[F.col(c) for c in updates.columns]))
 
-    if HAVE_DELTA and DeltaTable.isDeltaTable(spark, target_path):  # pragma: no cover
-        deduped = keep_last(with_tie(updates), keys, [order_col, "_tie"]).drop("_tie")
-        (
-            DeltaTable.forPath(spark, target_path)
-            .alias("t")
-            .merge(deduped.alias("s"), " AND ".join(f"t.{k} = s.{k}" for k in keys))
-            .whenMatchedUpdateAll(condition=f"s.{order_col} >= t.{order_col}")
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return
     import os
 
     recover(target_path)
@@ -92,9 +68,9 @@ def merge_upsert(
     if existing is None:
         result = keep_last(with_tie(updates), keys, [order_col, "_tie"]).drop("_tie")
     else:
-        # _src_pri makes the update win order-col ties deterministically,
-        # matching the Delta route's `s.order >= t.order`; _tie resolves
-        # same-source order-col ties by content hash.
+        # _src_pri makes the update win order-col ties deterministically
+        # (a MERGE's `s.order >= t.order`); _tie resolves same-source
+        # order-col ties by content hash.
         merged = with_tie(existing).withColumn("_src_pri", F.lit(0)).unionByName(
             with_tie(updates).withColumn("_src_pri", F.lit(1))
         )

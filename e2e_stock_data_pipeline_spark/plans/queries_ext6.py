@@ -37,8 +37,8 @@ _SQL_Q = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) A
 
 # PQ geometry shared by the Spark plan and the SQL oracle below: 64-dim
 # vectors, m=8 subspaces of 8 components, 16 seed centroids, shortlist 32.
-## _N_SEEDS 16 -> 32 in r17: the sf10 knob sweep (scripts/pq_variants.py,
-## planted protocol, 2 reps x 25 slots, one session) read div=16/seeds=16
+## _N_SEEDS 16 -> 32 in r17: the sf10 knob sweep (BENCH_NOTES.md, "Round
+## 17 — q123 PQ codebook"; planted protocol, 2 reps x 25 slots) read div=16/seeds=16
 ## 96%, div=8/seeds=16 98%, div=16/seeds=32 100%, div=8/seeds=32 100% —
 ## at IDENTICAL wall time (10.0 vs 10.2 s; the doubled encode argmin is
 ## noise next to the ADC scan), so the finer codebook attacks the actual

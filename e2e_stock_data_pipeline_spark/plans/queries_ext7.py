@@ -1,13 +1,11 @@
 """Round-8 query additions [EXT]:
 
-* q128 — oracle-gated IVF ANN (VERDICT r7 item 2). The inverted-file
-  index was the one ANN path without a green driver row: operators/
-  similarity.ivf_topk fits a real KMeans (non-replayable by SQL), so it
-  carried only recall tests. q128 applies the q123 trick to the coarse
-  quantizer: seed centroids are the n_cells smallest-id candidates
-  (KMeans iteration zero) refined by ONE exact Lloyd step whose
-  centroid update is component-wise integer `sum div count` —
-  truncation-toward-zero division matches DuckDB's `//` exactly (both
+* q128 — oracle-gated IVF ANN (VERDICT r7 item 2). A KMeans-fit
+  inverted-file index cannot be replayed by SQL, so q128 applies the
+  q123 trick to the coarse quantizer instead: seed centroids are the
+  n_cells smallest-id candidates (KMeans iteration zero) refined by
+  ONE exact Lloyd step whose centroid update is component-wise integer
+  `sum div count` — truncation-toward-zero division matches DuckDB's `//` exactly (both
   yield -3 for -7/2), so the learned index, the probe choice, and the
   in-cell exact rerank all replay bit-for-bit in SQL over the same
   integer-quantized vectors.
@@ -127,9 +125,8 @@ _CMAX = similarity_ops.IVF_CELLS_MAX
     "The seeds and the Lloyd centroids are collected at build time "
     "(the corpus x cells argmin runs per Arrow batch in numpy) and the "
     "search joins candidates to the BROADCAST probe frame — candidates "
-    "are never shuffled on the low-cardinality cell key. Closes the last "
-    "ANN path without oracle evidence (ivf_topk is the KMeans-fit "
-    "production twin, recall-tested).",
+    "are never shuffled on the low-cardinality cell key. The engine's "
+    "one IVF path.",
     tags=("similarity", "ann", "ivf", "ext"),
 )
 def q128_ivf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

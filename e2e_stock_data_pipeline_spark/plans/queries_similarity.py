@@ -81,8 +81,8 @@ def q49_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Embedding-cosine near-dup pairs, label-blocked. Within-label "
     "all-pairs is n^2/L — fine when labels are many; when they are few, "
-    "use q50b (LSH bucket AND label) or multiprobe_neardup_pairs, which "
-    "shrink per-block work ~4^n_planes at tunable recall. This exact "
+    "use q50b (banded LSH bucket AND label), which shrinks per-block "
+    "work at tunable recall. This exact "
     "form stays as the correctness baseline the blocked variants are "
     "tested against.",
     tags=("similarity", "dedup", "ext", "baseline"),
@@ -144,7 +144,6 @@ def q50b_neardup_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         _emb(spark, sf_dir), label_col="label", threshold=0.2, n_planes=4, seed=13,
         dim=64,  # matches the oracle's hardcoded range(64); lazy-slice
         # fallback costs ~2x in codegen width when dim is known
-        density_scaled=True,
     )
 
 
@@ -290,7 +289,7 @@ def q87_multisignal_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_a", "doc_b", "jaccard")
     emb_pairs = S.lsh_blocked_neardup_pairs(
         _emb(spark, sf_dir), label_col="label", threshold=0.2,
-        n_planes=4, seed=13, density_scaled=True,
+        n_planes=4, seed=13,
     ).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"), "cos_sim"
     )

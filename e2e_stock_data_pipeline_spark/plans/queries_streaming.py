@@ -40,10 +40,10 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hot loop). r12: groups on date_trunc('hour') — a single timestamp "
     "key — instead of the F.window struct; for a TUMBLING window the "
     "bucket start is the truncation, results are row-identical "
-    "(asserted by scripts/floor_experiments.py), and dropping the "
-    "two-field struct key cut 8% off the sf10 wall. The genuinely "
-    "streaming tumbling-window path (F.window + watermark) lives in "
-    "streaming/ and its own tests; this batch query contracts the "
+    "(BENCH_NOTES.md, \"Round 12 — aggregation-floor tier at sf10\"), "
+    "and dropping the two-field struct key cut 8% off the sf10 wall. The "
+    "genuinely streaming tumbling-window path (F.window + watermark) "
+    "lives in streaming/ and its own tests; this batch query contracts the "
     "VALUES, not the operator shape.",
     tags=("streaming", "window", "agg"),
     bench=True,

@@ -19,6 +19,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 from pyspark.sql import types as T
 
 STATS_OUTPUT_SCHEMA = T.StructType(
@@ -39,18 +43,20 @@ STATS_STATE_SCHEMA = T.StructType(
 )
 
 
-def _update_user_stats(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n, total, mx = state.get if state.exists else (0, 0.0, float("-inf"))
+def _fold_stats(
+    key: tuple, prior: tuple | None, pdfs: Iterable[pd.DataFrame]
+) -> tuple[tuple, pd.DataFrame]:
+    """Fold one key's micro-batch frames into its running (n, total, mx)
+    state; returns the new state and the row to emit. Both stateful
+    APIs below call it, so they cannot drift apart."""
+    n, total, mx = prior if prior is not None else (0, 0.0, float("-inf"))
     for pdf in pdfs:
         vals = pdf["value"].dropna()
         n += int(vals.size)
         total += float(vals.sum())
         if vals.size:
             mx = max(mx, float(vals.max()))
-    state.update((n, total, mx))
-    yield pd.DataFrame(
+    row = pd.DataFrame(
         {
             "user_id": [key[0]],
             "n_events": [n],
@@ -58,6 +64,15 @@ def _update_user_stats(
             "max_value": [mx if mx != float("-inf") else None],
         }
     )
+    return (n, total, mx), row
+
+
+def _update_user_stats(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    new, row = _fold_stats(key, state.get if state.exists else None, pdfs)
+    state.update(new)
+    yield row
 
 
 def running_user_stats(events: DataFrame) -> DataFrame:
@@ -77,57 +92,33 @@ def running_user_stats(events: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas twin (the successor API to
+# transformWithStateInPandas twin (the successor API to
 # applyInPandasWithState: typed state handles, timers, schema evolution).
 # Same semantics as running_user_stats; requires the RocksDB state store.
 # ---------------------------------------------------------------------------
 
 
-try:  # Spark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+class RunningStatsProcessor(StatefulProcessor):
+    """Module-level (picklable) processor: typed ValueState holding
+    the same (n, total, mx) tuple the GroupState form keeps."""
 
-    class RunningStatsProcessor(StatefulProcessor):
-        """Module-level (picklable) processor: typed ValueState holding
-        the same (n, total, mx) tuple the GroupState form keeps."""
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._state = handle.getValueState("stats", STATS_STATE_SCHEMA)
 
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", STATS_STATE_SCHEMA)
+    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
+        prior = self._state.get() if self._state.exists() else None
+        new, row = _fold_stats(key, prior, rows)
+        self._state.update(new)
+        yield row
 
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            prior = self._state.get() if self._state.exists() else None
-            n, total, mx = prior if prior is not None else (0, 0.0, float("-inf"))
-            for pdf in rows:
-                vals = pdf["value"].dropna()
-                n += int(vals.size)
-                total += float(vals.sum())
-                if vals.size:
-                    mx = max(mx, float(vals.max()))
-            self._state.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "max_value": [mx if mx != float("-inf") else None],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover - pre-4.0 Spark
-    RunningStatsProcessor = None  # type: ignore[assignment]
+    def close(self) -> None:
+        pass
 
 
 def running_user_stats_tws(events: DataFrame) -> DataFrame:
     """running_user_stats on the transformWithStateInPandas API — the
     engine's forward path for custom streaming state (typed ValueState
     in a StatefulProcessor instead of a raw tuple in GroupState)."""
-    if RunningStatsProcessor is None:  # pragma: no cover
-        raise RuntimeError("transformWithStateInPandas requires Spark >= 4.0")
     return (
         events.select("user_id", "value")
         .groupBy("user_id")

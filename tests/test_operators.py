@@ -615,30 +615,6 @@ class TestMultimodal:
         assert len(out[3]) == 2  # bytes 1 and 5 of 8
 
 
-class TestAnnLsh:
-    def test_ann_recall_against_bruteforce(self, spark):
-        import numpy as np
-        from e2e_stock_data_pipeline_spark.operators.similarity import ann_topk_lsh
-
-        rng = np.random.default_rng(3)
-        base = rng.normal(size=(40, 16)).astype("float32")
-        # clusters: near-duplicates of each query vector among candidates
-        vecs = list(base) + [v + rng.normal(scale=0.01, size=16).astype("float32") for v in base[:5]]
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)], ["vec_id", "embedding"]
-        )
-        from pyspark.sql import functions as F
-
-        queries = df.filter(F.col("vec_id") < 5)
-        cands = df.filter(F.col("vec_id") >= 5)
-        ann = ann_topk_lsh(queries, cands, k=1, n_planes=4)
-        got = {r.query_id: r.cand_id for r in ann.collect()}
-        # each query's planted near-duplicate (vec_id 40+i) shares its bucket
-        # with overwhelming probability at 4 planes
-        hits = sum(1 for qid, cid in got.items() if cid == 40 + qid)
-        assert hits >= 4  # >= 80% recall on planted duplicates
-
-
 class TestSkewOperators:
     def test_salted_join_equals_plain_join(self, spark):
         from e2e_stock_data_pipeline_spark.operators.skew import salted_join
@@ -688,73 +664,7 @@ class TestGroupedMap:
             assert n == len(y) and abs(got_slope - slope) < 1e-9
 
 
-class TestIvf:
-    def test_ivf_recall_on_clustered_data(self, spark):
-        import numpy as np
-        from e2e_stock_data_pipeline_spark.operators.similarity import brute_force_topk, ivf_topk
-
-        rng = np.random.default_rng(11)
-        centers = rng.normal(scale=5.0, size=(8, 12))
-        vecs = [centers[i % 8] + rng.normal(scale=0.3, size=12) for i in range(200)]
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)], ["vec_id", "embedding"]
-        )
-        queries = df.filter(F.col("vec_id") < 4)
-        cands = df.filter(F.col("vec_id") >= 4)
-        exact = {
-            (r.query_id, r.cand_id)
-            for r in brute_force_topk(queries, cands, k=3).collect()
-        }
-        approx = {
-            (r.query_id, r.cand_id)
-            for r in ivf_topk(queries, cands, k=3, n_cells=8, n_probe=3).collect()
-        }
-        # probing 3/8 cells on well-separated clusters recovers most of top-3
-        assert len(approx & exact) >= int(0.8 * len(exact))
-
-
 class TestProductQuantization:
-    def test_pq_recall_on_planted_duplicates(self, spark):
-        import numpy as np
-
-        from e2e_stock_data_pipeline_spark.operators.pq import (
-            pq_encode,
-            pq_fit_codebooks,
-            pq_topk,
-        )
-
-        rng = np.random.default_rng(5)
-        base = rng.normal(size=(40, 16))
-        # candidates = 40 random + near-copies of the 5 query vectors
-        vecs = list(base) + [v + rng.normal(scale=0.01, size=16) for v in base[:5]]
-        df = spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)], ["vec_id", "embedding"]
-        )
-        queries = df.filter(F.col("vec_id") < 5)
-        cands = df.filter(F.col("vec_id") >= 5)
-        books = pq_fit_codebooks(cands, m=4, k=8, dim=16)
-        assert len(books) == 4 and len(books[0]) == 8 and len(books[0][0]) == 4
-        enc = pq_encode(cands, books)
-        rows = enc.collect()
-        assert all(len(r.codes) == 4 for r in rows)
-        top = pq_topk(queries, enc, books, k_top=1).collect()
-        got = {r.query_id: r.cand_id for r in top}
-        # each query's planted near-copy (vec_id 40+i) reconstructs closest
-        hits = sum(1 for qid, cid in got.items() if cid == 40 + qid)
-        assert hits >= 4  # >= 80% top-1 recall on planted duplicates
-
-    def test_pq_encode_deterministic(self, spark):
-        from e2e_stock_data_pipeline_spark.operators.pq import pq_encode, pq_fit_codebooks
-
-        df = spark.createDataFrame(
-            [(i, [float((i * 7 + d) % 5) for d in range(8)]) for i in range(20)],
-            ["vec_id", "embedding"],
-        )
-        books = pq_fit_codebooks(df, m=2, k=4, dim=8)
-        a = {r.vec_id: list(r.codes) for r in pq_encode(df, books).collect()}
-        b = {r.vec_id: list(r.codes) for r in pq_encode(df, books).collect()}
-        assert a == b
-
     def test_pq_rerank_recall_bound_and_shortlist_knob(self, spark, sf_dir):
         """q123's shortlist->rerank chain: recall vs exact brute force.
 
@@ -959,7 +869,7 @@ class TestIvfSeeded:
     def test_ivf_clusters_recover_planted_structure(self, spark):
         """On genuinely clustered data (the regime IVF exists for) the
         seeded-Lloyd index recovers nearly all of exact top-3 with
-        3/8 probes — parity with the KMeans-fit ivf_topk's bar."""
+        3/8 probes."""
         import numpy as np
 
         from e2e_stock_data_pipeline_spark.operators.similarity import (
@@ -1134,11 +1044,12 @@ class TestConnectedComponents:
         return {x: labels[find(x)] for x in range(n)}
 
     def test_random_graphs_match_union_find(self, spark, monkeypatch):
-        """Property: on arbitrary random graphs the min-label fixpoint,
-        distributed or finished on the driver, equals a sequential
-        union-find reference."""
+        """Property: on arbitrary random graphs, given as a set or as a
+        lazy multigraph, the min-label fixpoint, distributed or finished
+        on the driver, equals a sequential union-find reference."""
         import random
 
+        from e2e_stock_data_pipeline_spark.operators import dedup
         from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
 
         for bound in _finish_bounds(monkeypatch):
@@ -1153,19 +1064,38 @@ class TestConnectedComponents:
                 edges = spark.createDataFrame(pairs or [(0, 0)], ["doc_a", "doc_b"])
                 if not pairs:
                     edges = edges.limit(0)
-                got = {
-                    r.doc_id: r.cluster_id
-                    for r in connected_components(
-                        nodes, edges, max_iter=n + 1
-                    ).collect()
-                }
-                assert got == expect, f"bound={bound} seed={seed} n={n} m={len(pairs)}"
+                # the same graph as a lazy multigraph: every edge again,
+                # reversed, and a self-loop on every node
+                multi = (
+                    edges.unionByName(edges)
+                    .unionByName(
+                        edges.select(
+                            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+                        )
+                    )
+                    .unionByName(
+                        nodes.select(
+                            F.col("doc_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
+                        )
+                    )
+                )
+                monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", n + 1)
+                for shape, e in (("set", edges), ("multigraph", multi)):
+                    got = {
+                        r.doc_id: r.cluster_id
+                        for r in connected_components(nodes, e).collect()
+                    }
+                    assert got == expect, (
+                        f"bound={bound} seed={seed} n={n} m={len(pairs)} {shape}"
+                    )
 
     def test_driver_finish_at_the_bound_matches_union_find(self, spark, monkeypatch):
         """Old-vs-new equivalence right at the switch: with the bound set
         to the edge count round 0's checkpoint observes (n), and to n - 1
         and n + 1, the labels equal the union-find reference, and the
-        driver finish runs right after round 0 exactly when n <= bound."""
+        driver finish runs right after round 0 exactly when n <= bound.
+        Round 0's checkpoint is the first one observed: the input edge
+        set is not checkpointed."""
         import random
 
         from e2e_stock_data_pipeline_spark.operators import dedup
@@ -1176,7 +1106,7 @@ class TestConnectedComponents:
 
         def spy_materialize(df, *cols, **kw):
             out, st = real_materialize(df, *cols, **kw)
-            if kw.get("observe"):  # the initial edge set and each round's
+            if kw.get("observe"):  # each round's edge set
                 observed.append(st["n"])
             return out, st
 
@@ -1209,15 +1139,15 @@ class TestConnectedComponents:
                 assert got == expect, f"seed={seed} bound={bound}"
 
             run(0)
-            assert not finished and len(observed) > 2, "round 0 converged"
-            round0 = observed[1]
+            assert not finished and len(observed) > 1, "round 0 converged"
+            round0 = observed[0]
             for bound, finish_after_round0 in (
                 (round0 - 1, False),
                 (round0, True),
                 (round0 + 1, True),
             ):
                 run(bound)
-                assert (finished[:1] == [2]) == finish_after_round0, (seed, bound)
+                assert (finished[:1] == [1]) == finish_after_round0, (seed, bound)
                 assert len(finished) <= 1
 
     def test_chain_graph_fast_convergence_and_budget_surfaces(self, spark, monkeypatch):
@@ -1225,11 +1155,11 @@ class TestConnectedComponents:
         NOT O(diameter): a 120-node chain (which min-label propagation
         would need ~119 rounds for) must solve well inside the default
         20-round budget. An absurdly small budget must still RAISE
-        (partial labels are wrong labels), and strict=False must opt in
-        to one-row-per-node partial labels. Run with every round
+        (partial labels are wrong labels). Run with every round
         distributed: the budget only binds there."""
         import pytest
 
+        from e2e_stock_data_pipeline_spark.operators import dedup
         from e2e_stock_data_pipeline_spark.operators import materialize as mat
         from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
 
@@ -1237,31 +1167,30 @@ class TestConnectedComponents:
         n = 120
         nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
         edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"])
+        assert dedup.CC_MAX_ROUNDS == 20
         got = {
             r.doc_id: r.cluster_id
-            for r in connected_components(nodes, edges, max_iter=20).collect()
+            for r in connected_components(nodes, edges).collect()
         }
         assert got == {i: 0 for i in range(n)}
+        monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
         with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(nodes, edges, max_iter=1)
-        # strict=False: explicit opt-in to partial labels still returns
-        # exactly one row per node (multi-parent nodes collapse to min)
-        partial = connected_components(nodes, edges, max_iter=1, strict=False)
-        assert partial.count() == n
-        assert partial.select("doc_id").distinct().count() == n
+            connected_components(nodes, edges)
 
-    def test_chain_finishes_exactly_on_the_driver_within_one_round(self, spark):
+    def test_chain_finishes_exactly_on_the_driver_within_one_round(self, spark, monkeypatch):
         """At the default bound the 120-node chain's first round leaves
-        a small edge set, which the driver labels exactly: max_iter=1
-        is enough."""
+        a small edge set, which the driver labels exactly: a budget of
+        one round is enough."""
+        from e2e_stock_data_pipeline_spark.operators import dedup
         from e2e_stock_data_pipeline_spark.operators.dedup import connected_components
 
+        monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
         n = 120
         nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
         edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"])
         got = {
             r.doc_id: r.cluster_id
-            for r in connected_components(nodes, edges, max_iter=1).collect()
+            for r in connected_components(nodes, edges).collect()
         }
         assert got == {i: 0 for i in range(n)}
 
@@ -1905,6 +1834,50 @@ class TestLshBlockedNearDup:
         }
         assert probe2 <= exact and len(probe2) >= len(blocked)
 
+    def test_banded_path_is_label_bucket_blocking_on_the_gate_corpus(self, spark, sf_dir):
+        """Old-vs-new equivalence: below the 640-row density floor the
+        banded geometry is one 4-plane table, so the pairs and their
+        cosines equal the single-table (bucket, label) blocking written
+        out here. Above the floor the two differ by design (2000 rows:
+        1256 single-table pairs, 822 banded)."""
+        from e2e_stock_data_pipeline_spark.operators.similarity import (
+            cosine_q,
+            hyperplane_lsh_buckets,
+            lsh_blocked_neardup_pairs,
+            with_quantized_norm,
+        )
+
+        emb = tables.load(spark, sf_dir, "embeddings")
+        assert emb.count() < 640
+        e = with_quantized_norm(emb).join(
+            hyperplane_lsh_buckets(emb, n_planes=4, seed=13), "vec_id"
+        )
+        a = e.select(
+            F.col("vec_id").alias("vec_a"), "bucket", "label",
+            F.col("_q").alias("_qa"), F.col("_nn").alias("_na"),
+        )
+        b = e.select(
+            F.col("vec_id").alias("vec_b"), "bucket", "label",
+            F.col("_q").alias("_qb"), F.col("_nn").alias("_nb"),
+        )
+        cos = cosine_q(F.col("_qa"), F.col("_qb"), F.col("_na"), F.col("_nb"))
+        legacy = [
+            (r.vec_a, r.vec_b, r.cos_sim)
+            for r in a.join(b, ["bucket", "label"])
+            .filter(F.col("vec_a") < F.col("vec_b"))
+            .select("vec_a", "vec_b", cos.alias("cos_sim"))
+            .filter(F.col("cos_sim") >= 0.2)
+            .collect()
+        ]
+        banded = [
+            (r.vec_a, r.vec_b, r.cos_sim)
+            for r in lsh_blocked_neardup_pairs(
+                emb, label_col="label", threshold=0.2, n_planes=4, seed=13
+            ).collect()
+        ]
+        assert legacy
+        assert sorted(banded) == sorted(legacy)
+
     def test_empty_input_yields_empty_buckets(self, spark):
         from e2e_stock_data_pipeline_spark.operators.similarity import (
             hyperplane_lsh_buckets,
@@ -2103,37 +2076,6 @@ class TestRandomizedEquivalences:
             for r in ngram_jaccard_pairs(kept, threshold=0.0).collect()
         }
         assert capped == naive
-
-
-class TestMultiprobeNearDup:
-    def test_recall_monotone_in_seeds_precision_stays_one(self, spark, sf_dir):
-        from e2e_stock_data_pipeline_spark.operators.similarity import (
-            lsh_blocked_neardup_pairs,
-            multiprobe_neardup_pairs,
-        )
-        from e2e_stock_data_pipeline_spark.plans.registry import load_all_query_modules
-
-        reg = load_all_query_modules()
-        exact = {
-            (r.vec_a, r.vec_b)
-            for r in reg["q50_cosine_neardup_pairs"].spark(spark, sf_dir).collect()
-        }
-        emb = tables.load(spark, sf_dir, "embeddings")
-        single = {
-            (r.vec_a, r.vec_b)
-            for r in lsh_blocked_neardup_pairs(
-                emb, label_col="label", threshold=0.2, n_planes=4, seed=13
-            ).collect()
-        }
-        multi = {
-            (r.vec_a, r.vec_b)
-            for r in multiprobe_neardup_pairs(
-                emb, label_col="label", threshold=0.2, n_planes=4,
-                seeds=(13, 99, 7),
-            ).collect()
-        }
-        assert single <= multi <= exact   # recall grows, precision stays 1
-        assert len(multi) > len(single)   # extra probes find extra true pairs
 
 
 class TestHeavyHitters:

@@ -203,78 +203,6 @@ class TestMergeUpsert:
             rows = spark.read.parquet(path).collect()
             assert len(rows) == 1 and rows[0].close == expected_close
 
-    def test_delta_native_branch_contract_via_stub(self, spark, tmp_path, monkeypatch):
-        """VERDICT r12 item 5: delta-spark is uninstallable here (no
-        package-index route, re-verified r13), so the native branch is
-        pinned by stub injection — a fake DeltaTable recording the
-        fluent MERGE calls. Asserts the branch (a) still matches the
-        DeltaTable API shape, (b) sends the keep-latest-deduped source,
-        (c) carries the `s.order >= t.order` update-wins-ties condition
-        the docstring promises. If the delta API or our branch drifts,
-        this fails at test time instead of on the first real cluster."""
-        from e2e_stock_data_pipeline_spark.pipeline import silver
-
-        calls: dict = {}
-
-        class FakeMergeBuilder:
-            def whenMatchedUpdateAll(self, condition=None):
-                calls["matched_cond"] = condition
-                return self
-
-            def whenNotMatchedInsertAll(self):
-                calls["insert_all"] = True
-                return self
-
-            def execute(self):
-                calls["executed"] = True
-
-        class FakeDeltaTable:
-            @staticmethod
-            def isDeltaTable(sp, path):
-                calls["probed_path"] = path
-                return True
-
-            @staticmethod
-            def forPath(sp, path):
-                calls["for_path"] = path
-                return FakeDeltaTable()
-
-            def alias(self, a):
-                calls.setdefault("aliases", []).append(a)
-                return self
-
-            def merge(self, source_df, condition):
-                calls["merge_cond"] = condition
-                calls["source_rows"] = {
-                    (r.symbol, r.trade_date): (r.close, r.v)
-                    for r in source_df.collect()
-                }
-                return FakeMergeBuilder()
-
-        monkeypatch.setattr(silver, "HAVE_DELTA", True)
-        monkeypatch.setattr(silver, "DeltaTable", FakeDeltaTable)
-        path = str(tmp_path / "delta_silver")
-        # two source rows for one key: only the newest (v=2) may reach merge
-        upd = spark.createDataFrame(
-            [("AAPL", "d1", 1.0, 1), ("AAPL", "d1", 2.0, 2), ("MSFT", "d1", 9.0, 1)],
-            ["symbol", "trade_date", "close", "v"],
-        )
-        silver.merge_upsert(spark, path, upd, ["symbol", "trade_date"], "v")
-        assert calls["probed_path"] == path and calls["for_path"] == path
-        assert calls["merge_cond"] == "t.symbol = s.symbol AND t.trade_date = s.trade_date"
-        assert calls["matched_cond"] == "s.v >= t.v"
-        assert calls["insert_all"] and calls["executed"]
-        assert calls["aliases"] == ["t"]  # "s" is DataFrame.alias, not the stub's
-        # row_num=1 dedup ran engine-side before the merge, no helper cols leak
-        assert calls["source_rows"] == {
-            ("AAPL", "d1"): (2.0, 2),
-            ("MSFT", "d1"): (9.0, 1),
-        }
-        # and nothing was written through the fallback path
-        import os
-
-        assert not os.path.exists(path)
-
     def test_reserved_helper_column_rejected(self, spark, tmp_path):
         """A user column named _src_pri (or _tie/_rn) would silently
         corrupt the tie policy via withColumn replacement — refuse it."""

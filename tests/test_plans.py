@@ -61,7 +61,7 @@ class TestHeavyTierPlanContracts:
     materialized ONCE (localCheckpoint), so the FINAL plan must consume
     them as ExistingRDD scans and must never re-derive the banding
     pipeline (whose unmistakable marker is the sha256 shingle hash). A
-    refactor that drops materialize()/pre_materialized re-triples the
+    refactor that drops the pair-set materialize() re-triples the
     banding work at sf10 — these tests fail on the plan, not 400 s into
     a bench."""
 

@@ -1137,9 +1137,6 @@ class TestTransformWithState:
             RunningStatsProcessor,
         )
 
-        if RunningStatsProcessor is None:
-            pytest.skip("Spark < 4.0: no StatefulProcessor API")
-
         class FakeValueState:
             def __init__(self):
                 self._v = None
