@@ -36,11 +36,11 @@ def entry(spark: SparkSession) -> DataFrame:
 # and r2 produced exactly 50), so dict ORDER decides which queries earn
 # evidence. Policy: queries that have never received a green driver row
 # (across all CORRECTNESS_r*.json in the repo) run FIRST, cheapest-first
-# within the group (measured at sf0.01 by scripts/driver_sim.py ->
-# scripts/query_costs.json), so each round's capped run maximizes NEW
-# coverage. Once every query holds a green row, FRESHNESS rotates: seen
-# queries are ordered by the round of their LAST green row (stalest
-# first), so the 50-row budget cycles through the whole registry every
+# within the group (measured at sf0.01 by `scripts/sweep.py --oracle
+# --json` -> scripts/query_costs.json), so each round's capped run
+# maximizes NEW coverage. Once every query holds a green row, FRESHNESS
+# rotates: seen queries are ordered by the round of their LAST green row
+# (stalest first), so the 50-row budget cycles through the whole registry every
 # ~4 rounds instead of re-checking the same cheap head forever — a
 # silent regression in any query surfaces within one rotation cycle.
 _DEFAULT_COST = 0.5  # queries added after the last cost sweep run early
@@ -191,9 +191,10 @@ def _last_green_round() -> dict[str, int]:
 
 def _costs() -> dict[str, float]:
     """Per-query cost in seconds. Accepts both shapes query_costs.json has
-    carried: flat {name: sec} and driver_sim --json's rich per-query dict
-    ({"total_s": ..., "spark_s": ...}) — a dict-valued entry must never
-    break queries() ordering (it did once: dicts don't compare)."""
+    carried: flat {name: sec} and the rich per-query dict that
+    scripts/sweep.py --json writes ({"total_s": ..., "spark_s": ...}) —
+    a dict-valued entry must never break queries() ordering (it did
+    once: dicts don't compare)."""
     try:
         raw = json.loads((_REPO / "scripts" / "query_costs.json").read_text())
     except (OSError, ValueError):

@@ -909,9 +909,10 @@ def connected_components(
             "O(log^2 n), not O(diameter)); raise dedup.CC_MAX_ROUNDS"
         )
     if labels is None:
-        # at the fixpoint E is min-rooted stars: each non-root node
-        # appears exactly once as u with v = its component minimum
-        labels = e.groupBy("u").agg(F.min("v").alias("label"))
+        # at the fixpoint E is min-rooted stars: the exit check above
+        # proved each non-root node appears exactly once as u, with
+        # v = its component minimum, so E already is the label set
+        labels = e.select("u", F.col("v").alias("label"))
     out = nodes.select(F.col(id_col)).join(
         labels.select(F.col("u").alias(id_col), "label"),
         id_col,

@@ -249,7 +249,7 @@ def _d2_int(a: Column, b: Column) -> Column:
 # IVF_PROBE_DIV = 2 since r17 (VERDICT r16 item 2: q128's 81.6%
 # recall@5 was the similarity family's low bar, misses pure probe
 # pruning). The knob sweep at sf10 (lloyd = Lloyd steps, div = this
-# constant; the scripts/sf10_ann_recall.py planted protocol, 2 reps x
+# constant; the scripts/recall_audit.py ann planted protocol, 2 reps x
 # 25 truth slots per variant, one session):
 #   lloyd=1 div=4: 78.0%  41.9 s   (the r16 geometry)
 #   lloyd=1 div=2: 92.0%  44.3 s   <- chosen

@@ -8,9 +8,9 @@ the reference's Delta maintenance surface:
 * M2 optimizeWrite/autoCompact        -> compact(): bin small files to
   a target count derived from the data size.
 
-When delta-spark is importable these route to real `OPTIMIZE`; the
-parquet fallback rewrites through `commit.staged` (never reads and
-overwrites the same path in one job).
+Both rewrite parquet through `commit.staged` (never reads and
+overwrites the same path in one job); there is no Delta `OPTIMIZE`
+branch.
 """
 
 from __future__ import annotations

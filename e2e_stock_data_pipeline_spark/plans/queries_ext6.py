@@ -44,7 +44,8 @@ _SQL_Q = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) A
 ## noise next to the ADC scan), so the finer codebook attacks the actual
 ## distortion source (the full-audit misses were all "ADC shortlist
 ## pruned it") while the shortlist FRACTION (scale story) stays 1/16.
-## Definitive number: r17 sf10_ann_recall re-run in BENCH_NOTES.
+## Definitive number: r17 planted ANN recall re-run in BENCH_NOTES
+## (today `scripts/recall_audit.py ann`).
 _M, _DSUB, _N_SEEDS, _SHORTLIST, _K = 8, 8, 32, 32, 5
 
 _D2 = (

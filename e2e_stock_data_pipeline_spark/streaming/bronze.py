@@ -16,9 +16,7 @@ What Auto Loader gave the reference and how each piece maps here:
   stored schema registry against newly inferred fields, widen, restart —
   the one piece of stateful machinery Auto Loader hid (SURVEY.md §7 T4).
 
-Sinks are parquet here (delta-spark isn't available in this
-environment); writers take fmt so Delta drops in unchanged when the
-package is importable.
+Sinks are parquet; there is no Delta writer.
 """
 
 from __future__ import annotations
@@ -46,14 +44,11 @@ def read_file_stream(
     schema: T.StructType,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
-    recursive: bool = False,
 ) -> DataFrame:
     """Incremental file-stream scan with pinned schema (S4/S5)."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
     reader = reader.option("ignoreMissingFiles", "true")
     if fmt == "parquet":
         return reader.parquet(path)
@@ -78,20 +73,17 @@ def run_bronze_stream(
     source: DataFrame,
     dest_path: str,
     checkpoint: str,
-    fmt: str = "parquet",
-    transform=None,
     lineage: bool = True,
 ) -> None:
-    """Append the stream into the bronze table, run to completion (K3/T2).
+    """Append the stream into the parquet bronze table, run to
+    completion (K3/T2).
 
     ``lineage=False`` skips the processing-time/source-file columns —
     the raw-append baseline scripts/bench_stream.py measures the
     lineage overhead against."""
     df = with_lineage(source) if lineage else source
-    if transform is not None:
-        df = transform(df)
     q = (
-        df.writeStream.format(fmt)
+        df.writeStream.format("parquet")
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
         .option("path", dest_path)

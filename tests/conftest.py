@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -22,3 +24,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMOKE)
+
+
+@pytest.fixture(scope="session")
+def load_script():
+    """Import ``scripts/<name>.py`` as a module, so a test calls its main()
+    in-process on the shared session."""
+
+    def load(name: str):
+        path = Path(__file__).resolve().parents[1] / "scripts" / f"{name}.py"
+        spec = importlib.util.spec_from_file_location(name, path)
+        mod = importlib.util.module_from_spec(spec)
+        sys.modules[name] = mod
+        spec.loader.exec_module(mod)
+        return mod
+
+    return load

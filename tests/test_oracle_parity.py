@@ -1,73 +1,28 @@
 """Golden parity suite: every registered query vs its DuckDB oracle.
 
-Mirrors the driver's correctness gate: row count, column names/types
-(loosely), and an order-insensitive exact value comparison — floats
-must match bit-for-bit, which the queries guarantee by construction
-(exact decimal aggregation / identical double expression trees).
+Mirrors the driver's correctness gate through ``plans/oracle.py``, the
+one comparison the sweep and timing scripts share: row count, column
+names and type classes, and an order-insensitive exact value comparison
+— floats must match bit-for-bit, which the queries guarantee by
+construction (exact decimal aggregation / identical double expression
+trees).
 """
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
+from e2e_stock_data_pipeline_spark.plans import oracle
 from e2e_stock_data_pipeline_spark.plans.registry import load_all_query_modules
-from e2e_stock_data_pipeline_spark.sources.tables import TABLE_NAMES
 
 REGISTRY = load_all_query_modules()
 
 
 @pytest.fixture(scope="module")
 def oracle_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle.connect(sf_dir)
     yield con
     con.close()
-
-
-def normalize(rows, colnames):
-    """Sort columns by name, then rows; exact values (no float fuzz)."""
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-
-    def key(row):
-        out = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            out.append((v is None, repr(v)))
-        return tuple(out)
-
-    return sorted((key(r) for r in rows))
-
-
-# Coarse type classes: the driver compares result schemas, so int32/int64
-# and float32/float64 mismatches between Spark and DuckDB are real failures.
-_SPARK_CLASS = {
-    "int": "i32", "bigint": "i64", "double": "f64", "float": "f32",
-    "string": "str", "date": "date", "timestamp": "ts", "timestamp_ntz": "ts",
-    "boolean": "bool", "binary": "bin",
-}
-_DUCK_CLASS = {
-    "INTEGER": "i32", "BIGINT": "i64", "HUGEINT": "i128", "SMALLINT": "i16",
-    "TINYINT": "i8", "DOUBLE": "f64", "FLOAT": "f32", "VARCHAR": "str",
-    "DATE": "date", "TIMESTAMP": "ts", "TIMESTAMP_NS": "ts", "BOOLEAN": "bool",
-    "BLOB": "bin", "NUMBER": "num",
-}
-
-
-def type_classes_spark(sdf):
-    return {f.name: _SPARK_CLASS.get(f.dataType.simpleString(), f.dataType.simpleString().lower())
-            for f in sdf.schema.fields}
-
-
-def type_classes_duck(rel):
-    # unmapped types (DECIMAL(p,s)) compare case-insensitively — both
-    # engines spell the same logical type, just with different casing
-    return {c: _DUCK_CLASS.get(str(t), str(t).lower()) for c, t in zip(rel.columns, rel.types)}
 
 
 oracle_cases = sorted(n for n, s in REGISTRY.items() if s.oracle)
@@ -77,27 +32,9 @@ rows_only_cases = sorted(n for n, s in REGISTRY.items() if not s.oracle)
 @pytest.mark.parametrize("name", oracle_cases)
 def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
     spec = REGISTRY[name]
-    sdf = spec.spark(spark, spec.pinned_sf_dir or sf_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    spark_cols = sdf.columns
-
-    rel = oracle_con.sql(spec.oracle)
-    oracle_cols = list(rel.columns)
-    oracle_types = type_classes_duck(rel)
-    oracle_rows = rel.fetchall()
-
-    assert sorted(spark_cols) == sorted(oracle_cols), (
-        f"{name}: column names differ: spark={spark_cols} oracle={oracle_cols}"
-    )
-    st = type_classes_spark(sdf)
-    diffs = {c: (st[c], oracle_types[c]) for c in st if st[c] != oracle_types.get(c)}
-    assert not diffs, f"{name}: column type classes differ: {diffs}"
-    assert len(spark_rows) == len(oracle_rows), (
-        f"{name}: row count spark={len(spark_rows)} oracle={len(oracle_rows)}"
-    )
-    ns, no = normalize(spark_rows, spark_cols), normalize(oracle_rows, oracle_cols)
-    mismatches = [(a, b) for a, b in zip(ns, no) if a != b]
-    assert not mismatches, f"{name}: {len(mismatches)} mismatched rows; first: {mismatches[0]}"
+    got = oracle.spark_result(spec.spark(spark, oracle.sf_dir_for(spec, sf_dir)))
+    msg = oracle.diff(name, got, oracle.duckdb_result(oracle_con.sql(spec.oracle)))
+    assert msg is None, msg
 
 
 @pytest.mark.parametrize("name", rows_only_cases)

@@ -22,11 +22,10 @@ from __future__ import annotations
 
 import re
 
-import duckdb
 import pytest
 
+from e2e_stock_data_pipeline_spark.plans import oracle
 from e2e_stock_data_pipeline_spark.plans.registry import load_all_query_modules
-from e2e_stock_data_pipeline_spark.sources.tables import TABLE_NAMES
 
 REG = load_all_query_modules()
 SF = "/root/testdata/sf0.001"
@@ -40,9 +39,7 @@ _WIDE_DUCK = re.compile(r"DECIMAL\((\d+)")
 class TestNoWideNumericOutputs:
     def test_oracle_outputs(self):
         """DESCRIBE every oracle: no HUGEINT / DECIMAL(p>18) output."""
-        con = duckdb.connect()
-        for t in TABLE_NAMES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        con = oracle.connect(SF)
         bad = []
         for name, spec in REG.items():
             if spec.oracle is None or name in EXEMPT:
