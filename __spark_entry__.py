@@ -254,4 +254,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     registry = load_all_query_modules()
-    return {name: spec.oracle for name, spec in registry.items() if spec.oracle is not None}
+    return {name: spec.oracle for name, spec in registry.items()}

@@ -50,6 +50,24 @@ def _seeded_hash(col: Column, seed_col: Column) -> Column:
     return F.conv(F.substring(digest, 1, 15), 16, 10).cast("bigint")
 
 
+def _shingle_array(
+    docs: DataFrame, id_col: str, n: int, distinct: bool
+) -> tuple[DataFrame, Column]:
+    """(id, w) words frame plus the expression over ``w`` that builds a
+    doc's n-word shingle array (docs with < n words get an empty array;
+    ``distinct`` wraps the array in ``array_distinct``). Callers explode
+    or project the EXPRESSION itself, never a projected column of it."""
+    joined = "concat_ws(' ', " + ", ".join(f"w[i + {j}]" for j in range(n)) + ")"
+    arr = f"transform(sequence(0, size(w) - {n}), i -> {joined})"
+    if distinct:
+        arr = f"array_distinct({arr})"
+    with_words = docs.select(F.col(id_col), words_col("text").alias("w"))
+    sh = F.expr(
+        f"CASE WHEN size(w) >= {n} THEN {arr} ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+    return with_words, sh
+
+
 def exploded_shingles(
     docs: DataFrame, id_col: str = "doc_id", n: int = 3, distinct: bool = True
 ) -> DataFrame:
@@ -60,12 +78,7 @@ def exploded_shingles(
     distinct=False since min over a multiset equals min over its set,
     saving that shuffle entirely.
     """
-    joined = "concat_ws(' ', " + ", ".join(f"w[i + {j}]" for j in range(n)) + ")"
-    with_words = docs.select(F.col(id_col), words_col("text").alias("w"))
-    sh = F.expr(
-        f"CASE WHEN size(w) >= {n} THEN transform(sequence(0, size(w) - {n}), i -> {joined}) "
-        "ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
+    with_words, sh = _shingle_array(docs, id_col, n, distinct=False)
     out = with_words.select(F.col(id_col), F.explode(sh).alias("shingle"))
     return out.distinct() if distinct else out
 
@@ -87,13 +100,7 @@ def shingle_sets(
     Scale bound: one doc's distinct shingle set must fit an array cell
     (the q187 covered-set precondition) — shingle counts are bounded by
     doc length, which a 100 TB text corpus bounds at ingest anyway."""
-    joined = "concat_ws(' ', " + ", ".join(f"w[i + {j}]" for j in range(n)) + ")"
-    with_words = docs.select(F.col(id_col), words_col("text").alias("w"))
-    sh = F.expr(
-        f"CASE WHEN size(w) >= {n} THEN"
-        f" array_distinct(transform(sequence(0, size(w) - {n}), i -> {joined}))"
-        " ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
+    with_words, sh = _shingle_array(docs, id_col, n, distinct=True)
     return with_words.select(F.col(id_col), sh.alias("sset"))
 
 
@@ -112,13 +119,7 @@ def exploded_shingle_sets(
     build lands INLINE in the scan filter — the q184 r17 trap, measured
     again on q99's r18 rewrite (sf10 20 -> 81 s before this form).
     Exploding the expression keeps the rule silent and the plan lazy."""
-    joined = "concat_ws(' ', " + ", ".join(f"w[i + {j}]" for j in range(n)) + ")"
-    with_words = docs.select(F.col(id_col), words_col("text").alias("w"))
-    sh = F.expr(
-        f"CASE WHEN size(w) >= {n} THEN"
-        f" array_distinct(transform(sequence(0, size(w) - {n}), i -> {joined}))"
-        " ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
+    with_words, sh = _shingle_array(docs, id_col, n, distinct=True)
     return with_words.select(F.col(id_col), F.explode(sh).alias("shingle"))
 
 
@@ -187,19 +188,8 @@ def base_hash28(col: Column) -> Column:
 BASE_HASH28_SQL = "CAST(('0x' || substr(sha256({expr}), 1, 7)) AS BIGINT)"
 
 
-def universal_hash(base: Column, seed_col: Column) -> Column:
-    a = seed_col * 2 + 1
-    b = seed_col * 7919 + 13
-    return (a * base + b) % MINHASH_P
-
-
-# RETIRED r15 (no oracle uses it — enforced by the family-consistency
-# contract test); kept with universal_hash so the independence
-# regression test can still measure the defect the v2 family fixed.
-UNIVERSAL_HASH_SQL = "(({seed} * 2 + 1) * {base} + ({seed} * 7919 + 13)) % 268435399"
-
-# --- v2 family (r14 finding; the registered family since r15) ---------
-# The v1 multipliers (2s+1) are SMALL and the shifts are constants, so
+# The family (v2, since r15). The retired v1 family, (2s+1)*h +
+# (7919s+13) mod P, had SMALL multipliers and constant shifts, so
 # whenever (2s+1)*h_min < P (typical: h_min ~ P/#shingles) the seed's
 # argmin is seed 0's argmin — measured 6.5x excess agreement at
 # sf0.001, which silently collapses "k independent bands" toward one
@@ -229,70 +219,49 @@ UNIVERSAL_HASH_V2_SQL = (
 LSH_NUM_HASHES = 12
 LSH_ROWS_PER_BAND = 2
 LSH_BAND_KEYS = ("band", "s0", "s1")
+# A family size not divisible by r would leave the trailing band with
+# NULL sig slots, and NULL join keys never match: the band's hashes
+# would be computed but contribute zero recall, silently degrading the
+# 1-(1-J^r)^b guarantee.
+if LSH_NUM_HASHES % LSH_ROWS_PER_BAND:
+    raise ValueError(
+        f"LSH_NUM_HASHES={LSH_NUM_HASHES} is not divisible by "
+        f"LSH_ROWS_PER_BAND={LSH_ROWS_PER_BAND}: dead hashes, silent recall loss"
+    )
 
 
-def minhash_wide(
-    shingled: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 12,
-    family: str = "v2",
-) -> DataFrame:
-    """(id, _s0.._s{k-1}): the per-doc MinHash signature as ONE wide row
-    — all k family members aggregated in one groupBy(id) (see
-    :func:`minhash_signatures`, which unpivots this frame to the
-    (id, seed, sig) banding layout). Exposed since r17 so signature-
-    match counting (q155) can compare two docs' sketches as k equality
-    terms on two wide rows instead of exploding 2k rows per doc through
-    a (seed, sig)-keyed join; both consumers share this aggregate's
-    exchange via AQE stage reuse when they appear in one plan."""
-    fam = {"v1": universal_hash, "v2": universal_hash_v2}[family]
+def minhash_wide(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, _s0.._s{k-1}): the per-doc v2 MinHash signature as ONE wide
+    row, k = ``LSH_NUM_HASHES``. All k family members aggregate in ONE
+    groupBy(id) as k min columns — the k-fold seed cross-join a naive
+    formulation would shuffle is pure waste (k x the rows through the
+    exchange). Signature-match counting (q155) compares two docs'
+    sketches as k equality terms on two wide rows;
+    :func:`minhash_signatures_from_wide` unpivots the same frame to the
+    (id, seed, sig) banding layout, and both consumers share this
+    aggregate's exchange via AQE stage reuse when they appear in one
+    plan."""
     hashed = shingled.select(id_col, base_hash28(F.col("shingle")).alias("h"))
     return hashed.groupBy(id_col).agg(
         *[
-            F.min(fam(F.col("h"), F.lit(s).cast("bigint"))).alias(f"_s{s}")
-            for s in range(num_hashes)
+            F.min(universal_hash_v2(F.col("h"), F.lit(s).cast("bigint"))).alias(f"_s{s}")
+            for s in range(LSH_NUM_HASHES)
         ]
     )
 
 
-def minhash_signatures(
-    shingled: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 12,
-    family: str = "v2",
-) -> DataFrame:
-    """(id, seed, sig): min universal hash per seed over the doc's shingles.
-
-    All k family members aggregate in ONE groupBy(id) as k min columns —
-    the k-fold seed cross-join a naive formulation would shuffle is pure
-    waste (k x the rows through the exchange); the wide result (one row
-    per doc) then unpivots to the (id, seed, sig) banding layout for
-    free. Same values as the explode-then-group form, 1/k the shuffle.
-
-    ``family`` selects the hash family: "v2" (the default and the
-    registered family since r15) is the independence-fixed Weyl family
-    (universal_hash_v2); "v1" is the original correlated family, kept
-    only so the independence regression test can measure the defect it
-    replaced.
-    """
-    wide = minhash_wide(shingled, id_col, num_hashes, family)
-    return minhash_signatures_from_wide(wide, id_col, num_hashes)
-
-
-def minhash_signatures_from_wide(
-    wide: DataFrame, id_col: str = "doc_id", num_hashes: int = 12
-) -> DataFrame:
+def minhash_signatures_from_wide(wide: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Unpivot a :func:`minhash_wide` frame to the (id, seed, sig)
-    banding layout — free (one explode of a k-element struct array per
-    row, no shuffle). Split out (r17) so a caller that needs BOTH
-    layouts (q155: bands for candidacy, wide rows for per-pair match
-    counts) builds the aggregate once."""
+    layout :func:`band_signatures` folds — free (one explode of a
+    k-element struct array per row, no shuffle), so a caller that needs
+    BOTH layouts (q155: bands for candidacy, wide rows for per-pair
+    match counts) builds the aggregate once."""
     pairs = F.array(
         *[
             F.struct(
                 F.lit(s).cast("bigint").alias("seed"), F.col(f"_s{s}").alias("sig")
             )
-            for s in range(num_hashes)
+            for s in range(LSH_NUM_HASHES)
         ]
     )
     return wide.select(id_col, F.explode(pairs).alias("_p")).select(
@@ -300,16 +269,10 @@ def minhash_signatures_from_wide(
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    keys: tuple[str, ...] = LSH_BAND_KEYS,
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Distinct (doc_a, doc_b) sharing any complete LSH band — ONE
-    shuffle on the band key; no full pair matrix. ``keys`` defaults to
-    the registered multi-row band layout (band, s0, s1) produced by
-    :func:`minhash_bands` / :func:`band_signatures`; the flat
-    single-hash layout passes ("seed", "sig").
+    shuffle on ``LSH_BAND_KEYS``; no full pair matrix. ``sigs`` is the
+    band layout :func:`minhash_bands` / :func:`band_signatures` build.
 
     The merge hint matters: both join inputs are the SAME signature
     pipeline (shingle explode + sha256 + min-agg), and under the default
@@ -317,121 +280,83 @@ def lsh_candidate_pairs(
     every sha256 runs twice. Forcing a sort-merge join puts identical
     shuffle exchanges on both sides, which AQE stage-reuse materializes
     ONCE (measured sf1: 2.7 s -> 1.55 s for the q41 candidate set)."""
-    a = sigs.select(F.col(id_col).alias("doc_a"), *keys)
-    b = sigs.select(F.col(id_col).alias("doc_b"), *keys)
+    a = sigs.select(F.col(id_col).alias("doc_a"), *LSH_BAND_KEYS)
+    b = sigs.select(F.col(id_col).alias("doc_b"), *LSH_BAND_KEYS)
     return (
         a.hint("merge")
-        .join(b, list(keys))
+        .join(b, list(LSH_BAND_KEYS))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
     )
 
 
-def band_signatures(
-    sigs: DataFrame,
-    rows_per_band: int = 2,
-    id_col: str = "doc_id",
-    num_hashes: int | None = None,
-) -> DataFrame:
+def band_signatures(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fold an (id, seed, sig) signature table into multi-row LSH bands:
-    (id, band, s0..s{r-1}) with band = seed DIV r. Bucket membership
-    then requires r simultaneous min-hash matches, so bucket sizes fall
-    roughly as the r-th power of the single-hash density — the fix for
-    the r14 finding that single-hash buckets ("docs sharing ONE
-    min-shingle") grow linearly with corpus size and force the
-    hot-bucket cap to eat true pairs at sf10. Pair collision prob per
-    band is J^r; recall with b bands is 1-(1-J^r)^b. One groupBy on
-    (id, band); the r sig columns come out of the same aggregate.
-
-    Pass ``num_hashes`` (the seed-family size feeding ``sigs``) to get
-    the divisibility guard: a family size not divisible by r would
-    leave the trailing band with NULL sig slots, and NULL join keys
-    never match — the band's hashes would be computed but contribute
-    zero recall, silently degrading the 1-(1-J^r)^b guarantee. Without
-    ``num_hashes`` the check cannot run (the seed count is not visible
-    from the frame without an action), so prefer :func:`minhash_bands`,
-    which always validates."""
-    if rows_per_band < 1:
-        raise ValueError(f"rows_per_band must be >= 1, got {rows_per_band}")
-    if num_hashes is not None and num_hashes % rows_per_band != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} is not divisible by rows_per_band="
-            f"{rows_per_band}: the trailing band would carry NULL sig "
-            "slots that never join — dead hashes, silent recall loss"
-        )
-    g = sigs.withColumn("band", F.expr(f"seed DIV {rows_per_band}"))
+    (id, band, s0..s{r-1}) with band = seed DIV r, r =
+    ``LSH_ROWS_PER_BAND``. Bucket membership then requires r
+    simultaneous min-hash matches, so bucket sizes fall roughly as the
+    r-th power of the single-hash density — the fix for the r14 finding
+    that single-hash buckets ("docs sharing ONE min-shingle") grow
+    linearly with corpus size and force the hot-bucket cap to eat true
+    pairs at sf10. Pair collision prob per band is J^r; recall with b
+    bands is 1-(1-J^r)^b. One groupBy on (id, band); the r sig columns
+    come out of the same aggregate."""
+    r = LSH_ROWS_PER_BAND
+    g = sigs.withColumn("band", F.expr(f"seed DIV {r}"))
     return g.groupBy(id_col, "band").agg(
         *[
-            F.max(
-                F.when(F.col("seed") % rows_per_band == i, F.col("sig"))
-            ).alias(f"s{i}")
-            for i in range(rows_per_band)
+            F.max(F.when(F.col("seed") % r == i, F.col("sig"))).alias(f"s{i}")
+            for i in range(r)
         ]
     )
 
 
-def minhash_bands(
-    shingled: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = LSH_NUM_HASHES,
-    rows_per_band: int = LSH_ROWS_PER_BAND,
-    family: str = "v2",
-) -> DataFrame:
+def minhash_bands(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """The one-call LSH index build: v2 MinHash signatures folded into
     multi-row bands — (id, band, s0..s{r-1}), ready for
-    ``lsh_candidate_pairs(bands, keys=LSH_BAND_KEYS)``. Composes
-    :func:`minhash_signatures` and :func:`band_signatures` with the
-    divisibility guard always on (the num_hashes is known here). Two
-    groupBys on the id key (signatures, band fold) — no extra
-    shuffle vs the flat layout, since the band fold groups on
-    (id, band) and id already co-partitions it."""
-    sigs = minhash_signatures(shingled, id_col, num_hashes, family)
-    return band_signatures(sigs, rows_per_band, id_col, num_hashes=num_hashes)
+    :func:`lsh_candidate_pairs`. Composes :func:`minhash_wide`, its
+    unpivot and :func:`band_signatures`, as q155 does by hand. Two
+    groupBys on the id key (signatures, band fold) — no extra shuffle,
+    since the band fold groups on (id, band) and id already
+    co-partitions it."""
+    sigs = minhash_signatures_from_wide(minhash_wide(shingled, id_col), id_col)
+    return band_signatures(sigs, id_col)
 
 
-def filter_hot_buckets(
-    sigs: DataFrame, max_bucket: int, keys: tuple[str, ...] = ("seed", "sig")
-) -> DataFrame:
+def filter_hot_buckets(bands: DataFrame, max_bucket: int) -> DataFrame:
     """Drop LSH buckets with more than ``max_bucket`` members — the
     banding-side twin of :func:`ngram_jaccard_pairs`'s posting-list cap.
 
-    A (seed, sig) bucket holding d docs feeds d*(d-1)/2 candidate pairs
-    to ONE reducer; with a k-hash MinHash sketch a bucket in the hundreds
-    means a near-degenerate signature (empty/boilerplate text), which is
-    collision noise, not near-duplication. Measured on the synthetic
-    corpus: cap 100 never binds through sf1 (max bucket 79) but removes
-    96% of sf10's 417M candidate pairs. Bucket counts are one extra
-    groupBy on the SAME key the banding join shuffles on; the qualifying-
-    bucket list is tiny (#distinct buckets) so the join back is
-    broadcast-sized at any corpus scale."""
-    counts = sigs.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bc"))
+    A (band, s0, s1) bucket holding d docs feeds d*(d-1)/2 candidate
+    pairs to ONE reducer; a bucket in the hundreds means a
+    near-degenerate signature (empty/boilerplate text), which is
+    collision noise, not near-duplication. Under r=2 bands the cap never
+    binds at any measured density; it stays as the safety valve. Bucket
+    counts are one extra groupBy on the SAME key the banding join
+    shuffles on; the qualifying-bucket list is tiny (#distinct buckets)
+    so the join back is broadcast-sized at any corpus scale."""
+    counts = bands.groupBy(*LSH_BAND_KEYS).agg(F.count(F.lit(1)).alias("_bc"))
     ok = counts.filter(F.col("_bc") <= max_bucket).drop("_bc")
-    return sigs.join(ok, list(keys))
+    return bands.join(ok, list(LSH_BAND_KEYS))
 
 
-def ngram_jaccard_pairs(
-    shingled: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.05,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Exact Jaccard over distinct shingles for pairs sharing >= 1 shingle.
+def _shared_shingle_counts(
+    shingled: DataFrame, id_col: str, max_doc_freq: int | None, keep: Column
+) -> tuple[DataFrame, DataFrame]:
+    """(inter, sizes) over the distinct (id, shingle) frame: ``inter`` is
+    (doc_a, doc_b, n_common) for the pairs sharing >= 1 shingle that
+    ``keep`` retains, ``sizes`` is (id, n) shingles per doc.
 
     ``max_doc_freq`` is the 100 TB skew guard: shingles appearing in more
     than K documents are dropped from the representation BEFORE the
     self-join (both the intersection AND the set sizes use the capped
-    set, so the result is exactly Jaccard over non-viral shingles). A
-    shingle in d docs contributes d*(d-1)/2 candidate pairs to one
-    reducer; one boilerplate shingle shared by 1e6 docs would otherwise
-    pin 5e11 pairs on a single key. With the cap, per-shingle work is
-    bounded by K^2 regardless of corpus size. None = uncapped (exact
-    classic Jaccard; fine at bench scale).
-    """
+    set). A shingle in d docs contributes d*(d-1)/2 candidate pairs to
+    one reducer; one boilerplate shingle shared by 1e6 docs would
+    otherwise pin 5e11 pairs on a single key. With the cap, per-shingle
+    work is bounded by K^2 regardless of corpus size. None = uncapped."""
     if max_doc_freq is not None:
-        doc_freq = shingled.groupBy("shingle").agg(
-            F.count(F.lit(1)).alias("_df")
-        )
+        doc_freq = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
         shingled = (
             shingled.join(doc_freq, "shingle")
             .filter(F.col("_df") <= max_doc_freq)
@@ -442,9 +367,27 @@ def ngram_jaccard_pairs(
     b = shingled.select(F.col(id_col).alias("doc_b"), "shingle")
     inter = (
         a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        .filter(keep)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return inter, sizes
+
+
+def ngram_jaccard_pairs(
+    shingled: DataFrame,
+    id_col: str = "doc_id",
+    threshold: float = 0.05,
+    max_doc_freq: int | None = None,
+) -> DataFrame:
+    """Exact Jaccard over distinct shingles for pairs sharing >= 1 shingle.
+
+    ``max_doc_freq`` caps viral shingles (:func:`_shared_shingle_counts`):
+    the result is then exactly Jaccard over non-viral shingles. None =
+    uncapped (exact classic Jaccard; fine at bench scale).
+    """
+    inter, sizes = _shared_shingle_counts(
+        shingled, id_col, max_doc_freq, F.col("doc_a") < F.col("doc_b")
     )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("n_b"))
@@ -474,26 +417,13 @@ def containment_pairs(
     Ordered pairs: (doc_a contained-in doc_b); each direction is emitted
     independently when its containment clears ``threshold`` (the common
     case — a snippet inside a long doc — survives in exactly one
-    direction). ``max_doc_freq`` is the same viral-
-    shingle posting-list cap as :func:`ngram_jaccard_pairs` (containment
-    is then exact over the capped shingle sets — the intersection AND
-    |A| both use the capped representation).
+    direction). ``max_doc_freq`` is the same viral-shingle posting-list
+    cap as :func:`ngram_jaccard_pairs` (containment is then exact over
+    the capped shingle sets — the intersection AND |A| both use the
+    capped representation).
     """
-    if max_doc_freq is not None:
-        doc_freq = shingled.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        shingled = (
-            shingled.join(doc_freq, "shingle")
-            .filter(F.col("_df") <= max_doc_freq)
-            .drop("_df")
-        )
-    sizes = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = shingled.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = shingled.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    inter, sizes = _shared_shingle_counts(
+        shingled, id_col, max_doc_freq, F.col("doc_a") != F.col("doc_b")
     )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("n_a"))
     containment = F.col("n_common").cast("double") / F.col("n_a").cast("double")
@@ -509,7 +439,6 @@ def incremental_neardup(
     is_new,
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    num_hashes: int = LSH_NUM_HASHES,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup check of a NEW batch against the EXISTING corpus — the
@@ -535,10 +464,10 @@ def incremental_neardup(
     """
     flagged = docs.select(F.col(id_col), is_new.alias("_new"), F.col("text"))
     bands = minhash_bands(
-        exploded_shingles(flagged, id_col, distinct=False), id_col, num_hashes
+        exploded_shingles(flagged, id_col, distinct=False), id_col
     ).join(flagged.select(id_col, "_new"), id_col)
     if max_bucket is not None:
-        bands = filter_hot_buckets(bands, max_bucket, keys=LSH_BAND_KEYS)
+        bands = filter_hot_buckets(bands, max_bucket)
     new_side = bands.filter(F.col("_new")).select(
         F.col(id_col).alias("doc_new"), *LSH_BAND_KEYS
     )
@@ -582,7 +511,7 @@ def simhash16(docs: DataFrame, id_col: str = "doc_id", seed: int = 7) -> DataFra
         .select(id_col, _seeded_hash(F.col("word"), F.lit(seed)).alias("h"))
     )
     # r17 (guide §2.3 "aggregate before you shuffle", the
-    # minhash_signatures k-min lesson applied to sign counts): all 16
+    # minhash_wide k-min lesson applied to sign counts): all 16
     # per-bit sums ride ONE groupBy(id) as 16 agg columns. The old shape
     # cross-joined every distinct word with a 16-row bit frame — 16x the
     # rows through the (id, b) exchange — then needed a SECOND exchange

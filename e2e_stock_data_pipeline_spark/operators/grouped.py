@@ -1,9 +1,12 @@
-"""Grouped-map pandas operators (applyInPandas) [EXT] — per-key kernels
-that genuinely need imperative math, kept OFF the hot path for
-everything Catalyst can express. Arrow-batched; state is one group in
+"""Grouped-map pandas operators (applyInPandas) [EXT] — the per-key
+RECURSIVE kernels windowed SQL cannot express (each output depends on
+the previous output): ``per_key_ema`` (q125, the unbounded-series form
+of q118's Catalyst fold) and ``per_key_macd``. Everything Catalyst can
+express stays off this path. Arrow-batched; state is one group in
 memory at a time, so the operator scales with max-group size, not table
 size (salt long groups upstream if a single key exceeds executor
-memory).
+memory). Each kernel sorts its group deterministically (ts, event_id
+first) before the recursion.
 """
 
 from __future__ import annotations
@@ -11,80 +14,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-TREND_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("slope", T.DoubleType()),
-        T.StructField("intercept", T.DoubleType()),
-    ]
-)
-
-
-def _ols_trend(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Least-squares slope of value over event order — the per-symbol
-    'trend' feature a training pipeline derives per entity."""
-    import numpy as np
-
-    pdf = pdf.sort_values(["ts", "event_id"])
-    y = pdf["value"].to_numpy(dtype="float64")
-    n = len(y)
-    if n < 2:
-        slope, intercept = 0.0, float(y[0]) if n else None
-    else:
-        x = np.arange(n, dtype="float64")
-        slope, intercept = np.polyfit(x, y, 1)
-    return pd.DataFrame(
-        {
-            "user_id": [int(pdf["user_id"].iloc[0])],
-            "n": [n],
-            "slope": [float(slope)],
-            "intercept": [None if intercept is None else float(intercept)],
-        }
-    )
-
-
-def per_key_trend(events: DataFrame) -> DataFrame:
-    """Per-user OLS trend via applyInPandas (grouped-map, Arrow-batched)."""
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandas(_ols_trend, schema=TREND_SCHEMA)
-    )
-
-
-EWMA_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ewma", T.DoubleType()),
-    ]
-)
-
-
-def _ewma_group(pdf: pd.DataFrame, alpha: float) -> pd.DataFrame:
-    pdf = pdf.sort_values(["ts", "event_id"])
-    out = pdf["value"].ewm(alpha=alpha, adjust=False).mean()
-    return pd.DataFrame(
-        {"event_id": pdf["event_id"], "user_id": pdf["user_id"], "ewma": out}
-    )
-
-
-def per_key_ewma(events: DataFrame, alpha: float = 0.2) -> DataFrame:
-    """Exponentially weighted moving average per key (applyInPandas).
-
-    EWMA is RECURSIVE (each output depends on the previous output), which
-    windowed SQL cannot express — this is precisely the case where the
-    engine drops to a grouped-map pandas kernel: one group in memory at a
-    time, Arrow-batched, ordered deterministically inside the kernel.
-    """
-    return (
-        events.select("event_id", "user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandas(lambda pdf: _ewma_group(pdf, alpha), schema=EWMA_SCHEMA)
-    )
-
 
 EMA_SCHEMA = T.StructType(
     [
@@ -188,7 +117,7 @@ def per_key_macd(
     """MACD(fast, slow, signal) per key — the classic momentum gold
     feature (EMA(fast) - EMA(slow), plus its EMA(signal) line and the
     histogram). Triple-recursive, so it rides the same sanctioned
-    applyInPandas path as per_key_ewma: one key's series per kernel
+    applyInPandas path as per_key_ema: one key's series per kernel
     call, deterministic in-kernel ordering by (ts, event_id)."""
     return (
         events.select("event_id", "user_id", "ts", "value")

@@ -232,9 +232,10 @@ def _d2_int(a: Column, b: Column) -> Column:
 
 
 # Density scaling for the seeded IVF (VERDICT r15 item 2, the q123
-# shortlist-guard shape applied to the coarse quantizer): with
-# density_scaled=True the cell count follows the classic IVF rule
-# n_cells ~ sqrt(N) — concretely LEAST(IVF_CELLS_MAX, GREATEST(n_cells,
+# shortlist-guard shape applied to the coarse quantizer): the cell
+# count follows the classic IVF rule n_cells ~ sqrt(N), with the
+# caller's n_cells and n_probe as floors — concretely
+# LEAST(IVF_CELLS_MAX, GREATEST(n_cells,
 # FLOOR(SQRT(n_cand DIV IVF_CELLS_SCALE_DIV)))) — and the probe count
 # keeps the probed-cell FRACTION constant at 1/IVF_PROBE_DIV
 # (GREATEST(n_probe, cells DIV IVF_PROBE_DIV)), so the probed
@@ -347,20 +348,23 @@ def ivf_rerank_topk_seeded(
     n_cells: int = 16,
     n_probe: int = 4,
     k_top: int = 5,
-    density_scaled: bool = False,
 ) -> DataFrame:
     """IVF probe -> exact rerank, integer-exact and oracle-replayable.
 
     The coarse quantizer is DATA-DERIVED from the candidates instead of
     fit by a KMeans job, so an SQL oracle replays it: seed centroids are
-    the ``n_cells`` smallest-id candidates (KMeans iteration zero, the
-    q123 codebook trick) refined by ONE exact Lloyd step: assign every candidate to its nearest seed,
-    then recompute each cell centroid component-wise as ``sum div
-    count`` (integer truncating division, identical in Spark and DuckDB,
-    so the "learned" centroids are bit-replayable by SQL). Candidates
-    are then indexed by the refined cells, each query probes its
-    ``n_probe`` nearest cells and pays exact integer-L2 distance only
-    inside those cells.
+    the m smallest-id candidates (KMeans iteration zero, the q123
+    codebook trick) refined by ONE exact Lloyd step: assign every
+    candidate to its nearest seed, then recompute each cell centroid
+    component-wise as ``sum div count`` (integer truncating division,
+    identical in Spark and DuckDB, so the "learned" centroids are
+    bit-replayable by SQL). Candidates are then indexed by the refined
+    cells, each query probes its p nearest cells and pays exact
+    integer-L2 distance only inside those cells. The geometry scales
+    with the candidate count n (see the comment on
+    ``IVF_CELLS_SCALE_DIV``): m = min(IVF_CELLS_MAX, max(n_cells,
+    isqrt(n div IVF_CELLS_SCALE_DIV))) and p = max(n_probe, m div
+    IVF_PROBE_DIV), so ``n_cells`` and ``n_probe`` are floors.
 
     Eager like the iterative operators (connected_components,
     pagerank): the geometry count, the seed scan and the Lloyd centroid
@@ -412,18 +416,16 @@ def ivf_rerank_topk_seeded(
     spark = cn.sparkSession
     id_type = cn.schema["cand_id"].dataType.simpleString()
 
-    if density_scaled:
-        # the geometry the oracle computes from the same count: LEAST(
-        # CMAX, GREATEST(n_cells, FLOOR(SQRT(n DIV CSD)))). math.isqrt ==
-        # FLOOR(SQRT(double)) for every count below 2^52 (IEEE sqrt is
-        # correctly rounded and the nearest double to isqrt's integer
-        # result never crosses an integer boundary at these magnitudes).
-        n_cand = cn.count()
-        n_cells = min(
-            IVF_CELLS_MAX,
-            max(n_cells, math.isqrt(n_cand // IVF_CELLS_SCALE_DIV)),
-        )
-        n_probe = max(n_probe, n_cells // IVF_PROBE_DIV)
+    # the geometry the oracle computes from the same count: LEAST(
+    # CMAX, GREATEST(n_cells, FLOOR(SQRT(n DIV CSD)))). math.isqrt ==
+    # FLOOR(SQRT(double)) for every count below 2^52 (IEEE sqrt is
+    # correctly rounded and the nearest double to isqrt's integer
+    # result never crosses an integer boundary at these magnitudes).
+    n_cand = cn.count()
+    n_cells = min(
+        IVF_CELLS_MAX, max(n_cells, math.isqrt(n_cand // IVF_CELLS_SCALE_DIV))
+    )
+    n_probe = max(n_probe, n_cells // IVF_PROBE_DIV)
 
     # seeds: the n_cells smallest-id candidates, cell c = 0..m-1 in id
     # order (the oracle's row_number() - 1 over the same ordered scan)

@@ -335,9 +335,7 @@ def q44b_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q86_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     bands = D.minhash_bands(D.exploded_shingles(docs, distinct=False))
-    cands = D.lsh_candidate_pairs(
-        D.filter_hot_buckets(bands, max_bucket=100, keys=D.LSH_BAND_KEYS)
-    )
+    cands = D.lsh_candidate_pairs(D.filter_hot_buckets(bands, max_bucket=100))
     # Exact-Jaccard verify in ARRAY land (r17, guide §2.4): the pair
     # list joins the one-row-per-doc distinct shingle-set frame and
     # intersects in-row. The old shape (cands ⋈ shingled ⋈ shingled on

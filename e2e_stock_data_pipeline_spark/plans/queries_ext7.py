@@ -138,7 +138,6 @@ def q128_ivf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=_N_CELLS,
         n_probe=_N_PROBE,
         k_top=_K,
-        density_scaled=True,
     )
 
 

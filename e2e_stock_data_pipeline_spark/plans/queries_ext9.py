@@ -787,11 +787,7 @@ def q155_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized DISTINCT shuffle bought nothing.
     wide = D.minhash_wide(D.exploded_shingles(docs, distinct=False))
     sigs = D.minhash_signatures_from_wide(wide)
-    bands = D.filter_hot_buckets(
-        D.band_signatures(sigs, num_hashes=D.LSH_NUM_HASHES),
-        100,
-        keys=D.LSH_BAND_KEYS,
-    )
+    bands = D.filter_hot_buckets(D.band_signatures(sigs), 100)
     cands = D.lsh_candidate_pairs(bands)
     # Signature-match count as 12 equality terms over two WIDE sketch
     # rows (r17): the old shape exploded 12 (seed, sig) rows per doc

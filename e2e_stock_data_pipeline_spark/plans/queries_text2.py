@@ -1,7 +1,6 @@
 """Second text batch [EXT]: normalization pipeline, corpus-level n-gram
 statistics, TF-IDF keyword extraction, and near-dup cluster assignment
-(connected components over the LSH candidate graph — iterative, so
-rows-only check).
+(connected components over the LSH candidate graph).
 """
 
 from __future__ import annotations
@@ -401,8 +400,9 @@ def q60_char_ngram_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE s.s <> 0
     """,
     doc="Feature-hashing text embedding in PURE Catalyst (sparse rows form: "
-    "doc_id, bucket, L2-normalized weight) — same definition as the "
-    "mapInPandas encoder in operators/embed.py (consistency-tested).",
+    "doc_id, bucket, L2-normalized weight) — the engine's one text "
+    "encoder: each token maps to one of 64 buckets by sha256 with a "
+    "sign bit, and the per-doc sums are L2-normalized.",
     tags=("text", "embedding", "ext"),
 )
 def q65_hashed_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:

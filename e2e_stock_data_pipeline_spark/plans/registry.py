@@ -1,9 +1,9 @@
 """Named query inventory.
 
 Every operator the engine claims (SURVEY.md §2) is exposed here as a
-named query: a Spark callable ``(spark, sf_dir) -> DataFrame`` plus,
-when SQL-expressible, an equivalent ANSI-SQL oracle string that DuckDB
-runs on the same parquet tables. The driver's correctness gate compares
+named query: a Spark callable ``(spark, sf_dir) -> DataFrame`` plus
+an equivalent ANSI-SQL oracle string that DuckDB runs on the same
+parquet tables. The driver's correctness gate compares
 the two (row count + schema + order-insensitive value hash), so:
 
 * every computed column is aliased IDENTICALLY on both sides;
@@ -30,7 +30,7 @@ REGISTRY: dict[str, "QuerySpec"] = {}
 class QuerySpec:
     name: str
     spark: SparkQuery
-    oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
+    oracle: str  # ANSI SQL for DuckDB
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline set
@@ -139,7 +139,7 @@ def _memoized(name: str, fn: SparkQuery) -> SparkQuery:
 
 def query(
     name: str,
-    oracle: str | None = None,
+    oracle: str,
     doc: str = "",
     tags: tuple[str, ...] = (),
     bench: bool = False,

@@ -90,7 +90,7 @@ def main(n_rows: int = 10_000_000) -> None:
     from e2e_stock_data_pipeline_spark.operators.dedup import (  # noqa: E402
         exploded_shingles,
         lsh_candidate_pairs,
-        minhash_signatures,
+        minhash_bands,
         ngram_jaccard_pairs,
     )
 
@@ -113,7 +113,7 @@ def main(n_rows: int = 10_000_000) -> None:
     sh = exploded_shingles(docs, distinct=False)
     timed(
         f"minhash-lsh candidates ({n_docs/1e3:.0f}k docs, ~{n_docs*8/1e6:.1f}M shingles)",
-        lambda: lsh_candidate_pairs(minhash_signatures(sh)).count(),
+        lambda: lsh_candidate_pairs(minhash_bands(sh)).count(),
     )
     timed(
         f"capped jaccard pairs (max_doc_freq=200, {n_docs/1e3:.0f}k docs)",

@@ -95,10 +95,9 @@ def _run(spark, spec, sf_dir: str, con) -> dict:
         return {"status": "ok", "spark_s": round(time.perf_counter() - t0, 3)}
     got = oracle.spark_result(sdf)
     rec = {"status": "ok", "spark_s": round(time.perf_counter() - t0, 3), "rows": len(got.rows)}
-    if spec.oracle:
-        msg = oracle.diff(spec.name, got, oracle.duckdb_result(con.sql(spec.oracle)))
-        if msg:
-            rec.update(status="mismatch", error=msg[:300])
+    msg = oracle.diff(spec.name, got, oracle.duckdb_result(con.sql(spec.oracle)))
+    if msg:
+        rec.update(status="mismatch", error=msg[:300])
     return rec
 
 

@@ -4,8 +4,9 @@ result compare.
 
 One session; per query: ONE untimed warmup then --runs timed passes
 via the noop sink (guide §1.4), reporting each pass and the median.
-Floor/canary probes ride along (bench.py's machine-state controls) so a
-polluted box is visible in the output.
+Floor/canary probes ride along, taken through bench.py's own probe (one
+untimed warm-up, then the median of 5), so a polluted box is visible in
+the output and reads on bench.py's scale.
 
 ``--oracle`` times each query's oracle SQL the same way (one untimed
 warmup, then the median of --runs fetches) in a child process, so
@@ -35,6 +36,7 @@ REPO = Path(__file__).resolve().parents[1]
 # can import _duckdb_timed from this module
 sys.path[:0] = [str(REPO), str(REPO / "scripts")]
 
+import bench  # noqa: E402
 from e2e_stock_data_pipeline_spark.plans import oracle, registry  # noqa: E402
 from e2e_stock_data_pipeline_spark.plans.registry import load_all_query_modules  # noqa: E402
 from e2e_stock_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -131,21 +133,9 @@ def main(argv: list[str]) -> int:
     spark = get_spark(app_name="time-queries")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # machine-state controls (bench.py's probes)
-    t0 = time.perf_counter()
-    spark.range(32).write.format("noop").mode("overwrite").save()
-    floor = time.perf_counter() - t0
-    from pyspark.sql import functions as F
-
-    can = (
-        spark.range(2_000_000)
-        .select((F.col("id") % 9973).alias("k"), F.sha2(F.col("id").cast("string"), 256).alias("h"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("h").alias("m"))
-    )
-    t0 = time.perf_counter()
-    can.write.format("noop").mode("overwrite").save()
-    canary = time.perf_counter() - t0
+    # machine-state controls, measured as bench.py measures them
+    floor = bench._probe(spark, lambda s: s.range(32))
+    canary = bench._probe(spark, bench._canary_df)
     probes = f"floor={floor:.3f}s canary={canary:.3f}s"
     if check:
         con = oracle.connect(sf_dir, spark.sparkContext.defaultParallelism)
@@ -184,7 +174,7 @@ def main(argv: list[str]) -> int:
         ts.sort()
         med = median(ts)
         print(f"{name}: median={med:.2f}s runs={[round(t, 2) for t in ts]}", flush=True)
-        if check and spec.oracle:
+        if check:
             ok = pair(spark, spec, q_dir, runs, duckdb_timeout, med) and ok
             registry.release(spark)
         spark.sparkContext.setJobDescription(None)

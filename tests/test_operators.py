@@ -15,13 +15,14 @@ from e2e_stock_data_pipeline_spark.sources import tables
 
 from e2e_stock_data_pipeline_spark.operators.asof import asof_join, asof_join_filtered
 from e2e_stock_data_pipeline_spark.operators.dedup import (
+    base_hash28,
     exploded_shingles,
     jaccard_verify_arrays,
-    minhash_signatures,
     minhash_signatures_from_wide,
     minhash_wide,
     shingle_sets,
     simhash16,
+    universal_hash_v2,
 )
 from e2e_stock_data_pipeline_spark.operators.multimodal import (
     extract_features,
@@ -267,9 +268,17 @@ class TestArrayLandVerify:
         docs = self._docs(spark)
         sh = exploded_shingles(docs, distinct=False)
         wide = minhash_wide(sh)
-        sigs = minhash_signatures(sh)
-        # signatures_from_wide is the same unpivot minhash_signatures does
-        a = {(r.doc_id, r.seed): r.sig for r in sigs.collect()}
+        # the unpivoted wide row equals the explode-then-group form: per
+        # (doc, seed), the min of that seed's family member over shingles
+        seeds = spark.range(12).select(F.col("id").alias("seed"))
+        per_seed = universal_hash_v2(base_hash28(F.col("shingle")), F.col("seed"))
+        a = {
+            (r.doc_id, r.seed): r.sig
+            for r in sh.crossJoin(seeds)
+            .groupBy("doc_id", "seed")
+            .agg(F.min(per_seed).alias("sig"))
+            .collect()
+        }
         b = {
             (r.doc_id, r.seed): r.sig
             for r in minhash_signatures_from_wide(wide).collect()
@@ -648,22 +657,6 @@ class TestSkewOperators:
         assert two == plain
 
 
-class TestGroupedMap:
-    def test_per_key_trend_matches_numpy(self, spark, sf_dir):
-        from e2e_stock_data_pipeline_spark.operators.grouped import per_key_trend
-        from e2e_stock_data_pipeline_spark.sources import tables
-        import numpy as np
-
-        events = tables.load(spark, sf_dir, "events")
-        got = {r.user_id: (r.n, r.slope) for r in per_key_trend(events).collect()}
-        pdf = events.select("user_id", "ts", "event_id", "value").toPandas()
-        for uid, grp in pdf.groupby("user_id"):
-            y = grp.sort_values(["ts", "event_id"])["value"].to_numpy()
-            slope = np.polyfit(np.arange(len(y)), y, 1)[0]
-            n, got_slope = got[uid]
-            assert n == len(y) and abs(got_slope - slope) < 1e-9
-
-
 class TestProductQuantization:
     def test_pq_rerank_recall_bound_and_shortlist_knob(self, spark, sf_dir):
         """q123's shortlist->rerank chain: recall vs exact brute force.
@@ -842,8 +835,10 @@ class TestIvfSeeded:
         candidate), pinning the truth set to the same code path — the
         q123 convention. The synthetic embeddings are near-uniform (no
         cluster structure for the Lloyd step to exploit), the hard IVF
-        regime, so 4/16 probes catches about half the true top-5 and
-        widening n_probe is the recall knob.
+        regime. Below 1024 candidates the geometry is 16 cells with a
+        probe floor of 16 DIV IVF_PROBE_DIV = 8 (q128's ring), so the
+        narrow call is that floor and widening n_probe past it is the
+        recall knob.
         """
         from e2e_stock_data_pipeline_spark.operators.similarity import (
             ivf_rerank_topk_seeded,
@@ -859,17 +854,17 @@ class TestIvfSeeded:
 
         truth = pairs(16)  # every cell probed -> exact top-5
         assert len(truth) == 25
-        narrow, wide = pairs(4), pairs(8)
+        narrow, wide = pairs(8), pairs(12)
         r_narrow = len(narrow & truth) / len(truth)
         r_wide = len(wide & truth) / len(truth)
-        assert r_narrow >= 0.4  # measured 0.48-0.60 at sf0.01/sf0.001
-        assert r_wide >= 0.6  # measured 0.68-0.84 — the knob works
+        assert r_narrow >= 0.4  # measured 0.68-0.84 at sf0.01/sf0.001
+        assert r_wide >= 0.6  # measured 0.96 at both — the knob works
         assert r_wide >= r_narrow
 
     def test_ivf_clusters_recover_planted_structure(self, spark):
         """On genuinely clustered data (the regime IVF exists for) the
         seeded-Lloyd index recovers nearly all of exact top-3 with
-        3/8 probes."""
+        4/8 probes, the probe floor at 8 cells."""
         import numpy as np
 
         from e2e_stock_data_pipeline_spark.operators.similarity import (
@@ -891,7 +886,7 @@ class TestIvfSeeded:
 
         truth = pairs(8)
         assert len(truth) == 12
-        got = pairs(3)
+        got = pairs(4)
         assert len(got & truth) >= int(0.8 * len(truth))
 
     def test_ivf_arrow_empty_candidates_return_empty_frame(self, spark, sf_dir):
@@ -905,12 +900,11 @@ class TestIvfSeeded:
 
         e = tables.load(spark, sf_dir, "embeddings")
         q = e.filter(F.col("vec_id") < 5)
-        for kwargs in ({"n_cells": 8, "n_probe": 4}, {"density_scaled": True}):
-            empty = ivf_rerank_topk_seeded(q, e.filter(F.col("vec_id") < 0), **kwargs)
-            full = ivf_rerank_topk_seeded(q, e.filter(F.col("vec_id") >= 5), **kwargs)
-            assert empty.collect() == []
-            assert full.collect()
-            assert empty.dtypes == full.dtypes
+        empty = ivf_rerank_topk_seeded(q, e.filter(F.col("vec_id") < 0))
+        full = ivf_rerank_topk_seeded(q, e.filter(F.col("vec_id") >= 5))
+        assert empty.collect() == []
+        assert full.collect()
+        assert empty.dtypes == full.dtypes
 
     def test_ivf_arrow_assign_rejects_null_elements(self, spark):
         """A NULL inside a quantized vector must fail loudly, not become
@@ -984,13 +978,13 @@ class TestIncrementalNearDup:
     def test_filter_hot_buckets_drops_only_hot(self, spark):
         from e2e_stock_data_pipeline_spark.operators.dedup import filter_hot_buckets
 
-        rows = [(i, 0, 7) for i in range(5)] + [(90, 1, 3), (91, 1, 4)]
-        sigs = spark.createDataFrame(rows, ["doc_id", "seed", "sig"])
-        kept = filter_hot_buckets(sigs, max_bucket=4).collect()
-        # the 5-member (0, 7) bucket is dropped; singletons survive
-        assert sorted((r.doc_id, r.seed, r.sig) for r in kept) == [
-            (90, 1, 3),
-            (91, 1, 4),
+        rows = [(i, 0, 7, 8) for i in range(5)] + [(90, 1, 3, 5), (91, 1, 4, 5)]
+        bands = spark.createDataFrame(rows, ["doc_id", "band", "s0", "s1"])
+        kept = filter_hot_buckets(bands, max_bucket=4).collect()
+        # the 5-member (0, 7, 8) bucket is dropped; singletons survive
+        assert sorted((r.doc_id, r.band, r.s0, r.s1) for r in kept) == [
+            (90, 1, 3, 5),
+            (91, 1, 4, 5),
         ]
 
 
@@ -1445,41 +1439,11 @@ class TestDensityScaledGeometry:
             assert dot / (na * nb) >= 0.9
             assert abs(dot / (na * nb) - cs) < 1e-12
 
-    def test_ivf_density_scaled_matches_legacy_below_threshold(self, spark, sf_dir):
-        """n_cand < 1024 -> the scaled geometry is 16 cells with a
-        probe ring of max(4, 16 DIV IVF_PROBE_DIV) — r17 widened the
-        fraction to 1/2 (8 probes at gate density), so the scaled path
-        must equal an explicit 16/8 call on the same cells."""
-        from e2e_stock_data_pipeline_spark.operators.similarity import (
-            IVF_PROBE_DIV,
-            ivf_rerank_topk_seeded,
-        )
-        from e2e_stock_data_pipeline_spark.sources import tables
-
-        e = tables.load(spark, sf_dir, "embeddings")
-        q, c = e.filter(F.col("vec_id") < 5), e.filter(F.col("vec_id") >= 5)
-        legacy = sorted(
-            map(
-                tuple,
-                ivf_rerank_topk_seeded(
-                    q, c, k_top=5, n_probe=max(4, 16 // IVF_PROBE_DIV)
-                ).collect(),
-            )
-        )
-        scaled = sorted(
-            map(
-                tuple,
-                ivf_rerank_topk_seeded(q, c, k_top=5, density_scaled=True).collect(),
-            )
-        )
-        assert legacy == scaled
-
-    def test_ivf_density_scaled_matches_explicit_geometry_above(self, spark):
-        """Above the threshold the scaled path must equal an explicit
-        call at the geometry the expressions pick: n_cand=1595 ->
-        cells = floor(sqrt(1595 DIV 4)) = 19, probes = max(4, 19 DIV 2)
-        = 9 (r17 probe fraction) — proving the lazy count drives the
-        same plan."""
+    def test_ivf_above_threshold_geometry_matches_reference(self, spark):
+        """Above the threshold the candidate count picks the geometry:
+        n_cand=1595 -> cells = floor(sqrt(1595 DIV 4)) = 19, probes =
+        max(4, 19 DIV 2) = 9 (r17 probe fraction), and the operator
+        equals the numpy reference at exactly that geometry."""
         import random
 
         from e2e_stock_data_pipeline_spark.operators.similarity import (
@@ -1493,32 +1457,19 @@ class TestDensityScaledGeometry:
             ["vec_id", "embedding"],
         )
         q, c = df.filter(F.col("vec_id") < 5), df.filter(F.col("vec_id") >= 5)
-        scaled = sorted(
-            map(
-                tuple,
-                ivf_rerank_topk_seeded(
-                    q, c, dim=dim, k_top=3, density_scaled=True
-                ).collect(),
-            )
+        got = sorted(
+            map(tuple, ivf_rerank_topk_seeded(q, c, dim=dim, k_top=3).collect())
         )
-        explicit = sorted(
-            map(
-                tuple,
-                ivf_rerank_topk_seeded(
-                    q, c, dim=dim, n_cells=19, n_probe=9, k_top=3
-                ).collect(),
-            )
-        )
-        assert scaled == explicit
+        assert got == _ivf_reference(q, c, 19, 9, k_top=3, dim=dim)
 
     def test_ivf_matches_numpy_reference_bitwise(self, spark, sf_dir):
         """q128's operator must be BIT-IDENTICAL to an independent numpy
         replay of the algorithm its oracle states — smallest-id seeds,
         one truncating Lloyd step, explicit (d2, cell) and
-        (exact_d2, cand_id) tie order — on the fixed and the
-        density-scaled geometry. This is the parity row that licenses
-        the only registered mapInArrow site outside the sanctioned q125
-        boundary."""
+        (exact_d2, cand_id) tie order — at q128's floors and at lower
+        floors the candidate count scales past. This is the parity row
+        that licenses the only registered mapInArrow site outside the
+        sanctioned q125 boundary."""
         from e2e_stock_data_pipeline_spark.operators.similarity import (
             IVF_CELLS_MAX,
             IVF_CELLS_SCALE_DIV,
@@ -1529,18 +1480,20 @@ class TestDensityScaledGeometry:
         e = tables.load(spark, sf_dir, "embeddings")
         q, c = e.filter(F.col("vec_id") < 5), e.filter(F.col("vec_id") >= 5)
         n_cand = c.count()
-        scaled_cells = min(
-            IVF_CELLS_MAX, max(16, math.isqrt(n_cand // IVF_CELLS_SCALE_DIV))
-        )
-        scaled_probes = max(4, scaled_cells // IVF_PROBE_DIV)
-        for kwargs, geometry in (
-            ({"n_cells": 8, "n_probe": 4}, (8, 4)),
-            ({"density_scaled": True}, (scaled_cells, scaled_probes)),
-        ):
-            got = sorted(
-                map(tuple, ivf_rerank_topk_seeded(q, c, k_top=5, **kwargs).collect())
+        for n_cells, n_probe in ((16, 4), (8, 4)):
+            cells = min(
+                IVF_CELLS_MAX, max(n_cells, math.isqrt(n_cand // IVF_CELLS_SCALE_DIV))
             )
-            assert got == _ivf_reference(q, c, *geometry, k_top=5), kwargs
+            probes = max(n_probe, cells // IVF_PROBE_DIV)
+            got = sorted(
+                map(
+                    tuple,
+                    ivf_rerank_topk_seeded(
+                        q, c, n_cells=n_cells, n_probe=n_probe, k_top=5
+                    ).collect(),
+                )
+            )
+            assert got == _ivf_reference(q, c, cells, probes, k_top=5), n_cells
 
     def test_ivf_reference_tie_order_on_duplicate_vectors(self, spark):
         """Duplicate vectors make every tie real: duplicate seeds tie
@@ -1571,10 +1524,11 @@ class TestDensityScaledGeometry:
                 ).collect(),
             )
         )
-        want = _ivf_reference(q, c, 6, 2, k_top=3, dim=2)
+        # 6 cells floor the probe ring at 6 DIV IVF_PROBE_DIV = 3
+        want = _ivf_reference(q, c, 6, 3, k_top=3, dim=2)
         assert got == want
         # the ties resolved as described: cells 1 and 5 emptied, the
-        # origin query probed cells 0 and 2 of four equidistant ones
+        # origin query probed cells 0, 2 and 3 of four equidistant ones
         # and ranked the tied candidates 0, 1, 2 by id
         assert {r[2] for r in want} <= {0, 2, 3, 4}
         assert [(r[1], r[2], r[4]) for r in want if r[0] == 100] == [
@@ -1594,73 +1548,6 @@ class TestDensityScaledGeometry:
         q, c = e.filter(F.col("vec_id") < 5), e.filter(F.col("vec_id") >= 5)
         with pytest.raises(ValueError, match="shortlist_scale_div"):
             pq_rerank_topk_seeded(q, c, shortlist_scale_div=0)
-
-
-class TestTextEmbedding:
-    def test_deterministic_normalized_and_semantic(self, spark):
-        from e2e_stock_data_pipeline_spark.operators.embed import embed_text
-        from e2e_stock_data_pipeline_spark.operators.similarity import brute_force_topk
-        import numpy as np
-
-        docs = spark.createDataFrame(
-            [
-                (0, "the quick brown fox jumps over the lazy dog"),
-                (1, "the quick brown fox leaps over the lazy dog"),
-                (2, "spark window aggregate shuffle partition broadcast join"),
-                (3, ""),
-            ],
-            ["doc_id", "text"],
-        )
-        a = {r.doc_id: r.embedding for r in embed_text(docs).collect()}
-        b = {r.doc_id: r.embedding for r in embed_text(docs).collect()}
-        assert a == b                                  # deterministic
-        assert all(len(v) == 64 for v in a.values())
-        for i in (0, 1, 2):
-            assert abs(np.linalg.norm(a[i]) - 1.0) < 1e-5  # unit vectors
-        assert np.linalg.norm(a[3]) == 0.0                 # empty text -> zero vec
-        cos = lambda x, y: float(np.dot(x, y))
-        assert cos(a[0], a[1]) > cos(a[0], a[2])           # near-dup closer
-
-    def test_feeds_similarity_stack(self, spark):
-        """End-to-end text -> embed -> kNN: nearest neighbor of a doc is its
-        near-duplicate."""
-        from e2e_stock_data_pipeline_spark.operators.embed import embed_text
-        from e2e_stock_data_pipeline_spark.operators.similarity import brute_force_topk
-        from e2e_stock_data_pipeline_spark.sources import tables
-
-        docs = tables.load(spark, "/root/testdata/sf0.001", "documents").limit(50)
-        dup = docs.filter(F.col("doc_id") == 0).select(
-            (F.col("doc_id") + 10000).alias("doc_id"), "text", "lang", "source", "n_chars"
-        )
-        emb = embed_text(docs.unionByName(dup), id_col="doc_id").withColumnRenamed(
-            "doc_id", "vec_id"
-        )
-        out = brute_force_topk(
-            emb.filter(F.col("vec_id") == 10000), emb.filter(F.col("vec_id") < 10000), k=1
-        ).collect()
-        assert out[0].cand_id == 0 and out[0].cos_sim > 0.999
-
-    def test_catalyst_and_pandas_encoders_agree(self, spark):
-        """The pure-Catalyst q65 definition and the mapInPandas encoder
-        produce the same vectors (float32 rounding tolerance)."""
-        from e2e_stock_data_pipeline_spark.operators.embed import embed_text
-        from e2e_stock_data_pipeline_spark.plans.registry import load_all_query_modules
-        from e2e_stock_data_pipeline_spark.sources import tables
-
-        sf = "/root/testdata/sf0.001"
-        reg = load_all_query_modules()
-        sparse = {
-            (r.doc_id, r.bucket): r.weight
-            for r in reg["q65_hashed_embedding"].spark(spark, sf).collect()
-        }
-        docs = tables.load(spark, sf, "documents").filter(F.col("doc_id") % 10 == 0)
-        dense = {r.doc_id: r.embedding for r in embed_text(docs).collect()}
-        assert dense and sparse
-        for (doc, bucket), w in sparse.items():
-            assert abs(dense[doc][bucket] - w) < 1e-6
-        # and every nonzero dense component appears in the sparse form
-        n_nonzero = sum(1 for v in dense.values() for x in v if abs(x) > 1e-9)
-        assert n_nonzero == len(sparse)
 
 
 class TestAsofTolerance:
@@ -1687,24 +1574,6 @@ class TestAsofTolerance:
                         value_cols=["val"], how="left", tolerance="10 MINUTES")
         got = {r.pid: (r.asof_rt, r.asof_val) for r in out.collect()}
         assert got == {"p1": (None, None), "p2": (ts(55), 2.0)}
-
-
-class TestEwma:
-    def test_matches_manual_recursion(self, spark):
-        from e2e_stock_data_pipeline_spark.operators.grouped import per_key_ewma
-
-        import datetime as _dt
-
-        rows = [(i, _dt.datetime(2024, 1, 1, 0, i), 7, float(v))
-                for i, v in enumerate([10, 12, 11, 15, 14])]
-        events = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "value"])
-        got = {r.event_id: r.ewma for r in per_key_ewma(events, alpha=0.5).collect()}
-        # manual recursion: e_0 = v_0; e_t = 0.5*v_t + 0.5*e_{t-1}
-        exp, e = {}, None
-        for i, v in enumerate([10.0, 12.0, 11.0, 15.0, 14.0]):
-            e = v if e is None else 0.5 * v + 0.5 * e
-            exp[i] = e
-        assert all(abs(got[i] - exp[i]) < 1e-12 for i in exp)
 
 
 class TestSaltedJoinOuterGuard:
@@ -2490,13 +2359,22 @@ class TestLshV2Primitives:
     must deliver the 1-(1-J^r)^b recall the math promises — proven on
     planted truth BEFORE any registered query moves."""
 
-    def _sigs(self, spark, family, num_hashes=6):
+    def _sigs(self, spark, member):
+        """(doc_id, seed, sig) over 6 seeds of the family ``member``
+        builds from (base hash, seed) Columns."""
         from e2e_stock_data_pipeline_spark.operators import dedup as D
         from e2e_stock_data_pipeline_spark.sources import tables
 
         docs = tables.load(spark, "/root/testdata/sf0.001", "documents")
-        sh = D.exploded_shingles(docs, distinct=False)
-        return D.minhash_signatures(sh, num_hashes=num_hashes, family=family)
+        h = D.exploded_shingles(docs, distinct=False).select(
+            "doc_id", D.base_hash28(F.col("shingle")).alias("h")
+        )
+        seeds = spark.range(6).select(F.col("id").alias("seed"))
+        return (
+            h.crossJoin(seeds)
+            .groupBy("doc_id", "seed")
+            .agg(F.min(member(F.col("h"), F.col("seed"))).alias("sig"))
+        )
 
     def test_v2_seeds_are_independent_v1_are_not(self, spark):
         """Fraction of (doc, seed>0) rows whose sig equals the seed's
@@ -2521,12 +2399,13 @@ class TestLshV2Primitives:
             hit = j.filter(F.col("sig") == F.expr(pred_sql)).count()
             return hit / tot
 
+        # v1, the retired family: (2s+1)*h + (7919s+13) mod P
         v1 = agreement(
-            self._sigs(spark, "v1"),
+            self._sigs(spark, lambda h, s: ((s * 2 + 1) * h + (s * 7919 + 13)) % P),
             f"((seed * 2 + 1) * mh + (seed * 7919 + 13)) % {P}",
         )
         v2 = agreement(
-            self._sigs(spark, "v2"),
+            self._sigs(spark, D.universal_hash_v2),
             D.UNIVERSAL_HASH_V2_SQL.format(seed="seed", base="mh"),
         )
         assert v1 > 0.12, f"v1 correlation vanished ({v1:.3f}) — family changed?"
@@ -2534,8 +2413,7 @@ class TestLshV2Primitives:
 
     def test_v2_sql_template_mirrors_column_form(self, spark):
         """UNIVERSAL_HASH_V2_SQL (the oracle-mirror template) must equal
-        universal_hash_v2 on every (h, seed) — the same parity contract
-        v1 carries."""
+        universal_hash_v2 on every (h, seed)."""
         from e2e_stock_data_pipeline_spark.operators import dedup as D
 
         df = spark.range(2000).select(
@@ -2574,10 +2452,7 @@ class TestLshV2Primitives:
              for d, t in rows]
         ).to_parquet(f"{tmp_path}/documents.parquet")
         docs = tables.load(spark, str(tmp_path), "documents")
-        sigs = D.minhash_signatures(
-            D.exploded_shingles(docs, distinct=False), num_hashes=12, family="v2"
-        )
-        bands = D.band_signatures(sigs, rows_per_band=2)
+        bands = D.minhash_bands(D.exploded_shingles(docs, distinct=False))
         per_doc = bands.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("nb"),
             F.sum(F.col("s0").isNull().cast("int") + F.col("s1").isNull().cast("int")).alias("nulls"),
@@ -2585,13 +2460,7 @@ class TestLshV2Primitives:
         assert all(r.nb == 6 and r.nulls == 0 for r in per_doc)
         cands = {
             (r.doc_a, r.doc_b)
-            for r in D.lsh_candidate_pairs(bands, keys=("band", "s0", "s1")).collect()
+            for r in D.lsh_candidate_pairs(bands).collect()
         }
         missed = {p for p in want if p not in cands}
         assert not missed, f"banding missed planted high-J pairs: {sorted(missed)[:5]}"
-
-    def test_band_signatures_rejects_bad_r(self, spark):
-        from e2e_stock_data_pipeline_spark.operators import dedup as D
-
-        with pytest.raises(ValueError):
-            D.band_signatures(spark.range(1).selectExpr("id doc_id", "0L seed", "0L sig"), 0)

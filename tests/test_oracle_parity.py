@@ -25,8 +25,7 @@ def oracle_con(sf_dir):
     con.close()
 
 
-oracle_cases = sorted(n for n, s in REGISTRY.items() if s.oracle)
-rows_only_cases = sorted(n for n, s in REGISTRY.items() if not s.oracle)
+oracle_cases = sorted(REGISTRY)
 
 
 @pytest.mark.parametrize("name", oracle_cases)
@@ -35,10 +34,3 @@ def test_query_matches_oracle(name, spark, sf_dir, oracle_con):
     got = oracle.spark_result(spec.spark(spark, oracle.sf_dir_for(spec, sf_dir)))
     msg = oracle.diff(name, got, oracle.duckdb_result(oracle_con.sql(spec.oracle)))
     assert msg is None, msg
-
-
-@pytest.mark.parametrize("name", rows_only_cases)
-def test_rows_only_query_runs(name, spark, sf_dir):
-    spec = REGISTRY[name]
-    sdf = spec.spark(spark, sf_dir)
-    assert sdf.count() >= 0

@@ -1,8 +1,8 @@
-"""Smoke for the sweep and timing scripts at the test sf (sf0.001 by
-default), run in-process on the shared test session, so no script may
-stop a session it did not build. Both compare through plans/oracle.py,
-the comparison the parity suite uses; q36 pins its oracle to sf0.01,
-which the sweep must honour."""
+"""Smoke for the sweep, timing and cluster-verify scripts at the test sf
+(sf0.001 by default), run in-process on the shared test session, so no
+script may stop a session it did not build. The sweep and the timer
+compare through plans/oracle.py, the comparison the parity suite uses;
+q36 pins its oracle to sf0.01, which the sweep must honour."""
 
 from __future__ import annotations
 
@@ -45,3 +45,11 @@ class TestTimeQueries:
         monkeypatch.setattr(oracle, "COLLECT_LIMIT", 1)
         assert load_script("time_queries").pair(spark, spec, sf_dir, 1, 600.0, 1.0)
         assert "compare=aggregate match=True" in capsys.readouterr().out
+
+
+class TestClusterVerify:
+    def test_invariants_hold_on_the_clustered_pairs(self, spark, sf_dir, capsys, load_script):
+        assert load_script("sf10_cc_verify").main(sf_dir) == 0
+        out = capsys.readouterr().out
+        assert '"crossing_edges": 0' in out
+        assert '"metric": "cc_invariants_summary"' in out
