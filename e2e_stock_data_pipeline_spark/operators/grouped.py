@@ -1,12 +1,12 @@
-"""Grouped-map pandas operators (applyInPandas) [EXT] — the per-key
-RECURSIVE kernels windowed SQL cannot express (each output depends on
+"""Grouped-map pandas operator (applyInPandas) [EXT] — the per-key
+RECURSIVE kernel windowed SQL cannot express (each output depends on
 the previous output): ``per_key_ema`` (q125, the unbounded-series form
-of q118's Catalyst fold) and ``per_key_macd``. Everything Catalyst can
-express stays off this path. Arrow-batched; state is one group in
-memory at a time, so the operator scales with max-group size, not table
-size (salt long groups upstream if a single key exceeds executor
-memory). Each kernel sorts its group deterministically (ts, event_id
-first) before the recursion.
+of q118's Catalyst fold). Everything Catalyst can express stays off
+this path. Arrow-batched; state is one group in memory at a time, so
+the operator scales with max-group size, not table size (salt long
+groups upstream if a single key exceeds executor memory). The kernel
+sorts its group deterministically (ts, event_id first) before the
+recursion.
 """
 
 from __future__ import annotations
@@ -80,49 +80,4 @@ def per_key_ema(events: DataFrame, alpha: float = 0.25) -> DataFrame:
         events.select("user_id", "ts", "event_id", "value")
         .groupBy("user_id")
         .applyInPandas(lambda pdf: _ema_group(pdf, alpha), schema=EMA_SCHEMA)
-    )
-
-
-MACD_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("macd", T.DoubleType()),
-        T.StructField("macd_signal", T.DoubleType()),
-        T.StructField("macd_hist", T.DoubleType()),
-    ]
-)
-
-
-def _macd_group(pdf: pd.DataFrame, fast: int, slow: int, signal: int) -> pd.DataFrame:
-    pdf = pdf.sort_values(["ts", "event_id"])
-    ema_fast = pdf["value"].ewm(span=fast, adjust=False).mean()
-    ema_slow = pdf["value"].ewm(span=slow, adjust=False).mean()
-    macd = ema_fast - ema_slow
-    sig = macd.ewm(span=signal, adjust=False).mean()
-    return pd.DataFrame(
-        {
-            "event_id": pdf["event_id"],
-            "user_id": pdf["user_id"],
-            "macd": macd,
-            "macd_signal": sig,
-            "macd_hist": macd - sig,
-        }
-    )
-
-
-def per_key_macd(
-    events: DataFrame, fast: int = 12, slow: int = 26, signal: int = 9
-) -> DataFrame:
-    """MACD(fast, slow, signal) per key — the classic momentum gold
-    feature (EMA(fast) - EMA(slow), plus its EMA(signal) line and the
-    histogram). Triple-recursive, so it rides the same sanctioned
-    applyInPandas path as per_key_ema: one key's series per kernel
-    call, deterministic in-kernel ordering by (ts, event_id)."""
-    return (
-        events.select("event_id", "user_id", "ts", "value")
-        .groupBy("user_id")
-        .applyInPandas(
-            lambda pdf: _macd_group(pdf, fast, slow, signal), schema=MACD_SCHEMA
-        )
     )

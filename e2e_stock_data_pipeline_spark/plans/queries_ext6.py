@@ -239,10 +239,12 @@ def q124_late_quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fold. Same oracle as q118 because the two paths are bit-identical "
     "(property-tested) — this row makes the applyInPandas surface "
     "itself oracle-gated, evidence that the Python/Arrow boundary "
-    "preserves IEEE doubles exactly. The scale story is the inverse of "
-    "q118's: memory per key is Arrow-batch governed (unbounded-key "
-    "safe) and measured ~2x faster at 100M obs x 10k keys "
-    "(BENCH_NOTES r7).",
+    "preserves IEEE doubles exactly. Memory per key is Arrow-batch "
+    "governed (unbounded-key safe). Speed depends on rows per key: at "
+    "10k rows per key (100M obs, 32 cores) it ran 12.6 s against the "
+    "fold's 23.9 s (BENCH_NOTES r7); on 4 cores with 10k keys it ran "
+    "34.7-38.2 s against 0.51 s at ~2 rows per key and 12.2-15.3 s "
+    "against 1.2-2.2 s at ~200 rows per key (ROADMAP direction 15).",
     tags=("ext", "window", "fold", "pandas"),
 )
 def q125_ema_unbounded_twin(spark: SparkSession, sf_dir: str) -> DataFrame:

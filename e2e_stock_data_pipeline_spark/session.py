@@ -14,6 +14,11 @@ down to local[N]:
 * Session timezone pinned to UTC so timestamp semantics match the
   reference's tz-stripped timestamps (ingest_fmp_prices.py:258) and the
   DuckDB oracle's naive timestamps.
+* Streaming state stays on Spark's default HDFSBacked provider. Large-
+  state jobs choose RocksDB with Spark's own conf,
+  ``spark.sql.streaming.stateStore.providerClass`` (``extra_conf`` or
+  ``--conf``); BENCH_NOTES "RocksDB state store experiment" measured
+  resident state 4.3x smaller at throughput within noise.
 """
 
 from __future__ import annotations
@@ -24,43 +29,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# Streaming state-store provider registry. "rocksdb" is the documented
-# choice for large-state streaming jobs: the r13 experiment
-# (BENCH_NOTES "RocksDB state store experiment") measured throughput
-# within noise (-2%) and resident state 4.3x smaller — the dimension
-# that matters at 100 TB key cardinality, where HDFSBackedStateStore
-# keeps every version of every key on-heap. The local default stays
-# Spark's built-in HDFSBacked for parity with the driver's gate
-# process; flip per-session with state_store="rocksdb" or globally with
-# SPARK_GRAFT_STATE_STORE=rocksdb (the whole streaming suite is green
-# under both — see tests/test_streaming.py).
-STATE_STORE_PROVIDERS = {
-    "hdfs": "org.apache.spark.sql.execution.streaming.state."
-    "HDFSBackedStateStoreProvider",
-    "rocksdb": "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider",
-}
-
-
-def _state_store_conf(state_store: str | None) -> str | None:
-    choice = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE")
-    if not choice:
-        return None
-    try:
-        return STATE_STORE_PROVIDERS[choice.lower()]
-    except KeyError:
-        raise ValueError(
-            f"unknown state store {choice!r}; expected one of "
-            f"{sorted(STATE_STORE_PROVIDERS)}"
-        ) from None
-
-
 def get_spark(
     app_name: str = "e2e-stock-data-pipeline-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    state_store: str | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config."""
     master = master or f"local[{DEFAULT_CPUS}]"
@@ -91,11 +64,6 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    provider = _state_store_conf(state_store)
-    if provider:
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", provider
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -109,9 +77,6 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    provider = _state_store_conf(None)
-    if provider:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_CPUS))
     except Exception:

@@ -6,9 +6,14 @@ aggs can't express].
 running_user_stats: per-key cumulative (count, sum, max) maintained in
 GroupState across micro-batches — the canonical shape for online
 feature accumulation (e.g., per-symbol running VWAP in the reference's
-domain). Works identically under availableNow batches and continuous
-triggers; state is bounded per key (a fixed-width tuple), so the
-operator scales with key cardinality, not event volume.
+domain). streaming_cusum: the per-key CUSUM recursion behind q174's
+batch calibration. Both work identically under availableNow batches and
+continuous triggers; state is bounded per key (a fixed-width tuple), so
+each operator scales with key cardinality, not event volume.
+
+applyInPandasWithState is the engine's one custom-state API. Spark 4's
+transformWithStateInPandas talks to its state server over protobuf,
+which is not among the package's dependencies (pyproject.toml).
 """
 
 from __future__ import annotations
@@ -19,10 +24,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 from pyspark.sql import types as T
 
 STATS_OUTPUT_SCHEMA = T.StructType(
@@ -43,20 +44,18 @@ STATS_STATE_SCHEMA = T.StructType(
 )
 
 
-def _fold_stats(
-    key: tuple, prior: tuple | None, pdfs: Iterable[pd.DataFrame]
-) -> tuple[tuple, pd.DataFrame]:
-    """Fold one key's micro-batch frames into its running (n, total, mx)
-    state; returns the new state and the row to emit. Both stateful
-    APIs below call it, so they cannot drift apart."""
-    n, total, mx = prior if prior is not None else (0, 0.0, float("-inf"))
+def _update_user_stats(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    n, total, mx = state.get if state.exists else (0, 0.0, float("-inf"))
     for pdf in pdfs:
         vals = pdf["value"].dropna()
         n += int(vals.size)
         total += float(vals.sum())
         if vals.size:
             mx = max(mx, float(vals.max()))
-    row = pd.DataFrame(
+    state.update((n, total, mx))
+    yield pd.DataFrame(
         {
             "user_id": [key[0]],
             "n_events": [n],
@@ -64,15 +63,6 @@ def _fold_stats(
             "max_value": [mx if mx != float("-inf") else None],
         }
     )
-    return (n, total, mx), row
-
-
-def _update_user_stats(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    new, row = _fold_stats(key, state.get if state.exists else None, pdfs)
-    state.update(new)
-    yield row
 
 
 def running_user_stats(events: DataFrame) -> DataFrame:
@@ -87,46 +77,6 @@ def running_user_stats(events: DataFrame) -> DataFrame:
             stateStructType=STATS_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (the successor API to
-# applyInPandasWithState: typed state handles, timers, schema evolution).
-# Same semantics as running_user_stats; requires the RocksDB state store.
-# ---------------------------------------------------------------------------
-
-
-class RunningStatsProcessor(StatefulProcessor):
-    """Module-level (picklable) processor: typed ValueState holding
-    the same (n, total, mx) tuple the GroupState form keeps."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("stats", STATS_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        prior = self._state.get() if self._state.exists() else None
-        new, row = _fold_stats(key, prior, rows)
-        self._state.update(new)
-        yield row
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """running_user_stats on the transformWithStateInPandas API — the
-    engine's forward path for custom streaming state (typed ValueState
-    in a StatefulProcessor instead of a raw tuple in GroupState)."""
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningStatsProcessor(),
-            outputStructType=STATS_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

@@ -1,6 +1,6 @@
 """Streaming event-time window aggregates with watermarks [EXT,
 SURVEY.md §2.10]. The tumbling plan of plans/queries_streaming.py
-(q29) plus OHLC and dedup, attached to an unbounded source —
+(q29) plus dedup, attached to an unbounded source —
 correctness of the window semantics is proven by the batch oracle gate;
 these wire in watermarking and state cleanup for the streaming run.
 """
@@ -50,24 +50,3 @@ def streaming_dedup(
     keep-last MERGE backstop (pipeline/silver.py).
     """
     return _with_event_time(events, ts_col, watermark).dropDuplicates(keys + [ts_col])
-
-
-def hourly_ohlc(
-    events: DataFrame, ts_col: str = "ts", watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming OHLC candles: per-key hourly open/high/low/close over a
-    watermarked event-time window — the live version of the q71 batch
-    aggregate (min_by/max_by on event time, no per-key sort)."""
-    return (
-        _with_event_time(events, ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 hour").alias("w"), "user_id")
-        .agg(
-            F.min_by("value", ts_col).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", ts_col).alias("close"),
-            F.count(F.lit(1)).alias("n_ticks"),
-        )
-        .select("user_id", F.col("w.start").alias("bucket_start"),
-                "open", "high", "low", "close", "n_ticks")
-    )

@@ -1822,47 +1822,6 @@ class TestMultimodalHeaderParse:
         assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
 
 
-class TestMacd:
-    def test_matches_manual_recursion(self, spark):
-        from e2e_stock_data_pipeline_spark.operators.grouped import per_key_macd
-
-        import datetime as _dt
-
-        vals = [10.0, 12.0, 11.0, 15.0, 14.0, 13.0, 16.0, 18.0]
-        rows = [(i, _dt.datetime(2024, 1, 1, 0, i), 7, v) for i, v in enumerate(vals)]
-        events = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "value"])
-        got = {
-            r.event_id: (r.macd, r.macd_signal, r.macd_hist)
-            for r in per_key_macd(events, fast=3, slow=5, signal=2).collect()
-        }
-        # manual recursion with span-alphas a = 2/(span+1)
-        af, aslow, asig = 2 / 4, 2 / 6, 2 / 3
-        ef = es = sig = None
-        for i, v in enumerate(vals):
-            ef = v if ef is None else af * v + (1 - af) * ef
-            es = v if es is None else aslow * v + (1 - aslow) * es
-            m = ef - es
-            sig = m if sig is None else asig * m + (1 - asig) * sig
-            assert abs(got[i][0] - m) < 1e-12
-            assert abs(got[i][1] - sig) < 1e-12
-            assert abs(got[i][2] - (m - sig)) < 1e-12
-
-    def test_keys_isolated(self, spark):
-        from e2e_stock_data_pipeline_spark.operators.grouped import per_key_macd
-
-        import datetime as _dt
-
-        rows = [(i, _dt.datetime(2024, 1, 1, 0, i % 60), i % 2, float(i)) for i in range(40)]
-        events = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "value"])
-        out = per_key_macd(events).collect()
-        assert len(out) == 40
-        # each key's first row has macd == 0 (fast EMA == slow EMA at t0)
-        first_per_key = {}
-        for r in sorted(out, key=lambda r: r.event_id):
-            first_per_key.setdefault(r.user_id, r)
-        assert all(abs(r.macd) < 1e-12 for r in first_per_key.values())
-
-
 class TestRandomizedEquivalences:
     """Property-style checks in bulk: one seeded random dataset, many
     cases per Spark job, operator result compared against the naive

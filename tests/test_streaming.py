@@ -338,36 +338,6 @@ class TestCusumClosedForm:
         assert int(out[0]["cusum_fp"][0]) == 30_000
 
 
-class TestForeachBatchUpsert:
-    def test_stream_merge_keeps_latest(self, spark, tmp_path):
-        from e2e_stock_data_pipeline_spark.streaming.foreach_batch import stream_merge_upsert
-
-        src, dest, ckpt = (str(tmp_path / d) for d in ["src", "silver", "ckpt"])
-        schema = "symbol string, trade_date string, close double, v long"
-        spark.createDataFrame(
-            [("AAPL", "2024-09-13", 1.5, 1), ("AAPL", "2024-09-16", 1.6, 1)], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = stream_merge_upsert(stream, dest, ckpt, ["symbol", "trade_date"], "v")
-        q.awaitTermination()
-        assert spark.read.parquet(dest).count() == 2
-
-        # late correction + new symbol arrive in a second file
-        spark.createDataFrame(
-            [("AAPL", "2024-09-16", 9.9, 2), ("MSFT", "2024-09-16", 5.0, 2)], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = stream_merge_upsert(stream, dest, ckpt, ["symbol", "trade_date"], "v")
-        q.awaitTermination()
-        got = {(r.symbol, r.trade_date): r.close for r in spark.read.parquet(dest).collect()}
-        assert got == {
-            ("AAPL", "2024-09-13"): 1.5,
-            ("AAPL", "2024-09-16"): 9.9,  # updated by the late batch
-            ("MSFT", "2024-09-16"): 5.0,
-        }
-
-
 class TestLateDataPolicy:
     def test_watermark_drops_late_events_in_append_aggregation(self, spark, tmp_path):
         """The engine's documented late-data policy (SURVEY §7 T8): events
@@ -736,36 +706,6 @@ class TestMissingFileResilience:
         assert n1 == events.filter(F.col("event_id") % 2 == 0).count()
 
 
-class TestStreamingOhlc:
-    def test_stream_matches_batch_candles(self, spark, sf_dir, tmp_path):
-        from e2e_stock_data_pipeline_spark.streaming.windows import hourly_ohlc
-
-        src, dest, ckpt = (str(tmp_path / d) for d in ["src", "out", "ckpt"])
-        events = tables.load(spark, sf_dir, "events")
-        _write_chunk(events, src)
-        stream = bronze.read_file_stream(spark, src, EVENTS_SCHEMA, "parquet")
-        q = (
-            hourly_ohlc(stream)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", dest)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {
-            (r.user_id, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
-            for r in spark.read.parquet(dest).collect()
-        }
-        expect = {
-            (r.user_id, r.bucket_start): (r.open, r.high, r.low, r.close, r.n_ticks)
-            for r in hourly_ohlc(events).collect()
-        }
-        # append emits watermark-sealed windows; all emitted must match batch
-        assert got and all(expect[k] == v for k, v in got.items())
-
-
 class TestRollupAtomicity:
     """The epoch marker commits in the SAME rename as the merged data
     (ADVICE r1): no crash window where data reflects epoch N but the
@@ -1062,202 +1002,3 @@ class TestStreamStreamJoin:
         rows2 = spark.read.parquet(dest).collect()
         assert {r.click_id for r in rows2 if r.click_id == 10**9} == set()
         assert len(rows2) == len(rows)
-
-
-class TestTransformWithState:
-    def test_tws_matches_apply_in_pandas_with_state(self, spark, sf_dir, tmp_path):
-        """The Spark 4 StatefulProcessor twin produces the same running
-        stats as the applyInPandasWithState form and the batch aggregate.
-        Requires protobuf (the TWS state-server wire protocol); skipped
-        where it isn't installed — the applyInPandasWithState form above
-        covers the semantics either way."""
-        import pytest as _pytest
-
-        _pytest.importorskip(
-            "google.protobuf",
-            reason="transformWithState state server needs protobuf (not in this env)",
-        )
-        from e2e_stock_data_pipeline_spark.streaming.stateful import (
-            running_user_stats_tws,
-        )
-
-        old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        try:
-            src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
-            events = tables.load(spark, sf_dir, "events").limit(300)
-            _write_chunk(events, src)
-            stream = bronze.read_file_stream(spark, src, EVENTS_SCHEMA, "parquet")
-            out = running_user_stats_tws(stream)
-            q = (
-                out.writeStream.format("memory")
-                .queryName("user_stats_tws")
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            got = {
-                r.user_id: (r.n_events, round(r.total_value, 6), r.max_value)
-                for r in spark.sql("SELECT * FROM user_stats_tws").collect()
-            }
-            expect = {
-                r.user_id: (r.n, round(r.t, 6), r.m)
-                for r in events.groupBy("user_id")
-                .agg(
-                    F.count("value").alias("n"),
-                    F.sum("value").alias("t"),
-                    F.max("value").alias("m"),
-                )
-                .collect()
-            }
-            assert got == expect
-        finally:
-            if old is not None:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    def test_processor_logic_batch_twin_without_state_server(self, spark, sf_dir):
-        """Evidence for the protobuf-gated skip above: drive
-        RunningStatsProcessor's handleInputRows directly through a fake
-        typed-state harness (the part the state server would provide),
-        feeding each key's rows as a 3-micro-batch sequence, and demand
-        the final emission equals the batch aggregate AND the
-        runtime-tested GroupState twin's semantics (count ignores
-        nulls; max of none is null). Everything but the wire protocol
-        runs for real."""
-        import pandas as pd
-
-        from e2e_stock_data_pipeline_spark.streaming.stateful import (
-            RunningStatsProcessor,
-        )
-
-        class FakeValueState:
-            def __init__(self):
-                self._v = None
-
-            def exists(self):
-                return self._v is not None
-
-            def get(self):
-                return self._v
-
-            def update(self, v):
-                self._v = tuple(v)
-
-        class FakeHandle:
-            def __init__(self):
-                self.states = {}
-
-            def getValueState(self, name, schema):
-                return self.states.setdefault(name, FakeValueState())
-
-        events = tables.load(spark, sf_dir, "events").limit(300)
-        rows = events.select("user_id", "value", "event_id").collect()
-        by_key: dict = {}
-        for r in rows:
-            by_key.setdefault(r.user_id, []).append((r.event_id, r.value))
-
-        got = {}
-        for uid, kv in by_key.items():
-            proc = RunningStatsProcessor()
-            proc.init(FakeHandle())
-            vals = [v for _, v in sorted(kv)]
-            # three micro-batches per key, the middle one possibly empty —
-            # the state hand-off across handleInputRows calls is the point
-            chunks = [vals[0::3], vals[1::3], vals[2::3]]
-            last = None
-            for chunk in chunks:
-                out = list(
-                    proc.handleInputRows(
-                        (uid,), [pd.DataFrame({"value": chunk})], None
-                    )
-                )
-                assert len(out) == 1
-                last = out[0]
-            proc.close()
-            got[uid] = (
-                int(last["n_events"].iloc[0]),
-                round(float(last["total_value"].iloc[0]), 6),
-                last["max_value"].iloc[0],
-            )
-
-        expect = {
-            r.user_id: (
-                r.n,
-                round(r.t, 6) if r.t is not None else None,
-                r.m,
-            )
-            for r in events.groupBy("user_id")
-            .agg(
-                F.count("value").alias("n"),
-                F.sum("value").alias("t"),
-                F.max("value").alias("m"),
-            )
-            .collect()
-        }
-        assert got == expect
-
-
-class TestStateStoreKnob:
-    """r14: the RocksDB provider is one config knob away (VERDICT item 5).
-
-    The r13 experiment proved RocksDB throughput-neutral with 4.3x
-    smaller resident state; session.get_spark / configure_existing now
-    expose it via state_store="rocksdb" or SPARK_GRAFT_STATE_STORE.
-    The full streaming suite runs green under both providers
-    (BENCH_NOTES r14 records the paired runs)."""
-
-    ROCKS = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    KEY = "spark.sql.streaming.stateStore.providerClass"
-
-    def test_param_flips_provider_on_session(self, spark):
-        from e2e_stock_data_pipeline_spark.session import get_spark
-
-        old = spark.conf.get(self.KEY, None)
-        try:
-            s = get_spark(master="local[8]", shuffle_partitions=8,
-                          state_store="rocksdb")
-            assert s is spark  # getOrCreate reuses the test session
-            assert s.conf.get(self.KEY) == self.ROCKS
-        finally:
-            if old is None:
-                spark.conf.unset(self.KEY)
-            else:
-                spark.conf.set(self.KEY, old)
-
-    def test_env_var_flips_provider_via_configure_existing(self, spark, monkeypatch):
-        from e2e_stock_data_pipeline_spark.session import configure_existing
-
-        monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
-        old = spark.conf.get(self.KEY, None)
-        try:
-            configure_existing(spark)
-            assert spark.conf.get(self.KEY) == self.ROCKS
-        finally:
-            if old is None:
-                spark.conf.unset(self.KEY)
-            else:
-                spark.conf.set(self.KEY, old)
-
-    def test_unknown_provider_rejected(self):
-        import pytest as _pytest
-
-        from e2e_stock_data_pipeline_spark.session import _state_store_conf
-
-        with _pytest.raises(ValueError):
-            _state_store_conf("leveldb")
-
-    def test_default_is_sparks_builtin(self, monkeypatch):
-        from e2e_stock_data_pipeline_spark.session import _state_store_conf
-
-        monkeypatch.delenv("SPARK_GRAFT_STATE_STORE", raising=False)
-        assert _state_store_conf(None) is None
