@@ -45,116 +45,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # silent regression in any query surfaces within one rotation cycle.
 _DEFAULT_COST = 0.5  # queries added after the last cost sweep run early
 
-# Queries whose implementation changed AFTER their last green driver row
-# (name -> round the change landed). A green row that predates the change
-# evidences code that no longer runs, so while last_green < changed_round
-# the query sorts immediately after the never-seen group; once it
-# re-earns a green row the entry is inert (self-cleaning — safe to leave
-# in place, but prune when obviously ancient).
-_CHANGED_IN_ROUND = {
-    # (r16 entries pruned: all 9 r16-changed queries re-earned green
-    # driver rows in CORRECTNESS_r16 — 50/50 with the changed set
-    # front-loaded — so those entries went inert.)
-    # r17 ADVICE fixes (r16 low items). Banded bucket encoding aligned
-    # MSB->LSB to match embed_banded_sql's pow(2,s) — partition-
-    # bijective so pair outputs are value-identical, but the plan
-    # changed:
-    "q130_incremental_embed_neardup": 17,
-    "q50b_neardup_lsh_blocked": 17,
-    "q87_multisignal_neardup": 17,
-    # r17 NULL-safe COUNT(DISTINCT) split + left-join re-shape (plan
-    # only; same values on NULL-free generators):
-    "q37_approx_distinct": 17,
-    # (r17 pagerank broadcast re-gate: q144, superseded by its r18
-    # entry below)
-    # r17 q184 redesign (VERDICT item 1): hoisted parse, single
-    # checkpointed token pass, integer rarity ranks downstream —
-    # output bijection-identical, sf10 110.8 -> 51.5 s:
-    "q184_set_similarity_join": 17,
-    # r17 IVF probe ring widened to cells DIV 2 (VERDICT item 2):
-    # output CHANGES at every density (more probed cells can only add
-    # true neighbors); oracle mirrors via the shared IVF_PROBE_DIV
-    # (q128, superseded by its r18 entry below)
-    # r17 PQ codebook 16 -> 32 seeds (family recall floor; knob sweep
-    # in queries_ext6.py): output changes at every sf, oracle mirrors:
-    "q123_pq_rerank": 17,
-    # r17 q109 median via bounded-domain value histogram (3-partition
-    # window sort removed; values identical, sf10 33.1 -> 1.3 s):
-    "q109_exact_group_median": 17,
-    # r17 q04: lineitem pre-aggregated to max(l_shipdate) per orderkey
-    # before a merge-hinted semi join (was: 60M-row static broadcast;
-    # sf10 32.2 -> 2.1 s, values identical):
-    "q04_order_priority": 17,
-    # r17 q77: EXISTS/NOT-EXISTS pair collapsed to per-order supplier
-    # counts sharing one exchange (sf10 24.3 -> 12.5 s, identical):
-    "q77_sole_late_supplier": 17,
-    # r17 q60: scoring leg moved from full-explode distinct+join to
-    # per-doc array_intersect vs the nested dimension-sized profile
-    # (sf10 26.5 -> 16.7 s, identical):
-    "q60_char_ngram_langid": 17,
-    # r17 combination expansions: slice()-lambda pair/triple generation
-    # replaced by index sequences + element_at (same i<j(<k) sets,
-    # ~5x less expansion CPU). q175 direct; q138 via order_part_pairs;
-    # the graph tier via copurchase_edges_plan's in-operator copy:
-    "q175_frequent_triples": 17,
-    "q138_copurchase_pairs": 17,
-    "q170_triangle_census": 17,
-    "q193_bfs_hops": 17,
-    "q194_kcore_peel": 17,
-    # r17 q187: per-round rescan of the data-sized pair frame replaced
-    # by one collect_set aggregation + dimension-sized array_except
-    # rounds (sf10 40.4 -> 24.6 s; q144 also re-keyed above):
-    "q187_greedy_coverage": 17,
-    # r17 resumed session: q07 anti-join build side bounded by a
-    # distinct key set (plan only, identity values):
-    "q07_parts_never_ordered": 17,
-    # (r17 cluster-fixpoint session memo: q56/q105/q153/q158,
-    # superseded by their r18 entries below)
-    # r17 simhash 16-sums-in-one-aggregate (bit-identical values):
-    "q43_simhash": 17,
-    # r17 q90 split hoisted out of the bigram lambda (identical):
-    "q90_repetition_stats": 17,
-    # r17 q145 distinct counts split out of the mixed aggregate
-    # (identical values, Expand removed):
-    "q145_table_profile": 17,
-    # r17 q44b sliding min moved to array land (identical
-    # fingerprints, window exchange+sort removed):
-    "q44b_winnowing_fingerprints": 17,
-    # r17 third session: exploded-shingle Jaccard verify moved to
-    # array land (shingle_sets + in-row array_intersect, merge-hinted
-    # against the static corpus-sized broadcast) in q86/q126, and
-    # q155 additionally counts signature matches on wide sketch rows
-    # (identical values; sf10 29.5->14.8 / 16.2->12.5 / 30.5->14.9 s):
-    "q86_neardup_pipeline": 17,
-    "q126_incremental_dedup": 17,
-    "q155_minhash_calibration": 17,
-    # r17 third session: non-nullable fences on the banded bucket fold
-    # and the quantized norm (values identical — the coalesce sentinel
-    # can never fire; kills the constraint-inferred isnotnull(<fold>)
-    # recompute). Every with_quantized_norm / banded-bucket consumer's
-    # plan changed: q50b/q87/q130 above, plus
-    "q48_knn_bruteforce": 17,
-    "q50_cosine_neardup_pairs": 17,
-    "q148_rrf_hybrid_search": 17,
-    # r18 rewrites, none of them in CORRECTNESS_r18: q99's posting-list
-    # pass (now also exact on duplicate doc_id rows); nullability fences
-    # on q124/q127/q129/q134; q128's numpy mapInArrow IVF assignment;
-    # q144's one-Generate symmetric edges with int-narrowed ids.
-    "q99_contamination_check": 18,
-    "q124_late_quarantine_audit": 18,
-    "q127_temperature_mixture": 18,
-    "q128_ivf_rerank": 18,
-    "q129_source_lang_cap": 18,
-    "q134_token_budget_mixture": 18,
-    "q144_pagerank_copurchase": 18,
-    # after r18: connected components and pagerank finish graphs of at
-    # most LOCAL_FINISH_ROWS edges in numpy on the driver (same values;
-    # the cluster memo's build and q144's rounds changed):
-    "q56_dedup_clusters": 18,
-    "q105_cluster_size_histogram": 18,
-    "q153_cluster_split": 18,
-    "q158_cluster_canonicals": 18,
-}
+
+def _changed_rounds() -> dict[str, int]:
+    """Round in which each query's plan fingerprint last changed, from
+    the plan-shape ledger ``plans/shapes.json`` (regenerated by
+    ``scripts/plan_shapes.py --write``). A green row older than that
+    round evidences code that no longer runs, so while last_green <
+    changed_round the query sorts right after the never-seen group; a
+    fresh green row makes the stamp inert."""
+    try:
+        raw = json.loads((_REPO / "plans" / "shapes.json").read_text())
+    except (OSError, ValueError):
+        return {}
+    return {name: line["changed_round"] for name, line in raw.items()}
 
 
 def _last_green_round() -> dict[str, int]:
@@ -190,23 +93,17 @@ def _last_green_round() -> dict[str, int]:
 
 
 def _costs() -> dict[str, float]:
-    """Per-query cost in seconds. Accepts both shapes query_costs.json has
-    carried: flat {name: sec} and the rich per-query dict that
-    scripts/sweep.py --json writes ({"total_s": ..., "spark_s": ...}) —
-    a dict-valued entry must never break queries() ordering (it did
-    once: dicts don't compare)."""
+    """Per-query cost in seconds, from the per-query records that
+    scripts/sweep.py --json writes ({"total_s": ..., "spark_s": ...})."""
     try:
         raw = json.loads((_REPO / "scripts" / "query_costs.json").read_text())
     except (OSError, ValueError):
         return {}
     out: dict[str, float] = {}
     for name, v in raw.items():
-        if isinstance(v, (int, float)):
-            out[name] = float(v)
-        elif isinstance(v, dict):
-            sec = v.get("total_s", v.get("spark_s"))
-            if isinstance(sec, (int, float)):
-                out[name] = float(sec)
+        sec = v.get("total_s", v.get("spark_s"))
+        if isinstance(sec, (int, float)):
+            out[name] = float(sec)
     return out
 
 
@@ -233,7 +130,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         run.__name__ = spec.name
         return run
 
-    last, cost = _last_green_round(), _costs()
+    last, cost, changed = _last_green_round(), _costs(), _changed_rounds()
 
     # never-seen (round 0) first, cheapest-first within the group; then
     # changed-since-green queries (their existing row evidences code that
@@ -241,7 +138,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # first) so the capped run rotates freshness through the registry
     def rank(n: str) -> float:
         lg = last.get(n, 0)
-        if lg and lg < _CHANGED_IN_ROUND.get(n, 0):
+        if lg and lg < changed.get(n, 0):
             return 0.5  # after never-seen, before every stale cohort
         return lg
 

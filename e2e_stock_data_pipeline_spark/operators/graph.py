@@ -5,8 +5,8 @@ materialized operator — the lazy 3-round unroll (still present in
 plans/queries_ext8.pagerank_plan) is the oracle-form twin, kept because
 the DuckDB oracle can replay it and because it pins bit-equality with
 this loop (same integer recursion, same constants; see
-tests/test_operators.py). The lazy form's price (visible in PLANS.md
-history) was that Catalyst re-executed the edge-construction subtree
+tests/test_operators.py). The lazy form's price (visible in the plan
+listings of that era) was that Catalyst re-executed the edge-construction subtree
 every round — 66 exchanges for 3 rounds — and its overlapping per-round
 hash aggs died under sf10 session memory pressure. This operator is
 built on the same pattern as dedup.connected_components: materialize

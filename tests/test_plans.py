@@ -1,10 +1,16 @@
 """Physical-plan assertions — the scale claims as executable checks:
 filters/pruning reach the parquet scan, fixed-size dims broadcast, the
-shared-window queries use ONE shuffle, and no query falls back to
-row-at-a-time Python UDFs.
+shared-window queries use ONE shuffle, and every registered plan
+matches its line in the plan-shape ledger (plans/shapes.json), whose
+lints keep row-at-a-time Python UDFs out of every plan.
 """
 
 from __future__ import annotations
+
+import json
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -45,14 +51,34 @@ def test_gold_windows_share_one_shuffle(spark, sf_dir):
     assert plan.count("Exchange (") == 1
 
 
+@pytest.fixture(scope="module")
+def plan_shapes_run(sf_dir):
+    """stdout of ``scripts/plan_shapes.py <sf_dir>``, run once in its own
+    process as a reviewer runs it. A plan built in this session would not
+    do: the numbering of its expression ids depends on what ran before,
+    and q117's distinct-aggregate Expand orders its groups by their hash."""
+    script = Path(__file__).resolve().parents[1] / "scripts" / "plan_shapes.py"
+    run = subprocess.run(
+        [sys.executable, str(script), str(sf_dir)], capture_output=True, text=True, timeout=900
+    )
+    assert '"queries": ' in run.stdout, run.stderr[-3000:]
+    return run
+
+
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_no_python_row_udfs(spark, sf_dir, name):
-    spec = REGISTRY[name]
-    if name in ("q56_dedup_clusters", "q105_cluster_size_histogram"):
-        pytest.skip("iterative operator; plan materializes per round")
-    df = spec.spark(spark, spec.pinned_sf_dir or sf_dir)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
+def test_no_python_row_udfs(plan_shapes_run, name):
+    assert f"{name}: Python row UDF" not in plan_shapes_run.stdout
+
+
+def test_plan_shapes_match_the_ledger(plan_shapes_run):
+    """Every registered plan against plans/shapes.json (fingerprint and
+    counts, and every registered name and no other), with no Arrow/pandas
+    node or generate-under-broadcast site outside its allowlist in
+    scripts/plan_shapes.py. At an sf other than the ledger's only the
+    lints run."""
+    summary = json.loads(plan_shapes_run.stdout.splitlines()[-1])
+    assert summary["queries"] == len(REGISTRY)
+    assert plan_shapes_run.returncode == 0, plan_shapes_run.stdout
 
 
 class TestHeavyTierPlanContracts:
